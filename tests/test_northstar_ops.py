@@ -1144,6 +1144,19 @@ class TestParquetMergeTable:
         v1 = {r["k"]: r["price"] for r in tbl.read(version=1).collect()}
         assert v1[3] == 30.0 and 5 in v1 and 2000 not in v1
 
+    def test_validation_raises_real_exceptions(self, spark, tmp_path):
+        """Validation must survive ``python -O``: a merge whose source
+        schema differs from the table's raises ValueError, and create()
+        over an existing table raises FileExistsError."""
+        tbl, base = self._make(spark, tmp_path)
+        with pytest.raises(ValueError, match="schemas must align"):
+            tbl.merge(
+                spark.createDataFrame([(3, "x")], "k long, price string"), key="k"
+            )
+        with pytest.raises(FileExistsError):
+            tbl.create(base)
+        assert tbl.latest_version() == 1
+
     def test_merge_rewrites_only_touched_files(self, spark, tmp_path):
         tbl, _ = self._make(spark, tmp_path)
         m1 = set(tbl._read_manifest(1)["files"])

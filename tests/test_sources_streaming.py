@@ -1138,6 +1138,152 @@ class TestStreamingIngestDedup:
         assert admitted == {1, 3, 12}
 
 
+def _plant_first_commit_crash(table_path: str) -> None:
+    """Leave what a crash between creating ``_manifests/`` and renaming
+    ``v1.json`` into place leaves: the directory with only the
+    temporary manifest."""
+    d = os.path.join(table_path, "_manifests")
+    os.makedirs(d)
+    with open(os.path.join(d, ".v1.json.tmp"), "w") as fh:
+        fh.write('{"version": 1, "fi')
+
+
+def _rows(df, *cols) -> list[tuple]:
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+class TestFirstCommitCrashRestart:
+    """A crash inside a state table's FIRST commit must not wedge the
+    stream: the restarted batch sees no table (``latest_version() ==
+    0``), creates it, and ends exactly where a clean run ends."""
+
+    TEXTS = [
+        (0, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+        (1, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+        (2, "one two three four five six seven eight nine ten eleven"),
+    ]
+
+    def test_dedup_replay(self, spark, tmp_path):
+        from textract_farmdata_pipeline_spark.streaming import replay_ingest_batches
+
+        docs = spark.createDataFrame(self.TEXTS, "doc_id long, text string")
+        clean = _rows(
+            replay_ingest_batches(
+                docs, str(tmp_path / "clean"), k_batches=1, threshold=1.0
+            ),
+            "doc_id",
+            "text",
+        )
+        _plant_first_commit_crash(str(tmp_path / "crashed" / "corpus"))
+        got = _rows(
+            replay_ingest_batches(
+                docs, str(tmp_path / "crashed"), k_batches=1, threshold=1.0
+            ),
+            "doc_id",
+            "text",
+        )
+        assert got == clean and [d for d, _ in got] == [0, 2]
+
+    def test_dhash_bloom_and_url_handlers(self, spark, tmp_path):
+        from textract_farmdata_pipeline_spark.operators.merge import (
+            ParquetMergeTable,
+        )
+        from textract_farmdata_pipeline_spark.streaming.ingest import (
+            bloom_process_batch,
+            dhash_process_batch,
+            url_process_batch,
+        )
+
+        batch = spark.createDataFrame(self.TEXTS, "doc_id long, text string")
+        urls = spark.createDataFrame(
+            [(0, "http://a.example/x"), (1, "HTTP://A.example/x/"), (2, "http://b.example/")],
+            "doc_id long, url string",
+        )
+
+        def run(root: str, crashed: bool) -> dict:
+            tables = {
+                "dhash": os.path.join(root, "dhash"),
+                "admissions": os.path.join(root, "bloom", "admissions"),
+                "covered": os.path.join(root, "bloom", "covered"),
+                "words": os.path.join(root, "bloom", "words"),
+                "seen": os.path.join(root, "seen"),
+            }
+            if crashed:
+                for path in tables.values():
+                    _plant_first_commit_crash(path)
+            dhash_process_batch(tables["dhash"])(batch, 0)
+            bloom_process_batch(os.path.join(root, "bloom"), m_bits=1 << 12)(batch, 0)
+            url_process_batch(urls, 0, tables["seen"])
+            return {
+                name: _rows(ParquetMergeTable(spark, path).read(), "*")
+                for name, path in tables.items()
+            }
+
+        clean = run(str(tmp_path / "clean"), crashed=False)
+        assert run(str(tmp_path / "crashed"), crashed=True) == clean
+
+
+class TestIngestThresholdRestart:
+    """Restarting ``dedup_ingest_stream`` over a state table written at
+    another threshold: the stored table's schema decides whether rows
+    carry the sorted shingle key ``k``, so either direction runs and
+    admits exactly what a driver loop of ``incremental_minhash_dedup``
+    admits on the same batches."""
+
+    WORDS = [f"w{i}" for i in range(40)]
+
+    def _batches(self, spark):
+        base, other = " ".join(self.WORDS), " ".join(reversed(self.WORDS))
+        near = " ".join(self.WORDS[:-1] + ["changed"])  # 3-shingle Jaccard 0.95
+        first = [(0, base), (1, other)]
+        second = [(2, base), (3, near), (4, "a fresh text " * 5)]
+        schema = "doc_id long, text string"
+        return [spark.createDataFrame(b, schema) for b in (first, second)]
+
+    def _stream(self, spark, tmp_path, thresholds):
+        from textract_farmdata_pipeline_spark.operators.merge import (
+            ParquetMergeTable,
+        )
+        from textract_farmdata_pipeline_spark.streaming import dedup_ingest_stream
+        from textract_farmdata_pipeline_spark.streaming.ingest import drain_replay
+
+        corpus = str(tmp_path / "corpus")
+        for i, (batch, t) in enumerate(zip(self._batches(spark), thresholds)):
+            work = str(tmp_path / f"run{i}")
+            src = os.path.join(work, "incoming")
+            batch.coalesce(1).write.parquet(src)
+            drain_replay(
+                spark,
+                src,
+                "doc_id long, text string",
+                work,
+                lambda s, t=t: dedup_ingest_stream(s, corpus, threshold=t),
+            )
+        return ParquetMergeTable(spark, corpus).read()
+
+    def _driver_loop(self, spark, thresholds):
+        from textract_farmdata_pipeline_spark.operators.dedup import (
+            incremental_minhash_dedup,
+        )
+
+        corpus = spark.createDataFrame([], "doc_id long, text string")
+        for batch, t in zip(self._batches(spark), thresholds):
+            ann = incremental_minhash_dedup(corpus, batch, threshold=t)
+            novel = batch.join(ann.filter(F.col("dup_of").isNull()).select("doc_id"), "doc_id")
+            corpus = corpus.unionByName(novel).localCheckpoint()
+        return _rows(corpus, "doc_id", "text")
+
+    @pytest.mark.parametrize("thresholds", [(0.5, 1.0), (1.0, 0.5)])
+    def test_restart_at_other_threshold(self, spark, tmp_path, thresholds):
+        state = self._stream(spark, tmp_path, thresholds)
+        want = self._driver_loop(spark, thresholds)
+        assert _rows(state, "doc_id", "text") == want
+        # the near copy is what the two thresholds disagree on
+        assert (3 in {d for d, _ in want}) == (thresholds[1] == 1.0)
+        # the table keeps the layout its first commit chose
+        assert ("k" in state.columns) == (thresholds[0] == 1.0)
+
+
 class TestStreamingHll:
     def test_hll_stream_equals_batch(self, spark, tmp_path, sf_dir):
         """Max-merged register state after streaming all files must

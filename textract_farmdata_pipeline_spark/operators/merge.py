@@ -60,7 +60,10 @@ def _annotate_merge(
     instead of re-executing the join for every output (the changelog's
     four branches alone re-ran it 4×)."""
     cols = target.columns
-    assert cols == source.columns, "target/source schemas must align"
+    if cols != source.columns:
+        raise ValueError(
+            f"target/source schemas must align: {cols} != {source.columns}"
+        )
     data_cols = [c for c in cols if c != key]
 
     t = target.alias("t")
@@ -159,6 +162,13 @@ class ParquetMergeTable:
     Readers pin a manifest, so concurrent reads never see a partial
     commit; the manifest write is the atomic commit point (a rename on
     real object stores).
+
+    The table exists once that rename has happened for version 1
+    (``latest_version() > 0``).  :meth:`merge` and :meth:`upsert_or`
+    create it on their first commit, so a caller never probes the
+    layout: a crash inside the first commit leaves at most a temporary
+    manifest, which does not count, and the next commit simply creates
+    the table again.
     """
 
     def __init__(self, spark: SparkSession, path: str):
@@ -200,9 +210,16 @@ class ParquetMergeTable:
             if f.endswith(".parquet")
         ]
 
+    def _committed_version(self) -> int:
+        version = self.latest_version()
+        if version == 0:
+            raise FileNotFoundError(f"no committed table at {self.path}")
+        return version
+
     # -- public surface -------------------------------------------------------
     def create(self, df: DataFrame) -> int:
-        assert self.latest_version() == 0, "table already exists"
+        if self.latest_version() > 0:
+            raise FileExistsError(f"table already exists at {self.path}")
         files = self._new_data_files(df)
         # Fail fast if the writer produced zero part files (r13 ADVICE):
         # an empty manifest would make the next merge's read.parquet()
@@ -211,7 +228,8 @@ class ParquetMergeTable:
         # case every ingest handler relies on — so this only trips on a
         # 0-partition frame, which is a caller bug to surface, not state
         # to corrupt.
-        assert files, "create() wrote no parquet part files"
+        if not files:
+            raise RuntimeError("create() wrote no parquet part files")
         self._write_manifest(1, files)
         return 1
 
@@ -229,7 +247,8 @@ class ParquetMergeTable:
                 continue
             part = self.spark.read.parquet(d).withColumn("_commit_version", F.lit(v))
             out = part if out is None else out.unionByName(part)
-        assert out is not None, "no changes in range"
+        if out is None:
+            raise RuntimeError("no changes in range")
         return out
 
     def merge(
@@ -240,6 +259,10 @@ class ParquetMergeTable:
     ) -> int:
         """MERGE ``source`` in; rewrite only files containing matched
         keys.  Returns the new version number.
+
+        On an empty table the first merge is :meth:`create`: no
+        persist, no key probe, and an empty ``source`` still writes a
+        schema-only file, so the table exists from the first batch on.
 
         Merge keys must be NON-NULL on both sides (every caller keys on
         a generated id).  File pruning matches keys null-unsafely while
@@ -264,7 +287,8 @@ class ParquetMergeTable:
           changelog both derive from the cache.
         """
         version = self.latest_version()
-        assert version > 0, "create() first"
+        if version == 0:
+            return self.create(source)
         old_files = self._read_manifest(version)["files"]
 
         from pyspark import StorageLevel
@@ -289,9 +313,10 @@ class ParquetMergeTable:
                 (f.name, f.dataType.simpleString())
                 for f in source.schema.fields
             ]
-            assert t_fields == s_fields, (
-                f"target/source schemas must align: {t_fields} != {s_fields}"
-            )
+            if t_fields != s_fields:
+                raise ValueError(
+                    f"target/source schemas must align: {t_fields} != {s_fields}"
+                )
             keys = source.select(key).distinct()
             # File pruning: a file is "touched" iff it holds a matched key.
             # _metadata.file_path is a URI (file:///...); compare on the
@@ -377,16 +402,19 @@ class ParquetMergeTable:
         for the changelog.  No driver collect, no full-outer join over
         ``__t_*/__s_*`` doubled columns, no persist bookkeeping.
         Idempotent like the OR itself: re-applying a delta yields an
-        empty changelog and an identical snapshot.
+        empty changelog and an identical snapshot.  On an empty table
+        the first upsert is :meth:`create`, as in :meth:`merge`.
         """
         version = self.latest_version()
-        assert version > 0, "create() first"
+        if version == 0:
+            return self.create(delta)
         old_files = self._read_manifest(version)["files"]
         target = self.spark.read.parquet(*old_files)
         cols = target.columns
-        assert cols == delta.columns and set(cols) == {key, bits_col}, (
-            "upsert_or expects exactly (key, bits) columns on both sides"
-        )
+        if cols != delta.columns or set(cols) != {key, bits_col}:
+            raise ValueError(
+                "upsert_or expects exactly (key, bits) columns on both sides"
+            )
 
         delta = delta.persist()  # filter-sized: ≤ m_bits/32 rows
         try:
@@ -447,8 +475,7 @@ class ParquetMergeTable:
         Returns the new version (or the current one if there was
         nothing to compact).
         """
-        version = self.latest_version()
-        assert version > 0, "create() first"
+        version = self._committed_version()
         files = self._read_manifest(version)["files"]
         sized = [(f, os.path.getsize(f)) for f in files]
         keep = [f for f, sz in sized if sz >= target_file_bytes // 2]
@@ -493,8 +520,7 @@ class ParquetMergeTable:
 
         Returns the number of data files deleted.
         """
-        latest = self.latest_version()
-        assert latest > 0, "create() first"
+        latest = self._committed_version()
         retained = range(max(1, latest - retain_last + 1), latest + 1)
         referenced = set()
         for v in retained:

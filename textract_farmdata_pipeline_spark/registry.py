@@ -3559,7 +3559,6 @@ def embedding_ivf_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     i.e. the index you maintain online is the index you'd build
     offline."""
     import os
-    import shutil
     import tempfile
 
     from .operators.dedup import md5_long
@@ -3570,6 +3569,7 @@ def embedding_ivf_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         sq_train,
     )
     from .streaming import ivf_ingest_stream
+    from .streaming.ingest import drain_replay
 
     emb = _t(spark, sf_dir, "embeddings")
     bucket = F.pmod(md5_long(F.col("vec_id").cast("string"), "ingest|"), F.lit(5))
@@ -3582,26 +3582,18 @@ def embedding_ivf_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_before"))
     )
     workdir = tempfile.mkdtemp(prefix="ivf_replay_")
-    try:
-        src = os.path.join(workdir, "incoming")
-        batch.repartition(4).write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema(batch.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        writer, state = ivf_ingest_stream(stream, mins, maxs, anchors)
-        q = (
-            writer.option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        # state is driver-side; nothing downstream reads the replay files
-        shutil.rmtree(workdir, ignore_errors=True)
+    src = os.path.join(workdir, "incoming")
+    batch.repartition(4).write.mode("overwrite").parquet(src)
+    state = {}
+
+    def start(stream):
+        writer, cells = ivf_ingest_stream(stream, mins, maxs, anchors)
+        state["cells"] = cells  # driver-side; filled as the drain runs
+        return writer
+
+    drain_replay(spark, src, batch.schema, workdir, start)
     added = spark.createDataFrame(
-        sorted(state.items()), "cell int, n_added long"
+        sorted(state["cells"].items()), "cell int, n_added long"
     )
     return ivf_growth_report(before, added, k_coarse=16)
 
@@ -9644,38 +9636,27 @@ def events_hll_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     CMS twin merges additively and needs replay guards; this one gets
     exactly-once for free)."""
     import os
-    import shutil
     import tempfile
 
     from .streaming import hll_stream
+    from .streaming.ingest import drain_replay
 
     ev = _t(spark, sf_dir, "events").select("user_id")
     workdir = tempfile.mkdtemp(prefix="hll_replay_")
-    try:
-        src = os.path.join(workdir, "incoming")
-        ev.repartition(4).write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        writer, state = hll_stream(stream, "user_id", m=_HLL_M)
-        q = (
-            writer.option(
-                "checkpointLocation", os.path.join(workdir, "ckpt")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        # the state dict is driver-side; nothing downstream reads the
-        # replay files — safe to remove immediately.
-        shutil.rmtree(workdir, ignore_errors=True)
+    src = os.path.join(workdir, "incoming")
+    ev.repartition(4).write.mode("overwrite").parquet(src)
+    state = {}
+
+    def start(stream):
+        writer, registers = hll_stream(stream, "user_id", m=_HLL_M)
+        state["registers"] = registers  # driver-side; filled as the drain runs
+        return writer
+
+    drain_replay(spark, src, ev.schema, workdir, start)
     from .operators.approx import hll_estimate
 
     regs = spark.createDataFrame(
-        sorted(state.items()), "register long, max_rho long"
+        sorted(state["registers"].items()), "register long, max_rho long"
     )
     n_exact = ev.distinct().count()
     # the estimator is operators.approx.hll_estimate VERBATIM (one

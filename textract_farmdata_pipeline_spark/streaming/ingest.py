@@ -1,127 +1,99 @@
-"""Streaming ingestion dedup: admit only novel documents, continuously.
+"""Streaming ingest: ten families on one per-batch path and one replay
+harness.
 
-The daily crawl-pipeline shape, streamed: each micro-batch is deduped
-against the ACCUMULATED admitted corpus with
-:func:`..operators.dedup.incremental_minhash_dedup` (corpus never
-self-joins; both sides exact-collapse before LSH), and the batch's
-novel documents are committed to the corpus before the next batch runs.
+Every family here is the paper's event-driven backfill shape, one
+micro-batch per trigger: read the accumulated state, decide, write the
+result.  The families differ only in the decision — near-dup admission
+(MinHash, dHash, audio and video signatures, a Bloom filter, canonical
+URLs), leakage-safe split assignment, DSIR scoring, decontamination,
+the boilerplate line census and quality-aware canonical selection.
 
-The corpus lives in a :class:`..operators.merge.ParquetMergeTable` and
-each batch commits via keyed MERGE — so a micro-batch REPLAYED after a
-failure re-upserts the same rows instead of duplicating them
-(foreachBatch is at-least-once; the keyed merge is what makes the
-pipeline effectively exactly-once).  Micro-batch boundaries are the
-consistency points: batch N+1 sees exactly the corpus as of batch N.
+The shared per-batch path (:func:`_read_state`, :func:`_commit_batch`):
+
+1. read the committed state table, or a typed empty frame before the
+   first commit;
+2. decide (the family's own code);
+3. persist the decision, commit it to a keyed
+   :class:`..operators.merge.ParquetMergeTable`, hand it to the
+   optional ``sink(decision, batch_id)``, unpersist.
+
+The table owns its existence rule: ``merge`` and ``upsert_or`` create
+the table on its first commit, so no handler probes the on-disk layout
+and a crash inside the first commit restarts cleanly.  ``foreachBatch``
+is at-least-once; the keyed MERGE makes a batch replayed after a
+failure re-upsert the same rows instead of duplicating them, so the
+pipeline is effectively exactly-once.  Micro-batch boundaries are the
+consistency points: batch N+1 sees exactly the state as of batch N.
+
+The shared replay harness (:func:`_replay`, :func:`drain_replay`)
+stages an input as K deterministic batch files and drains them one per
+trigger, oldest first, under ``availableNow``.  Every ``replay_*``
+function is that harness around one family's ``*_ingest_stream`` and
+returns a lazy read of the final state — the batch-queryable face of
+the stream that the registry hash-checks against a DuckDB oracle.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.merge import ParquetMergeTable
 
-def dedup_ingest_stream(
-    docs: DataFrame,
-    corpus_path: str,
-    n_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.5,
-    shingle_n: int = 3,
-    sink=None,
-):
-    """Returns a ``DataStreamWriter`` whose ``foreachBatch``:
+_TEXT = "doc_id long, text string"
 
-    1. reads the admitted corpus (empty on the first batch),
-    2. annotates the incoming batch with ``dup_of`` (smallest matching
-       corpus doc, else smallest matching earlier batch doc, else NULL),
-    3. MERGEs the novel rows (``dup_of IS NULL``) into the corpus table,
-    4. calls ``sink(annotated_df, batch_id)`` with the (persisted)
-       annotation DataFrame for observability / a rejects table.
 
-    Start it with ``trigger(availableNow=True)`` in tests; the
-    stream-equals-batch test pins that streaming admission in K batches
-    equals one batch :func:`incremental_minhash_dedup` pass per batch
-    prefix.
-    """
-    from ..operators.dedup import incremental_minhash_dedup, sorted_shingle_key
-    from ..operators.merge import ParquetMergeTable
+def _read_state(table: ParquetMergeTable, empty: str) -> DataFrame:
+    """The table's committed state, or an empty frame of schema
+    ``empty`` before its first commit."""
+    if table.latest_version() > 0:
+        return table.read()
+    return table.spark.createDataFrame([], empty)
 
-    # At threshold == 1.0 (the exact-set fast path) the corpus state
-    # table additionally stores each admitted row's sorted shingle-set
-    # key, so the per-batch match READS keys instead of re-tokenizing
-    # the accumulated corpus every micro-batch — the O(corpus)/batch
-    # re-shingle was the streaming path's real scale cost (r13 verdict
-    # #4).  One definition (sorted_shingle_key) computes the stored key
-    # and the match-side key, so they can never drift; the replay's
-    # returned projection hides the column.
-    exact = threshold == 1.0
-    key_expr = (
-        sorted_shingle_key(F.col("text"), shingle_n, "xxhash64")
-        if exact
-        else None
-    )
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        table = ParquetMergeTable(spark, corpus_path)
-        corpus_keys = None
-        if os.path.isdir(os.path.join(corpus_path, "_manifests")):
-            state = table.read()
-            corpus = state.select("doc_id", "text")
-            if exact:
-                corpus_keys = state.select("doc_id", "k")
-            exists = True
-        else:
-            corpus = spark.createDataFrame([], "doc_id long, text string")
-            exists = False
-        ann = incremental_minhash_dedup(
-            corpus,
-            batch_df.select("doc_id", "text"),
-            n_hashes=n_hashes,
-            bands=bands,
-            threshold=threshold,
-            shingle_n=shingle_n,
-            corpus_keys=corpus_keys,
-        ).persist()  # consumed twice (admission join + sink); batch-sized
-        try:
-            novel = batch_df.select("doc_id", "text").join(
-                ann.filter(F.col("dup_of").isNull()).select("doc_id"), "doc_id"
-            )
-            if exact:
-                novel = novel.withColumn("k", key_expr)
-            if exists:
-                table.merge(novel, key="doc_id")
-            else:
-                # create unconditionally on the first batch (an empty
-                # frame writes a schema-only parquet file) - the
-                # decontam-stream precedent; skips a per-replay isEmpty job
-                table.create(novel)
-            if sink is not None:
-                sink(ann, batch_id)
-        finally:
-            ann.unpersist()
+def _commit_batch(decided: DataFrame, commit, sink, batch_id: int) -> None:
+    """Persist a batch's decision, ``commit(decided)`` it to state, hand
+    it to ``sink``, unpersist.  The decision is batch-sized and read by
+    both the commit and the sink, so it is computed once."""
+    decided = decided.persist()
+    try:
+        commit(decided)
+        if sink is not None:
+            sink(decided, batch_id)
+    finally:
+        decided.unpersist()
 
-    return docs.writeStream.foreachBatch(process)
+
+def _shingle_keys(table: ParquetMergeTable, state: DataFrame, threshold: float, key_expr):
+    """The stored sorted shingle-set key ``k`` (threshold-1.0 exact-set
+    path): the per-batch match reads stored keys instead of
+    re-tokenizing the accumulated state every micro-batch.  The stored
+    table's schema decides: rows carry ``k`` when the table has it, and
+    a new table gets it only at threshold 1.0, so a restart at another
+    threshold keeps the table's layout.  Returns ``(corpus_keys for the
+    match or None, row transform for the commit)``."""
+    stored = "k" in state.columns
+    keys = state.select("doc_id", "k") if stored and threshold == 1.0 else None
+    if stored or (threshold == 1.0 and table.latest_version() == 0):
+        return keys, lambda rows: rows.withColumn("k", key_expr)
+    return keys, lambda rows: rows
 
 
 def _stage_batch_files(
-    docs: DataFrame,
-    workdir: str,
-    k_batches: int,
-    cols: tuple[str, ...] = ("doc_id", "text"),
+    docs: DataFrame, workdir: str, k_batches: int, cols: tuple[str, ...]
 ) -> str:
     """Lay out ``k_batches`` deterministic micro-batch parquet files
     (``doc_id % k``, strictly increasing mtimes) so a file-stream
     source under ``maxFilesPerTrigger=1`` + ``availableNow`` delivers
-    exactly one batch per trigger, oldest first — the replay harness
-    shared by every streaming-ingest twin.  The batches are written BY
-    SPARK in one partitionBy pass (the harness must not funnel the
-    corpus through the driver); only rename/mtime bookkeeping is
-    driver-side."""
+    exactly one batch per trigger, oldest first.  The batches are
+    written BY SPARK in one partitionBy pass (the harness must not
+    funnel the corpus through the driver); only rename/mtime
+    bookkeeping is driver-side."""
     import glob
-    import shutil
     import time
 
     src = os.path.join(workdir, "incoming")
@@ -166,6 +138,95 @@ def _stage_batch_files(
     return src
 
 
+def drain_replay(spark, src: str, schema, workdir: str, start) -> None:
+    """The replay harness: drain the batch files under ``src`` (read
+    with ``schema``) through the ``foreachBatch`` writer
+    ``start(stream)`` returns — one file per trigger, oldest first,
+    under ``availableNow`` — and wait for it.
+
+    Then reclaim the bulky replay state (batch files + stream
+    checkpoint) at once and remove ``workdir`` at interpreter exit.
+    Callers return a LAZY read of their state table: an eager
+    localCheckpoint would pin a state-sized block per invocation with
+    no release point (the caller owns the frame), exactly the
+    orphan-block pressure the checkpoints module exists to avoid."""
+    ckpt = os.path.join(workdir, "ckpt")
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("latestFirst", "false")
+        .parquet(src)
+    )
+    try:
+        start(stream).option("checkpointLocation", ckpt).trigger(
+            availableNow=True
+        ).start().awaitTermination()
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
+        atexit.register(shutil.rmtree, workdir, ignore_errors=True)
+
+
+def _replay(docs: DataFrame, workdir: str, k_batches: int, start, schema: str = _TEXT) -> None:
+    """Stage ``docs`` (the ``schema`` columns) into ``k_batches``
+    deterministic batch files by ``doc_id % k`` and drain them through
+    ``start(stream)`` with :func:`drain_replay`."""
+    cols = tuple(c.split()[0] for c in schema.split(","))
+    src = _stage_batch_files(docs, workdir, k_batches, cols)
+    drain_replay(docs.sparkSession, src, schema, workdir, start)
+
+
+def dedup_ingest_stream(
+    docs: DataFrame,
+    corpus_path: str,
+    n_hashes: int = 32,
+    bands: int = 8,
+    threshold: float = 0.5,
+    shingle_n: int = 3,
+    sink=None,
+):
+    """Returns a ``DataStreamWriter`` whose ``foreachBatch``:
+
+    1. reads the admitted corpus (empty on the first batch),
+    2. annotates the incoming batch with ``dup_of`` (smallest matching
+       corpus doc, else smallest matching earlier batch doc, else NULL),
+    3. MERGEs the novel rows (``dup_of IS NULL``) into the corpus table,
+    4. calls ``sink(annotated_df, batch_id)`` with the (persisted)
+       annotation DataFrame for observability / a rejects table.
+
+    Start it with ``trigger(availableNow=True)`` in tests; the
+    stream-equals-batch test pins that streaming admission in K batches
+    equals one batch :func:`incremental_minhash_dedup` pass per batch
+    prefix.
+    """
+    from ..operators.dedup import incremental_minhash_dedup, sorted_shingle_key
+
+    key_expr = sorted_shingle_key(F.col("text"), shingle_n, "xxhash64")
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        table = ParquetMergeTable(batch_df.sparkSession, corpus_path)
+        state = _read_state(table, _TEXT)
+        corpus_keys, with_k = _shingle_keys(table, state, threshold, key_expr)
+        batch = batch_df.select("doc_id", "text")
+        ann = incremental_minhash_dedup(
+            state.select("doc_id", "text"),
+            batch,
+            n_hashes=n_hashes,
+            bands=bands,
+            threshold=threshold,
+            shingle_n=shingle_n,
+            corpus_keys=corpus_keys,
+        )
+
+        def commit(ann: DataFrame) -> None:
+            novel = ann.filter(F.col("dup_of").isNull()).select("doc_id")
+            table.merge(with_k(batch.join(novel, "doc_id")), key="doc_id")
+
+        _commit_batch(ann, commit, sink, batch_id)
+
+    return docs.writeStream.foreachBatch(process)
+
+
 def replay_ingest_batches(
     docs: DataFrame,
     workdir: str,
@@ -192,46 +253,18 @@ def replay_ingest_batches(
     exact-shingle-set matches count) is expressible as plain SQL over
     the input, giving the streaming path a DuckDB-checkable oracle.
     """
-    src = _stage_batch_files(docs, workdir, k_batches)
     corpus_path = os.path.join(workdir, "corpus")
-    spark = docs.sparkSession
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(src)
+    _replay(
+        docs,
+        workdir,
+        k_batches,
+        lambda s: dedup_ingest_stream(
+            s, corpus_path, n_hashes, bands, threshold, shingle_n
+        ),
     )
-    writer = dedup_ingest_stream(
-        stream,
-        corpus_path,
-        n_hashes=n_hashes,
-        bands=bands,
-        threshold=threshold,
-        shingle_n=shingle_n,
+    return ParquetMergeTable(docs.sparkSession, corpus_path).read().select(
+        "doc_id", "text"
     )
-    q = (
-        writer.option("checkpointLocation", os.path.join(workdir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    import atexit
-    import shutil
-
-    from ..operators.merge import ParquetMergeTable
-
-    # Reclaim the bulky replay state (batch files + stream checkpoint)
-    # immediately; keep only the admitted-corpus table and return a
-    # LAZY read over it — an eager localCheckpoint here would pin an
-    # admitted-corpus-sized block per invocation with no release point
-    # (the caller owns the frame), exactly the orphan-block pressure
-    # the checkpoints module exists to avoid.  The corpus dir itself
-    # is removed at interpreter exit, so repeated bench/probe runs
-    # accumulate nothing across sessions.
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(os.path.join(workdir, "ckpt"), ignore_errors=True)
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
-    return ParquetMergeTable(spark, corpus_path).read().select("doc_id", "text")
 
 
 def split_ingest_stream(
@@ -257,58 +290,30 @@ def split_ingest_stream(
     every cluster resolves 'fresh' — which is exactly the one-shot
     split, so the stream needs no separate bootstrap path."""
     from ..operators.dedup import incremental_split_batch, sorted_shingle_key
-    from ..operators.merge import ParquetMergeTable
 
-    # Same stored-key scheme as dedup_ingest_stream: at threshold ==
-    # 1.0 the state table carries each row's sorted shingle-set key so
-    # the per-batch exact-set match reads keys instead of re-shingling
-    # the accumulated state (r13 verdict #4).
-    exact = threshold == 1.0
-    key_expr = (
-        sorted_shingle_key(F.col("text"), shingle_n, hash_family)
-        if exact
-        else None
-    )
+    key_expr = sorted_shingle_key(F.col("text"), shingle_n, hash_family)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        table = ParquetMergeTable(spark, state_path)
-        corpus_keys = None
-        if os.path.isdir(os.path.join(state_path, "_manifests")):
-            stored = table.read()
-            state = stored.select("doc_id", "text", "split")
-            if exact:
-                corpus_keys = stored.select("doc_id", "k")
-            exists = True
-        else:
-            state = spark.createDataFrame(
-                [], "doc_id long, text string, split string"
-            )
-            exists = False
+        table = ParquetMergeTable(batch_df.sparkSession, state_path)
+        state = _read_state(table, _TEXT + ", split string")
+        corpus_keys, with_k = _shingle_keys(table, state, threshold, key_expr)
+        batch = batch_df.select("doc_id", "text")
         ann = incremental_split_batch(
-            state,
-            batch_df.select("doc_id", "text"),
+            state.select("doc_id", "text", "split"),
+            batch,
             n_hashes=n_hashes,
             bands=bands,
             threshold=threshold,
             shingle_n=shingle_n,
             hash_family=hash_family,
             corpus_keys=corpus_keys,
-        ).persist()  # consumed twice (state commit + sink); batch-sized
-        try:
-            rows = batch_df.select("doc_id", "text").join(
-                ann.select("doc_id", "split", "origin"), "doc_id"
-            )
-            if exact:
-                rows = rows.withColumn("k", key_expr)
-            if exists:
-                table.merge(rows, key="doc_id")
-            else:
-                table.create(rows)
-            if sink is not None:
-                sink(ann, batch_id)
-        finally:
-            ann.unpersist()
+        )
+
+        def commit(ann: DataFrame) -> None:
+            rows = batch.join(ann.select("doc_id", "split", "origin"), "doc_id")
+            table.merge(with_k(rows), key="doc_id")
+
+        _commit_batch(ann, commit, sink, batch_id)
 
     return docs.writeStream.foreachBatch(process)
 
@@ -336,44 +341,17 @@ def replay_split_batches(
     DuckDB oracle the driver hash-checks.  The fixture's max
     distinct-text Jaccard is 0.989 (verified by the ingest replay), so
     no cross-text link fires at 1.0."""
-    import atexit
-    import shutil
-
-    src = _stage_batch_files(docs, workdir, k_batches)
     state_path = os.path.join(workdir, "splits")
-    spark = docs.sparkSession
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(src)
+    _replay(
+        docs,
+        workdir,
+        k_batches,
+        lambda s: split_ingest_stream(
+            s, state_path, n_hashes, bands, threshold, shingle_n, hash_family
+        ),
     )
-    writer = split_ingest_stream(
-        stream,
-        state_path,
-        n_hashes=n_hashes,
-        bands=bands,
-        threshold=threshold,
-        shingle_n=shingle_n,
-        hash_family=hash_family,
-    )
-    q = (
-        writer.option("checkpointLocation", os.path.join(workdir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    from ..operators.merge import ParquetMergeTable
-
-    # same reclamation contract as replay_ingest_batches: drop batch
-    # files + checkpoint now, keep the lazy state read, rm at exit.
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(os.path.join(workdir, "ckpt"), ignore_errors=True)
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
-    return (
-        ParquetMergeTable(spark, state_path)
-        .read()
-        .select("doc_id", "split", "origin")
+    return ParquetMergeTable(docs.sparkSession, state_path).read().select(
+        "doc_id", "split", "origin"
     )
 
 
@@ -406,7 +384,6 @@ def dsir_ingest_stream(
         dsir_score_against,
         ensure_dsir_weights_nonempty,
     )
-    from ..operators.merge import ParquetMergeTable
 
     # Prepay the empty-artifact guard at stream setup: the artifact is
     # frozen, so the verdict is cached and no micro-batch re-runs the
@@ -414,17 +391,9 @@ def dsir_ingest_stream(
     ensure_dsir_weights_nonempty(weights)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        scored = dsir_score_against(
-            batch_df, weights, n=n, buckets=buckets, seed=seed
-        )
-        table = ParquetMergeTable(spark, scores_path)
-        if os.path.isdir(os.path.join(scores_path, "_manifests")):
-            table.merge(scored, key="doc_id")
-        else:
-            table.create(scored)
-        if sink is not None:
-            sink(scored, batch_id)
+        table = ParquetMergeTable(batch_df.sparkSession, scores_path)
+        scored = dsir_score_against(batch_df, weights, n=n, buckets=buckets, seed=seed)
+        _commit_batch(scored, lambda s: table.merge(s, key="doc_id"), sink, batch_id)
 
     return docs.writeStream.foreachBatch(process)
 
@@ -441,8 +410,7 @@ def replay_dsir_batches(
     """Replay :func:`dsir_ingest_stream` as a finite run: train the
     weight table once from ``(docs, target)``, deliver ``docs`` in
     ``k_batches`` deterministic micro-batches (the shared
-    :func:`_stage_batch_files` harness), and return the accumulated
-    scores table.
+    :func:`_replay` harness), and return the accumulated scores table.
 
     Because the weights are frozen BEFORE the first batch and scoring
     is stateless per document, the replay's union of batch scores
@@ -452,36 +420,18 @@ def replay_dsir_batches(
     rows-counted (the strongest check any streaming twin here gets).
     """
     from ..operators.corpus import dsir_train_weights
-    from ..operators.merge import ParquetMergeTable
 
-    spark = docs.sparkSession
     weights = dsir_train_weights(
         docs, target, n=n, buckets=buckets, seed=seed
     ).localCheckpoint()  # <= buckets rows; truncates the training scan
-    src = _stage_batch_files(docs, workdir, k_batches)
     scores_path = os.path.join(workdir, "scores")
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(src)
+    _replay(
+        docs,
+        workdir,
+        k_batches,
+        lambda s: dsir_ingest_stream(s, weights, scores_path, n, buckets, seed),
     )
-    q = (
-        dsir_ingest_stream(
-            stream, weights, scores_path, n=n, buckets=buckets, seed=seed
-        )
-        .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    import atexit
-    import shutil
-
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(os.path.join(workdir, "ckpt"), ignore_errors=True)
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
-    return ParquetMergeTable(spark, scores_path).read()
+    return ParquetMergeTable(docs.sparkSession, scores_path).read()
 
 
 def dhash_ingest_stream(
@@ -549,19 +499,16 @@ def _sig_process_batch(
     predicate (:func:`..operators.multimodal.video_match_stored`) —
     the state layout, replay anti-join, and MERGE protocol are the
     same code for all three."""
-    from ..operators.merge import ParquetMergeTable
     from ..operators.multimodal import dhash_match_stored
 
-    if match_fn is None:
-        match_fn = dhash_match_stored
+    match_fn = match_fn or dhash_match_stored
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        table = ParquetMergeTable(spark, state_path)
-        bsig = hash_fn(
-            batch_df
-        ).persist()  # consumed twice (decision + state commit); batch-sized
-        if os.path.isdir(os.path.join(state_path, "_manifests")):
+        table = ParquetMergeTable(batch_df.sparkSession, state_path)
+        # the hashed batch, not the decision, is what the state read,
+        # the match and the commit all consume: persist it instead
+        bsig = hash_fn(batch_df).persist()
+        try:
             # Replay idempotency: a replayed micro-batch may find its OWN
             # committed rows already in the state; matching against them
             # would self-match every previously admitted doc at Hamming 0
@@ -570,24 +517,16 @@ def _sig_process_batch(
             # so a replay reproduces its original decisions and the keyed
             # MERGE re-upserts identical rows (effectively-exactly-once).
             stored = (
-                table.read()
+                _read_state(table, "doc_id long, sig array<bigint>, is_new boolean")
                 .filter(F.col("is_new"))
                 .join(bsig.select("doc_id"), "doc_id", "left_anti")
                 .select("doc_id", "sig")
             )
-            exists = True
-        else:
-            stored = spark.createDataFrame([], "doc_id long, sig array<bigint>")
-            exists = False
-        try:
-            ann = match_fn(
-                stored, bsig, max_hamming=max_hamming, chunk_bits=chunk_bits
+            ann = match_fn(stored, bsig, max_hamming=max_hamming, chunk_bits=chunk_bits)
+            table.merge(
+                bsig.join(ann.select("doc_id", "dup_of", "is_new"), "doc_id"),
+                key="doc_id",
             )
-            rows = bsig.join(ann.select("doc_id", "dup_of", "is_new"), "doc_id")
-            if exists:
-                table.merge(rows, key="doc_id")
-            else:
-                table.create(rows)
             if sink is not None:
                 sink(ann, batch_id)
         finally:
@@ -615,37 +554,21 @@ def replay_dhash_batches(
     and the K-batch state evolution unrolls to K plain-SQL rounds
     (admitted_k = batch_k docs with no radius-7 match in
     admitted_0..k-1) that DuckDB replays exactly."""
-    import atexit
-    import shutil
-
-    src = _stage_batch_files(docs, workdir, k_batches)
     state_path = os.path.join(workdir, "dhash_state")
-    spark = docs.sparkSession
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(src)
+    _replay(
+        docs,
+        workdir,
+        k_batches,
+        lambda s: dhash_ingest_stream(s, state_path, max_hamming, chunk_bits),
     )
-    writer = dhash_ingest_stream(
-        stream, state_path, max_hamming=max_hamming, chunk_bits=chunk_bits
-    )
-    q = (
-        writer.option("checkpointLocation", os.path.join(workdir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    from ..operators.merge import ParquetMergeTable
+    return _admissions(docs.sparkSession, state_path)
 
-    # same reclamation contract as replay_ingest_batches
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(os.path.join(workdir, "ckpt"), ignore_errors=True)
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
-    return (
-        ParquetMergeTable(spark, state_path)
-        .read()
-        .select("doc_id", "dup_of", "is_new")
+
+def _admissions(spark, state_path: str) -> DataFrame:
+    """The signature families' replay product: the accumulated
+    admission table ``(doc_id, dup_of, is_new)``."""
+    return ParquetMergeTable(spark, state_path).read().select(
+        "doc_id", "dup_of", "is_new"
     )
 
 
@@ -689,40 +612,28 @@ def bloom_process_batch(
     4. after words: covered path; the re-OR is a value-level no-op.
     """
     from ..operators.approx import bloom_build, bloom_probe
-    from ..operators.merge import ParquetMergeTable
-
-    words_path = os.path.join(state_path, "words")
-    adm_path = os.path.join(state_path, "admissions")
-    cov_path = os.path.join(state_path, "covered")
-
-    def _exists(path: str) -> bool:
-        return os.path.isdir(os.path.join(path, "_manifests"))
-
-    def _or_words(spark, admitted_texts: DataFrame) -> None:
-        """OR the admitted docs' bits into the filter (idempotent).
-
-        Uses the bit_or-specialized ``upsert_or`` instead of a generic
-        MERGE of the pre-OR'd union: the Bloom delta intersects keys in
-        every stored file by design, so the generic path paid the
-        full-outer annotate + touched-file collect on EVERY batch —
-        the one merge the r13 pure-insert fast path could never help.
-        Identical snapshot rows and changelog classification (pinned by
-        the crash-replay protocol tests and the replay oracle)."""
-        words_t = ParquetMergeTable(spark, words_path)
-        batch_bits = bloom_build(
-            admitted_texts, "text", m_bits=m_bits, k=k, seed=seed
-        )
-        if _exists(words_path):
-            words_t.upsert_or(batch_bits, key="word_id")
-        else:
-            words_t.create(batch_bits)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
+        adm_t, cov_t, words_t = (
+            ParquetMergeTable(spark, os.path.join(state_path, sub))
+            for sub in ("admissions", "covered", "words")
+        )
+
+        def or_words(decisions: DataFrame) -> None:
+            # The bit_or-specialized upsert, not a generic MERGE of the
+            # pre-OR'd union: the Bloom delta intersects keys in every
+            # stored file by design, so the generic path would pay the
+            # full-outer annotate + touched-file collect on EVERY batch.
+            # Idempotent, which crash windows 3 and 4 rely on.
+            admitted = decisions.where(F.col("is_new")).select("text")
+            words_t.upsert_or(
+                bloom_build(admitted, "text", m_bits=m_bits, k=k, seed=seed),
+                key="word_id",
+            )
+
         bkeys = batch_df.select("doc_id", "text").persist()
         try:
-            adm_t = ParquetMergeTable(spark, adm_path)
-            cov_t = ParquetMergeTable(spark, cov_path)
             # Existence probe for THIS batch id only: the covered table
             # grows one row per committed batch forever, so collecting
             # it whole here would ship O(total batches) rows to the
@@ -730,7 +641,7 @@ def bloom_process_batch(
             # The filtered isEmpty is a take(1) over parquet row groups
             # that min/max-prune on batch_id: per-batch cost stays flat
             # at any stream age (SCALE.md, batch-count axis).
-            is_covered = _exists(cov_path) and not (
+            is_covered = cov_t.latest_version() > 0 and not (
                 cov_t.read().where(F.col("batch_id") == batch_id).isEmpty()
             )
             if is_covered:
@@ -742,49 +653,27 @@ def bloom_process_batch(
                     .join(bkeys, "doc_id")
                     .select("doc_id", "text", "bloom_member", "is_new")
                 )
-                _or_words(
-                    spark,
-                    decisions.where(F.col("is_new")).select("text"),
-                )
+                or_words(decisions)
                 if sink is not None:
                     sink(decisions, batch_id)
                 return
-            words = (
-                ParquetMergeTable(spark, words_path).read()
-                if _exists(words_path)
-                else spark.createDataFrame([], "word_id long, bits long")
+            words = _read_state(words_t, "word_id long, bits long")
+            decisions = bloom_probe(
+                bkeys, words, "text", m_bits=m_bits, k=k, seed=seed
+            ).select(
+                "doc_id",
+                "text",
+                "bloom_member",
+                (~F.col("bloom_member")).alias("is_new"),
             )
-            decisions = (
-                bloom_probe(bkeys, words, "text", m_bits=m_bits, k=k, seed=seed)
-                .select(
-                    "doc_id",
-                    "text",
-                    "bloom_member",
-                    (~F.col("bloom_member")).alias("is_new"),
-                )
-                .persist()  # consumed thrice (commit, OR, sink); batch-sized
-            )
-            try:
-                adm_rows = decisions.select("doc_id", "bloom_member", "is_new")
-                if _exists(adm_path):
-                    adm_t.merge(adm_rows, key="doc_id")
-                else:
-                    adm_t.create(adm_rows)
-                marker = spark.createDataFrame(
-                    [(int(batch_id),)], "batch_id long"
-                )
-                if _exists(cov_path):
-                    cov_t.merge(marker, key="batch_id")
-                else:
-                    cov_t.create(marker)
-                _or_words(
-                    spark,
-                    decisions.where(F.col("is_new")).select("text"),
-                )
-                if sink is not None:
-                    sink(decisions, batch_id)
-            finally:
-                decisions.unpersist()
+
+            def commit(d: DataFrame) -> None:  # admissions → covered → words
+                adm_t.merge(d.select("doc_id", "bloom_member", "is_new"), key="doc_id")
+                marker = spark.createDataFrame([(int(batch_id),)], "batch_id long")
+                cov_t.merge(marker, key="batch_id")
+                or_words(d)
+
+            _commit_batch(decisions, commit, sink, batch_id)
         finally:
             bkeys.unpersist()
 
@@ -833,34 +722,15 @@ def replay_bloom_batches(
     """Replay :func:`bloom_ingest_stream` as a finite run on the shared
     deterministic K-batch harness and return the admission log
     ``(doc_id, bloom_member, is_new)``."""
-    import atexit
-    import shutil
-
-    src = _stage_batch_files(docs, workdir, k_batches)
     state_path = os.path.join(workdir, "bloom_state")
-    spark = docs.sparkSession
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(src)
+    _replay(
+        docs,
+        workdir,
+        k_batches,
+        lambda s: bloom_ingest_stream(s, state_path, m_bits, k, seed),
     )
-    writer = bloom_ingest_stream(
-        stream, state_path, m_bits=m_bits, k=k, seed=seed
-    )
-    q = (
-        writer.option("checkpointLocation", os.path.join(workdir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    from ..operators.merge import ParquetMergeTable
-
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(os.path.join(workdir, "ckpt"), ignore_errors=True)
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
     return (
-        ParquetMergeTable(spark, os.path.join(state_path, "admissions"))
+        ParquetMergeTable(docs.sparkSession, os.path.join(state_path, "admissions"))
         .read()
         .select("doc_id", "bloom_member", "is_new")
     )
@@ -895,29 +765,13 @@ def decontam_ingest_stream(
     :func:`dhash_ingest_stream`, whose matching state grows with
     admissions and needed explicit self-exclusion)."""
     from ..operators.corpus import decontaminate_scrub_against
-    from ..operators.merge import ParquetMergeTable
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # persist: the scrub chain (window explode → semi join →
-        # islands → rewrite) is referenced by BOTH the table commit and
-        # the sink — without it each consumer re-runs the whole chain.
+        table = ParquetMergeTable(batch_df.sparkSession, clean_path)
         scrubbed = decontaminate_scrub_against(
             ev_hashes, batch_df, min_len=min_len, hash_family=hash_family
-        ).persist()
-        try:
-            table = ParquetMergeTable(spark, clean_path)
-            if os.path.isdir(os.path.join(clean_path, "_manifests")):
-                table.merge(scrubbed, key="doc_id")
-            else:
-                # Create unconditionally on the FIRST batch (an empty
-                # frame writes a schema-only parquet file), so a sink
-                # never observes batches before the table exists.
-                table.create(scrubbed)
-            if sink is not None:
-                sink(scrubbed, batch_id)
-        finally:
-            scrubbed.unpersist()
+        )
+        _commit_batch(scrubbed, lambda s: table.merge(s, key="doc_id"), sink, batch_id)
 
     return docs.writeStream.foreachBatch(process)
 
@@ -933,8 +787,8 @@ def replay_decontam_batches(
     """Replay :func:`decontam_ingest_stream` as a finite run: reduce
     the eval set to its window-hash artifact once (localCheckpointed),
     deliver ``docs`` in ``k_batches`` deterministic micro-batches (the
-    shared :func:`_stage_batch_files` harness), and return the
-    accumulated clean table.
+    shared :func:`_replay` harness), and return the accumulated clean
+    table.
 
     Frozen artifact + stateless per-doc scrubbing make the K-batch
     union EQUAL the one-shot
@@ -942,37 +796,19 @@ def replay_decontam_batches(
     exactly, so the streaming path shares the one-shot query's DuckDB
     oracle verbatim — hash-checked, the strongest check any streaming
     twin here gets (the replay_dsir_batches precedent)."""
-    import atexit
-    import shutil
-
     from ..operators.corpus import eval_window_hashes
-    from ..operators.merge import ParquetMergeTable
 
-    spark = docs.sparkSession
     ev = eval_window_hashes(
         eval_docs, min_len=min_len, hash_family=hash_family
     ).localCheckpoint()  # |eval|-bounded; truncates the eval explode
-    src = _stage_batch_files(docs, workdir, k_batches)
     clean_path = os.path.join(workdir, "clean")
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(src)
+    _replay(
+        docs,
+        workdir,
+        k_batches,
+        lambda s: decontam_ingest_stream(s, ev, clean_path, min_len, hash_family),
     )
-    q = (
-        decontam_ingest_stream(
-            stream, ev, clean_path, min_len=min_len, hash_family=hash_family
-        )
-        .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(os.path.join(workdir, "ckpt"), ignore_errors=True)
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
-    return ParquetMergeTable(spark, clean_path).read()
+    return ParquetMergeTable(docs.sparkSession, clean_path).read()
 
 
 def url_ingest_stream(docs: DataFrame, seen_path: str, url_col: str = "url", sink=None):
@@ -1019,25 +855,18 @@ def url_process_batch(
     level (the ``bloom_process_batch`` pattern) so tests can drive
     crash-replay windows directly."""
     from ..operators.dedup import canonical_url
-    from ..operators.merge import ParquetMergeTable
 
-    spark = batch_df.sparkSession
     canon = batch_df.select(
         "doc_id", canonical_url(F.col(url_col)).alias("canonical_url")
     )
     firsts = canon.groupBy("canonical_url").agg(
         F.min("doc_id").alias("_batch_min")
     )
-    table = ParquetMergeTable(spark, seen_path)
-    if os.path.isdir(os.path.join(seen_path, "_manifests")):
-        seen = table.read().withColumnRenamed("doc_id", "_owner")
-        exists = True
-    else:
-        seen = spark.createDataFrame([], "canonical_url string, _owner long")
-        exists = False
+    table = ParquetMergeTable(batch_df.sparkSession, seen_path)
+    seen = _read_state(table, "canonical_url string, doc_id long")
     ann = (
         canon.join(firsts, "canonical_url")
-        .join(seen, "canonical_url", "left")
+        .join(seen.withColumnRenamed("doc_id", "_owner"), "canonical_url", "left")
         .select(
             "doc_id",
             "canonical_url",
@@ -1051,22 +880,13 @@ def url_process_batch(
             .otherwise(F.col("doc_id") == F.col("_batch_min"))
             .alias("admitted"),
         )
-        .persist()  # consumed twice (state commit + sink); batch-sized
     )
-    try:
-        admitted_keys = ann.filter(F.col("admitted")).select(
-            "canonical_url", "doc_id"
-        )
-        if exists:
-            table.merge(admitted_keys, key="canonical_url")
-        else:
-            # unconditional create (empty frame writes a schema-only
-            # file) — the decontam_ingest_stream first-batch rule
-            table.create(admitted_keys)
-        if sink is not None:
-            sink(ann, batch_id)
-    finally:
-        ann.unpersist()
+
+    def commit(ann: DataFrame) -> None:
+        owners = ann.filter(F.col("admitted")).select("canonical_url", "doc_id")
+        table.merge(owners, key="canonical_url")
+
+    _commit_batch(ann, commit, sink, batch_id)
 
 
 def replay_url_batches(
@@ -1083,42 +903,20 @@ def replay_url_batches(
     replay_ingest_batches precedent).  Decisions accumulate in a
     doc-keyed MERGE table (idempotent under replay, like the bloom
     admissions log)."""
-    import atexit
-    import shutil
-
-    from ..operators.merge import ParquetMergeTable
-
-    spark = docs_urls.sparkSession
-    src = _stage_batch_files(
-        docs_urls, workdir, k_batches, cols=("doc_id", "url")
-    )
     seen_path = os.path.join(workdir, "seen")
     dec_path = os.path.join(workdir, "decisions")
 
-    def sink(ann: DataFrame, batch_id: int) -> None:
-        t = ParquetMergeTable(ann.sparkSession, dec_path)
-        if os.path.isdir(os.path.join(dec_path, "_manifests")):
-            t.merge(ann, key="doc_id")
-        else:
-            t.create(ann)
+    def sink(ann: DataFrame, _: int) -> None:
+        ParquetMergeTable(ann.sparkSession, dec_path).merge(ann, key="doc_id")
 
-    stream = (
-        spark.readStream.schema("doc_id long, url string")
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(src)
+    _replay(
+        docs_urls,
+        workdir,
+        k_batches,
+        lambda s: url_ingest_stream(s, seen_path, sink=sink),
+        "doc_id long, url string",
     )
-    q = (
-        url_ingest_stream(stream, seen_path, sink=sink)
-        .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(os.path.join(workdir, "ckpt"), ignore_errors=True)
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
-    return ParquetMergeTable(spark, dec_path).read().select(
+    return ParquetMergeTable(docs_urls.sparkSession, dec_path).read().select(
         "doc_id", "canonical_url", "admitted"
     )
 
@@ -1177,7 +975,6 @@ def boilerplate_process_batch(
     tables under ``state_path``: ``lines`` (per-batch line
     doc-frequency deltas) and ``totals`` (per-batch per-source doc
     counts)."""
-    from ..operators.merge import ParquetMergeTable
     from ..operators.paragraphs import boilerplate_census
 
     spark = batch_df.sparkSession
@@ -1197,11 +994,7 @@ def boilerplate_process_batch(
         b.alias("batch_id"),
     )
     for sub, delta in (("lines", line_delta), ("totals", tot_delta)):
-        t = ParquetMergeTable(spark, os.path.join(state_path, sub))
-        if os.path.isdir(os.path.join(state_path, sub, "_manifests")):
-            t.merge(delta, key="_key")
-        else:
-            t.create(delta)
+        ParquetMergeTable(spark, os.path.join(state_path, sub)).merge(delta, key="_key")
     if sink is not None:
         sink(line_delta, batch_id)
 
@@ -1211,8 +1004,6 @@ def read_boilerplate_census(spark, state_path: str):
     census shape: ``(line counts (_grp, _h, _n_docs), source totals
     (_grp, _src_docs))`` — the frames
     :func:`..operators.paragraphs.boilerplate_apply` consumes."""
-    from ..operators.merge import ParquetMergeTable
-
     lines = (
         ParquetMergeTable(spark, os.path.join(state_path, "lines"))
         .read()
@@ -1245,33 +1036,17 @@ def replay_boilerplate_batches(
     ``doc_boilerplate_strip``'s DuckDB oracle verbatim (the
     ``doc_dsir_stream_replay`` precedent, extended from frozen-state
     to accumulated-state products)."""
-    import atexit
-    import shutil
-
     from ..operators.paragraphs import boilerplate_apply
 
-    spark = docs.sparkSession
-    src = _stage_batch_files(
-        docs, workdir, k_batches, cols=("doc_id", "source", "text")
-    )
     state_path = os.path.join(workdir, "census")
-    stream = (
-        spark.readStream.schema("doc_id long, source string, text string")
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(src)
+    _replay(
+        docs,
+        workdir,
+        k_batches,
+        lambda s: boilerplate_ingest_stream(s, state_path, para_words),
+        "doc_id long, source string, text string",
     )
-    q = (
-        boilerplate_ingest_stream(stream, state_path, para_words=para_words)
-        .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(os.path.join(workdir, "ckpt"), ignore_errors=True)
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
-    lines, totals = read_boilerplate_census(spark, state_path)
+    lines, totals = read_boilerplate_census(docs.sparkSession, state_path)
     return boilerplate_apply(
         docs,
         lines,
@@ -1337,42 +1112,16 @@ def replay_audio_batches(
     :func:`replay_dhash_batches` shape for the audio modality; capture
     exactness at radius 3 over 4 chunks makes the K-round unroll a
     plain-SQL oracle."""
-    import atexit
-    import shutil
-
-    from ..operators.merge import ParquetMergeTable
-
-    src = _stage_batch_files(docs, workdir, k_batches)
     state_path = os.path.join(workdir, "audio_state")
-    spark = docs.sparkSession
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(src)
+    _replay(
+        docs,
+        workdir,
+        k_batches,
+        lambda s: audio_ingest_stream(
+            s, state_path, window_bytes, n_bits, max_hamming, chunk_bits
+        ),
     )
-    q = (
-        audio_ingest_stream(
-            stream,
-            state_path,
-            window_bytes=window_bytes,
-            n_bits=n_bits,
-            max_hamming=max_hamming,
-            chunk_bits=chunk_bits,
-        )
-        .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(os.path.join(workdir, "ckpt"), ignore_errors=True)
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
-    return (
-        ParquetMergeTable(spark, state_path)
-        .read()
-        .select("doc_id", "dup_of", "is_new")
-    )
+    return _admissions(docs.sparkSession, state_path)
 
 
 def video_ingest_stream(
@@ -1438,41 +1187,16 @@ def replay_video_batches(
     deterministic K-batch harness and return the accumulated admission
     table ``(doc_id, dup_of, is_new)`` — the
     :func:`replay_dhash_batches` shape for the video modality."""
-    import atexit
-    import shutil
-
-    from ..operators.merge import ParquetMergeTable
-
-    src = _stage_batch_files(docs, workdir, k_batches)
     state_path = os.path.join(workdir, "video_state")
-    spark = docs.sparkSession
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(src)
+    _replay(
+        docs,
+        workdir,
+        k_batches,
+        lambda s: video_ingest_stream(
+            s, state_path, n_frames, max_hamming, chunk_bits
+        ),
     )
-    q = (
-        video_ingest_stream(
-            stream,
-            state_path,
-            n_frames=n_frames,
-            max_hamming=max_hamming,
-            chunk_bits=chunk_bits,
-        )
-        .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(os.path.join(workdir, "ckpt"), ignore_errors=True)
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
-    return (
-        ParquetMergeTable(spark, state_path)
-        .read()
-        .select("doc_id", "dup_of", "is_new")
-    )
+    return _admissions(docs.sparkSession, state_path)
 
 
 def keepbest_ingest_stream(
@@ -1507,48 +1231,39 @@ def keepbest_ingest_stream(
     SUM) — and the per-batch upsert of a max equals the one-shot max
     for ANY batching, which is what lets the replay twin share a
     one-shot SQL oracle."""
-    from ..operators.merge import ParquetMergeTable
     from ..operators.multimodal import attach_media, image_dhash
-
-    sigs_path = os.path.join(state_path, "sigs")
-    win_path = os.path.join(state_path, "winners")
 
     def hash_fn(batch_df: DataFrame) -> DataFrame:
         return image_dhash(attach_media(batch_df.select("doc_id", "text")))
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+        winners = ParquetMergeTable(
+            batch_df.sparkSession, os.path.join(state_path, "winners")
+        )
         qmap = batch_df.select(
             "doc_id", F.col("quality").cast("long").alias("best_q")
         ).persist()
 
-        def sink(ann: DataFrame, bid: int) -> None:
+        def sink(ann: DataFrame, _: int) -> None:
             cand = ann.join(qmap, "doc_id").select(
                 F.coalesce("dup_of", "doc_id").alias("cluster_id"),
                 "best_q",
                 F.col("doc_id").alias("best_id"),
             )
-            wt = ParquetMergeTable(spark, win_path)
-            exists = os.path.isdir(os.path.join(win_path, "_manifests"))
-            if exists:
-                # Only clusters THIS batch touches re-derive their
-                # winner: stored rows semi-join the batch's cluster
-                # ids before the union, so the per-batch groupBy and
-                # the keyed MERGE are batch-sized — an unrestricted
-                # read().union(cand) re-upserts EVERY cluster every
-                # batch and the copy-on-write merge degrades to a
-                # full-table rewrite per batch (∝ total clusters, the
-                # O(n²)-over-stream-lifetime disease the bloom
-                # covered-table probe documented).
-                touched = (
-                    wt.read()
-                    .join(cand.select("cluster_id").distinct(), "cluster_id")
-                )
-                pool = touched.unionByName(cand)
-            else:
-                pool = cand
+            # Only clusters THIS batch touches re-derive their winner:
+            # stored rows semi-join the batch's cluster ids before the
+            # union, so the per-batch groupBy and the keyed MERGE are
+            # batch-sized — an unrestricted read().union(cand)
+            # re-upserts EVERY cluster every batch and the copy-on-write
+            # merge degrades to a full-table rewrite per batch (∝ total
+            # clusters, the O(n²)-over-stream-lifetime disease the bloom
+            # covered-table probe documented).
+            touched = _read_state(
+                winners, "cluster_id long, best_q long, best_id long"
+            ).join(cand.select("cluster_id").distinct(), "cluster_id")
             best = (
-                pool.groupBy("cluster_id")
+                touched.unionByName(cand)
+                .groupBy("cluster_id")
                 .agg(
                     F.max(
                         F.struct(
@@ -1562,13 +1277,10 @@ def keepbest_ingest_stream(
                     (-F.col("_b._n")).cast("long").alias("best_id"),
                 )
             )
-            if exists:
-                wt.merge(best, key="cluster_id")
-            else:
-                wt.create(best)
+            winners.merge(best, key="cluster_id")
 
         inner = _sig_process_batch(
-            sigs_path, hash_fn, max_hamming, chunk_bits, sink
+            os.path.join(state_path, "sigs"), hash_fn, max_hamming, chunk_bits, sink
         )
         try:
             inner(batch_df, batch_id)
@@ -1589,34 +1301,15 @@ def replay_keepbest_batches(
     harness and return the final per-cluster report ``(cluster_id,
     best_id, best_q, n_members)`` — winners ledger joined to member
     counts from the admission log, both read from committed state."""
-    import atexit
-    import shutil
-
-    from ..operators.merge import ParquetMergeTable
-
-    src = _stage_batch_files(
-        docs, workdir, k_batches, cols=("doc_id", "text", "quality")
-    )
-    state_path = os.path.join(workdir, "keepbest_state")
     spark = docs.sparkSession
-    stream = (
-        spark.readStream.schema("doc_id long, text string, quality long")
-        .option("maxFilesPerTrigger", 1)
-        .option("latestFirst", "false")
-        .parquet(src)
+    state_path = os.path.join(workdir, "keepbest_state")
+    _replay(
+        docs,
+        workdir,
+        k_batches,
+        lambda s: keepbest_ingest_stream(s, state_path, max_hamming, chunk_bits),
+        _TEXT + ", quality long",
     )
-    q = (
-        keepbest_ingest_stream(
-            stream, state_path, max_hamming=max_hamming, chunk_bits=chunk_bits
-        )
-        .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(os.path.join(workdir, "ckpt"), ignore_errors=True)
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
     adm = ParquetMergeTable(spark, os.path.join(state_path, "sigs")).read()
     counts = (
         adm.select(F.coalesce("dup_of", "doc_id").alias("cluster_id"))
