@@ -500,10 +500,10 @@ def main() -> None:
         # path made the second (8-core) run clobber the 32-core
         # evidence.  The full record now lands at a path suffixed with
         # the core count, so scaling runs never overwrite each other;
-        # bench_full.json stays as a "latest run" convenience copy.
-        n_cores = os.environ.get("SPARK_GRAFT_CPUS") or str(
-            spark.sparkContext.defaultParallelism
-        )
+        # bench_full.json stays as a "latest run" convenience copy.  The
+        # count is the session's own parallelism: $SPARK_GRAFT_CPUS may
+        # be unset or name a count the session was not started with.
+        n_cores = spark.sparkContext.defaultParallelism
         full_rel = f"docs/preflight/bench_full_c{n_cores}.json"
         full_path = os.path.join(ROOT, *full_rel.split("/"))
         os.makedirs(os.path.dirname(full_path), exist_ok=True)

@@ -5378,6 +5378,95 @@ class TestAnnEval:
         drows = sorted(con.execute(ORACLES[name]).fetchall())
         assert srows == drows
 
+    def test_leaves_no_persisted_rdd(self, spark, sf_dir):
+        """The staged exact ranking must not outlive the report: one
+        construct + collect leaves the block manager's persisted RDDs
+        as it found them."""
+        from textract_farmdata_pipeline_spark.operators.checkpoints import (
+            _persistent_ids,
+        )
+        from textract_farmdata_pipeline_spark.registry import QUERIES
+
+        before = _persistent_ids(spark)
+        QUERIES["embedding_ann_eval"](spark, sf_dir).collect()
+        assert _persistent_ids(spark) == before
+
+
+class TestFlatGatedParity:
+    """With every cell probed, each IVF-gated compressed scan returns
+    exactly its flat twin's rows: the cell gate only prunes candidates,
+    it never changes a score, a shortlist, a rank or a tie-break."""
+
+    K_COARSE = 16
+
+    @staticmethod
+    def _same(gated, flat):
+        assert gated.schema == flat.schema
+        rows = sorted(tuple(r) for r in flat.collect())
+        assert len(rows) == 100  # 20 queries x k=5
+        assert sorted(tuple(r) for r in gated.collect()) == rows
+
+    @pytest.fixture(scope="class")
+    def queries(self, emb):
+        return emb.filter(F.col("vec_id") < 20)
+
+    def test_bq(self, emb, queries):
+        from textract_farmdata_pipeline_spark.operators.similarity import (
+            bq_ivf_topk,
+            bq_topk,
+        )
+
+        self._same(
+            bq_ivf_topk(emb, queries, k=5, n_probe=self.K_COARSE, k_coarse=self.K_COARSE),
+            bq_topk(emb, queries, k=5),
+        )
+
+    def test_sq_portable(self, emb, queries):
+        from textract_farmdata_pipeline_spark.operators.similarity import (
+            sq_ivf_topk_portable,
+            sq_topk,
+        )
+
+        self._same(
+            sq_ivf_topk_portable(
+                emb, queries, k=5, n_probe=self.K_COARSE, k_coarse=self.K_COARSE
+            ),
+            sq_topk(emb, queries, k=5),
+        )
+
+    def test_pq_portable(self, emb, queries):
+        from textract_farmdata_pipeline_spark.operators.similarity import (
+            pq_adc_ivf_topk_portable,
+            pq_adc_topk_portable,
+        )
+
+        self._same(
+            pq_adc_ivf_topk_portable(
+                emb, queries, k=5, n_probe=self.K_COARSE, k_coarse=self.K_COARSE
+            ),
+            pq_adc_topk_portable(emb, queries, k=5),
+        )
+
+    def test_pq_trained(self, emb, queries):
+        from textract_farmdata_pipeline_spark.operators.similarity import (
+            kmeans_train,
+            pq_encode_ivf,
+            pq_ivf_topk,
+            pq_topk,
+            pq_train,
+        )
+
+        cents, _ = kmeans_train(emb, k=self.K_COARSE, max_iter=2)
+        books = pq_train(emb, m=8, ks=16, max_iter=2, persist=False)
+        codes = pq_encode_ivf(emb, books, cents).cache()
+        try:
+            self._same(
+                pq_ivf_topk(codes, books, cents, queries, k=5, n_probe=len(cents)),
+                pq_topk(codes, books, queries, k=5),
+            )
+        finally:
+            codes.unpersist()
+
 
 class TestIncrementalSplit:
     """Split stability as the corpus grows: existing assignments are

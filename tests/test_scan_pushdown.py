@@ -112,3 +112,39 @@ class TestBloomFilterRuntimeJoin:
         )
         want = li.join(orders, li.l_orderkey == orders.o_orderkey).count()
         assert got == want
+
+
+class TestFanOutSplitEstimate:
+    def test_split_estimate_follows_session_conf(self, spark, tmp_path):
+        """The thin-scan fan-out estimates the scan's split count from
+        the session's own file-split settings: once
+        ``spark.sql.files.maxPartitionBytes`` is shrunk below the file
+        size, the scan already has enough splits and is left alone."""
+        from textract_farmdata_pipeline_spark.registry import (
+            _FAN_OUT_MIN_BYTES,
+            _fan_out_thin_scan,
+            _parquet_bytes,
+        )
+
+        path = str(tmp_path / "thin")
+        (
+            spark.range(20000)
+            .select(F.sha2(F.col("id").cast("string"), 256).alias("h"))
+            .coalesce(1)
+            .write.parquet(path)
+        )
+        size, _ = _parquet_bytes(path)
+        assert _FAN_OUT_MIN_BYTES <= size < 4 * 1024 * 1024
+        df = spark.read.parquet(path)
+        # at Spark's defaults one file under the 4 MB open cost is
+        # estimated as two splits, so it fans out on more cores than that
+        cores = spark.sparkContext.defaultParallelism
+        assert (_fan_out_thin_scan(df, path) is not df) == (cores > 2)
+        key = "spark.sql.files.maxPartitionBytes"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "64k")
+        try:
+            assert _fan_out_thin_scan(df, path) is df
+        finally:
+            spark.conf.set(key, old)
+        assert spark.conf.get(key) == old

@@ -1224,11 +1224,13 @@ class TestFirstCommitCrashRestart:
 
 
 class TestIngestThresholdRestart:
-    """Restarting ``dedup_ingest_stream`` over a state table written at
-    another threshold: the stored table's schema decides whether rows
-    carry the sorted shingle key ``k``, so either direction runs and
-    admits exactly what a driver loop of ``incremental_minhash_dedup``
-    admits on the same batches."""
+    """Restarting a shingle-keyed ingest stream (``dedup_ingest_stream``
+    or ``split_ingest_stream``) over a state table written at another
+    threshold: the stored table's schema decides whether rows carry the
+    sorted shingle key ``k``, so either direction runs and decides
+    exactly what a driver loop of the family's batch core
+    (``incremental_minhash_dedup`` / ``incremental_split_batch``)
+    decides on the same batches."""
 
     WORDS = [f"w{i}" for i in range(40)]
 
@@ -1240,14 +1242,13 @@ class TestIngestThresholdRestart:
         schema = "doc_id long, text string"
         return [spark.createDataFrame(b, schema) for b in (first, second)]
 
-    def _stream(self, spark, tmp_path, thresholds):
+    def _stream(self, spark, tmp_path, thresholds, start):
         from textract_farmdata_pipeline_spark.operators.merge import (
             ParquetMergeTable,
         )
-        from textract_farmdata_pipeline_spark.streaming import dedup_ingest_stream
         from textract_farmdata_pipeline_spark.streaming.ingest import drain_replay
 
-        corpus = str(tmp_path / "corpus")
+        state = str(tmp_path / "state")
         for i, (batch, t) in enumerate(zip(self._batches(spark), thresholds)):
             work = str(tmp_path / f"run{i}")
             src = os.path.join(work, "incoming")
@@ -1257,9 +1258,9 @@ class TestIngestThresholdRestart:
                 src,
                 "doc_id long, text string",
                 work,
-                lambda s, t=t: dedup_ingest_stream(s, corpus, threshold=t),
+                lambda s, t=t: start(s, state, t),
             )
-        return ParquetMergeTable(spark, corpus).read()
+        return ParquetMergeTable(spark, state).read()
 
     def _driver_loop(self, spark, thresholds):
         from textract_farmdata_pipeline_spark.operators.dedup import (
@@ -1275,12 +1276,53 @@ class TestIngestThresholdRestart:
 
     @pytest.mark.parametrize("thresholds", [(0.5, 1.0), (1.0, 0.5)])
     def test_restart_at_other_threshold(self, spark, tmp_path, thresholds):
-        state = self._stream(spark, tmp_path, thresholds)
+        from textract_farmdata_pipeline_spark.streaming import dedup_ingest_stream
+
+        state = self._stream(
+            spark,
+            tmp_path,
+            thresholds,
+            lambda s, path, t: dedup_ingest_stream(s, path, threshold=t),
+        )
         want = self._driver_loop(spark, thresholds)
         assert _rows(state, "doc_id", "text") == want
         # the near copy is what the two thresholds disagree on
         assert (3 in {d for d, _ in want}) == (thresholds[1] == 1.0)
         # the table keeps the layout its first commit chose
+        assert ("k" in state.columns) == (thresholds[0] == 1.0)
+
+    SPLIT = {"n_hashes": 8, "bands": 4, "hash_family": "md5"}
+
+    def _split_driver_loop(self, spark, thresholds):
+        from textract_farmdata_pipeline_spark.operators.dedup import (
+            incremental_split_batch,
+        )
+
+        state = spark.createDataFrame([], "doc_id long, text string, split string")
+        decided = []
+        for batch, t in zip(self._batches(spark), thresholds):
+            ann = incremental_split_batch(state, batch, threshold=t, **self.SPLIT)
+            rows = batch.join(ann.select("doc_id", "split", "origin"), "doc_id")
+            decided += _rows(rows, "doc_id", "split", "origin")
+            state = state.unionByName(rows.select("doc_id", "text", "split")).localCheckpoint()
+        return sorted(decided)
+
+    @pytest.mark.parametrize("thresholds", [(0.5, 1.0), (1.0, 0.5)])
+    def test_split_restart_at_other_threshold(self, spark, tmp_path, thresholds):
+        from textract_farmdata_pipeline_spark.streaming import split_ingest_stream
+
+        state = self._stream(
+            spark,
+            tmp_path,
+            thresholds,
+            lambda s, path, t: split_ingest_stream(s, path, threshold=t, **self.SPLIT),
+        )
+        want = self._split_driver_loop(spark, thresholds)
+        assert _rows(state, "doc_id", "split", "origin") == want
+        origin = {d: o for d, _, o in want}
+        # the exact copy always inherits; the near copy only below 1.0
+        assert origin[2] == "inherited"
+        assert (origin[3] == "inherited") == (thresholds[1] == 0.5)
         assert ("k" in state.columns) == (thresholds[0] == 1.0)
 
 

@@ -56,12 +56,10 @@ def _cosine_scored(
     so retrieval and negative mining can never drift on the arithmetic
     the oracles pin).  Queries broadcast; the corpus never shuffles;
     self-matches excluded."""
-    q = F.broadcast(
-        queries.select(
-            F.col("vec_id").alias("query_id"),
-            _as_double(F.col("embedding")).alias("qv"),
-        ).withColumn("qnorm", norm(F.col("qv")))
-    )
+    q = queries.select(
+        F.col("vec_id").alias("query_id"),
+        _as_double(F.col("embedding")).alias("qv"),
+    ).withColumn("qnorm", norm(F.col("qv")))
     # Norms are per-row, not per-pair: hoist them out of the O(n·q)
     # scoring loop.  The arithmetic shape dot/(qnorm·cnorm) is kept
     # bit-identical to the inline form (same fold, same sqrt).  The
@@ -80,11 +78,32 @@ def _cosine_scored(
     )
     if round_digits is not None:
         score = F.round(score, round_digits)
-    return (
-        c.crossJoin(q)
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", score.alias("cosine"))
-    )
+    return _scan(c, q).select("query_id", "neighbor_id", score.alias("cosine"))
+
+
+def _scan(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """The scan step of every top-k in this module: each corpus row
+    (``neighbor_id``, …) against the BROADCAST query side
+    (``query_id``, …), self-matches excluded.  A flat scan is a cross
+    join; when the query side carries a probed ``cell`` (the IVF gate)
+    it is an EQUALITY join on the cell id instead — Catalyst prunes
+    every non-probed cell's rows at the join, so the scan fraction is
+    ``Σ probed-cell sizes`` instead of ``|corpus| · |queries|``.  Each
+    neighbor lives in exactly one cell, so no dedup is needed."""
+    q = F.broadcast(queries)
+    pairs = corpus.join(q, "cell") if "cell" in queries.columns else corpus.crossJoin(q)
+    return pairs.filter(F.col("neighbor_id") != F.col("query_id"))
+
+
+def _top_per_query(scored: DataFrame, by: Column, k: int) -> DataFrame:
+    """``scored`` plus ``rank``: row number per query ordered by ``by``,
+    ties → lower ``neighbor_id`` (the tie-break every oracle pins),
+    top ``k`` rows only — the window behind every per-query neighbor
+    ranking in this module."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy("query_id").orderBy(by, F.col("neighbor_id").asc())
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def _rank_per_query(
@@ -97,17 +116,51 @@ def _rank_per_query(
     (cosine desc, neighbor_id asc — the tie-break every oracle pins).
     ``extra_cols`` carries additional score columns through;
     ``rank_type`` optionally casts the rank (oracles emit BIGINT)."""
-    from pyspark.sql.window import Window
+    rank = F.col("rank").cast(rank_type) if rank_type else F.col("rank")
+    return _top_per_query(scored, F.col("cosine").desc(), k).select(
+        "query_id", "neighbor_id", rank.alias("rank"), *extra_cols, "cosine"
+    )
 
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
+
+def _shortlist_rerank(
+    scored: DataFrame,
+    by: Column,
+    carry: Sequence[str],
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    shortlist: int,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+    round_digits: int | None = 4,
+    rank_type: str | None = "long",
+) -> DataFrame:
+    """Stage 2 of every two-stage ANN here (SQ8, BQ, asymmetric BQ, PQ,
+    matryoshka): each query's top ``shortlist`` stage-1 pairs by ``by``
+    (ties → lower neighbor id), float vectors joined back for those
+    ``|queries| · shortlist`` rows only, then exact cosine under the
+    repo-wide 4-dp + neighbor-id rule (:func:`_rank_per_query`).
+    ``carry`` names the stage-1 score columns kept in the output.  One
+    definition, so neither a gated scan and its flat twin nor two
+    quantizers can drift on ranking rules."""
+    short = _top_per_query(scored, by, shortlist).select(
+        "query_id", "neighbor_id", *carry
     )
-    rank = F.row_number().over(w)
-    return (
-        scored.withColumn("rank", rank.cast(rank_type) if rank_type else rank)
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", *extra_cols, "cosine")
+    cvec = corpus.select(
+        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv")
     )
+    qvec = queries.select(
+        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
+    )
+    score = cosine(F.col("qv"), F.col("cv"))
+    if round_digits is not None:
+        score = F.round(score, round_digits)
+    rer = (
+        short.join(cvec, "neighbor_id")
+        .join(F.broadcast(qvec), "query_id")
+        .withColumn("cosine", score)
+    )
+    return _rank_per_query(rer, k, extra_cols=carry, rank_type=rank_type)
 
 
 def cosine_topk(
@@ -230,30 +283,11 @@ def matryoshka_topk(
             ),
         )
 
-    stage1 = _rank_per_query(
-        _cosine_scored(sliced(corpus), sliced(queries), round_digits), shortlist
-    ).select("query_id", "neighbor_id")
-    cvec = corpus.select(
-        F.col("vec_id").alias("neighbor_id"),
-        _as_double(F.col("embedding")).alias("cv"),
-    ).withColumn("cnorm", norm(F.col("cv")))
-    qvec = F.broadcast(
-        queries.select(
-            F.col("vec_id").alias("query_id"),
-            _as_double(F.col("embedding")).alias("qv"),
-        ).withColumn("qnorm", norm(F.col("qv")))
+    return _shortlist_rerank(
+        _cosine_scored(sliced(corpus), sliced(queries), round_digits),
+        F.col("cosine").desc(), (), corpus, queries, k, shortlist,
+        round_digits=round_digits, rank_type=None,
     )
-    score = guarded_cosine(
-        dot(F.col("qv"), F.col("cv")), F.col("qnorm"), F.col("cnorm")
-    )
-    if round_digits is not None:
-        score = F.round(score, round_digits)
-    rer = (
-        stage1.join(cvec, "neighbor_id")
-        .join(qvec, "query_id")
-        .select("query_id", "neighbor_id", score.alias("cosine"))
-    )
-    return _rank_per_query(rer, k)
 
 
 def hard_negatives(
@@ -605,12 +639,7 @@ def ann_topk_ivf(
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _rank_per_query(scored, k)
 
 
 def ann_topk_lsh(
@@ -632,8 +661,6 @@ def ann_topk_lsh(
     At scale the scored-pair volume is O(n·q·L/2^planes), the knobs
     trading recall for scan fraction.
     """
-    from pyspark.sql.window import Window
-
     from ..shipping import ensure_package_shipped
 
     ensure_package_shipped(corpus.sparkSession)
@@ -671,12 +698,7 @@ def ann_topk_lsh(
         )
         .distinct()  # a pair found in several tables scores identically
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _rank_per_query(scored, k)
 
 
 def edit_distance_join(
@@ -1410,35 +1432,30 @@ def pq_train(
         ]
         vec_only = df.select("v")
         for _ in range(max_iter):
-            book_rows = [[list(c) for c in b] for b in books]
+            encode = _pq_encoder(books)
 
             def _partials(batches):
                 import numpy as np
 
-                B = np.array(book_rows)  # m x ks x dsub
-                mm, kk, dd = B.shape
-                sums = np.zeros((mm, kk, dd))
-                cnt = np.zeros((mm, kk), dtype="int64")
+                sums = np.zeros((m, ks, dsub))
+                cnt = np.zeros((m, ks), dtype="int64")
                 for pdf in batches:
                     if not len(pdf):
                         continue
                     V = np.array(pdf["v"].tolist())  # batch x dim
-                    for s in range(mm):
-                        Vs = V[:, s * dd : (s + 1) * dd]  # batch x dsub
-                        # L2 argmin via the expanded form; ||Vs||² is
-                        # constant per row so the argmin needs only
-                        # -2·Vs·C + ||C||²
-                        d2 = -2.0 * (Vs @ B[s].T) + (B[s] ** 2).sum(axis=1)
-                        cl = d2.argmin(axis=1)
+                    codes = encode(V)
+                    for s in range(m):
+                        Vs = V[:, s * dsub : (s + 1) * dsub]  # batch x dsub
+                        cl = codes[:, s]
                         for j in np.unique(cl):
                             mask = cl == j
                             sums[s, j] += Vs[mask].sum(axis=0)
                             cnt[s, j] += int(mask.sum())
                 out = {
-                    "s": np.repeat(np.arange(mm), kk),
-                    "j": np.tile(np.arange(kk), mm),
+                    "s": np.repeat(np.arange(m), ks),
+                    "j": np.tile(np.arange(ks), m),
                     "n": cnt.reshape(-1),
-                    "vsum": list(sums.reshape(mm * kk, dd)),
+                    "vsum": list(sums.reshape(m * ks, dsub)),
                 }
                 yield pd.DataFrame(out)
 
@@ -1493,6 +1510,29 @@ def unit_vector(vec: Column) -> Column:
     ).otherwise(v)
 
 
+def _pq_encoder(codebooks):
+    """The numpy PQ encode kernel shared by :func:`pq_train`,
+    :func:`pq_encode` and :func:`pq_encode_ivf`: ``V`` (batch × dim)
+    → 0-based nearest-sub-centroid codes (batch × m, int32).  L2
+    argmin via the expanded form; ``||Vs||²`` is constant per row, so
+    the argmin needs only ``-2·Vs·C + ||C||²``.  Returned as a closure
+    so it pickles by value into the map tasks together with the
+    m × ks × dsub codebook array."""
+    import numpy as np
+
+    B = np.array([[list(c) for c in b] for b in codebooks])
+    mm, _kk, dd = B.shape
+
+    def encode(V):
+        codes = np.empty((len(V), mm), dtype="int32")
+        for s in range(mm):
+            Vs = V[:, s * dd : (s + 1) * dd]
+            codes[:, s] = (-2.0 * (Vs @ B[s].T) + (B[s] ** 2).sum(axis=1)).argmin(axis=1)
+        return codes
+
+    return encode
+
+
 def pq_encode(
     vectors: DataFrame,
     codebooks,
@@ -1503,23 +1543,15 @@ def pq_encode(
     ``(id, codes array<int>)`` — 100 TB of float32 becomes ~m bytes
     per row.  One vectorized map stage (codebooks ship in the task
     closure), no shuffle."""
-    book_rows = [[list(c) for c in b] for b in codebooks]
+    encode = _pq_encoder(codebooks)
 
     def _enc(batches):
         import numpy as np
 
-        B = np.array(book_rows)  # m x ks x dsub
-        mm, kk, dd = B.shape
         for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.array(pdf["v"].tolist())
-            codes = np.empty((len(V), mm), dtype="int32")
-            for s in range(mm):
-                Vs = V[:, s * dd : (s + 1) * dd]
-                d2 = -2.0 * (Vs @ B[s].T) + (B[s] ** 2).sum(axis=1)
-                codes[:, s] = d2.argmin(axis=1)
-            yield pd.DataFrame({"vec_id": pdf["_id"], "codes": list(codes)})
+            if len(pdf):
+                codes = encode(np.array(pdf["v"].tolist()))
+                yield pd.DataFrame({"vec_id": pdf["_id"], "codes": list(codes)})
 
     return (
         vectors.select(
@@ -1623,32 +1655,34 @@ def pq_topk(
     code table never leaves the JVM and never shuffles.  Per-query
     top-k via window rank, ties broken by neighbor id.  ``adc_score``
     ≈ cosine for unit-normalized training/query vectors."""
-    from pyspark.sql.window import Window
-
     luts = _query_luts(queries, codebooks, vec_col=vec_col, id_col=id_col)
+    codes = codes.select(F.col("vec_id").alias("neighbor_id"), "codes")
+    return _top_per_query(
+        _adc_scored(codes, luts, round_digits), F.col("adc_score").desc(), k
+    )
+
+
+def _adc_scored(
+    codes: DataFrame, luts: DataFrame, round_digits: int, code_base: int = 0
+) -> DataFrame:
+    """``(query_id, neighbor_id, adc_score)`` over the :func:`_scan` of
+    a PQ code table (``neighbor_id, [cell,] codes``) against per-query
+    LUTs (``query_id, [cell,] lut``): ``Σ_s lut[s][code_s]`` as a
+    left fold of JVM ``zip_with``/``aggregate``, rounded before any
+    ranking.  ``code_base`` is the first code value — 0 for the numpy
+    encoders, 1 for the portable JVM encode — so every ADC scan, flat
+    or gated, trained or frozen, scores through this one chain."""
     score = F.aggregate(
         F.zip_with(
             F.col("codes"),
             F.col("lut"),
-            lambda c, row: F.element_at(row, c + F.lit(1)),
+            lambda c, row: F.element_at(row, c + F.lit(1 - code_base)),
         ),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_score"), F.asc("neighbor_id")
-    )
-    return (
-        codes.select(F.col("vec_id").alias("neighbor_id"), "codes")
-        .crossJoin(F.broadcast(luts))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(score, round_digits).alias("adc_score"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return _scan(codes, luts).select(
+        "query_id", "neighbor_id", F.round(score, round_digits).alias("adc_score")
     )
 
 
@@ -1671,31 +1705,11 @@ def pq_topk_rerank(
     cosine re-ranks the top ``k``.  Recall equals the shortlist's
     capture rate; the compressed scan does the heavy lifting over
     m-byte codes instead of 4·dim-byte floats."""
-    from pyspark.sql.window import Window
-
-    cand = pq_topk(
-        codes, codebooks, queries, k=shortlist, id_col=id_col,
-        vec_col=vec_col, round_digits=9,
-    ).select("query_id", "neighbor_id")
-    qv = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-        )
-    )
-    cv = vectors.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv")
-    )
-    exact = F.round(cosine(F.col("qv"), F.col("cv")), round_digits)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        cand.join(cv, "neighbor_id")
-        .join(qv, "query_id")
-        .select("query_id", "neighbor_id", exact.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"), "cosine")
+    luts = _query_luts(queries, codebooks, vec_col=vec_col, id_col=id_col)
+    codes = codes.select(F.col("vec_id").alias("neighbor_id"), "codes")
+    return _shortlist_rerank(
+        _adc_scored(codes, luts, 9), F.col("adc_score").desc(), (),
+        vectors, queries, k, shortlist, vec_col, id_col, round_digits,
     )
 
 
@@ -1713,30 +1727,23 @@ def pq_encode_ivf(
     no shuffle).  The cell column is what lets :func:`pq_ivf_topk`
     prune the ADC scan to probed cells instead of touching every code.
     """
-    book_rows = [[list(c) for c in b] for b in codebooks]
+    encode = _pq_encoder(codebooks)
     cent_rows = [list(c) for c in coarse_centroids]
 
     def _enc(batches):
         import numpy as np
 
-        B = np.array(book_rows)  # m x ks x dsub
         C = np.array(cent_rows)  # k x dim
-        mm, kk, dd = B.shape
         for pdf in batches:
             if not len(pdf):
                 continue
             V = np.array(pdf["v"].tolist())
             cells = (V @ C.T).argmax(axis=1) + 1  # 1-based, ties → first max
-            codes = np.empty((len(V), mm), dtype="int32")
-            for s in range(mm):
-                Vs = V[:, s * dd : (s + 1) * dd]
-                d2 = -2.0 * (Vs @ B[s].T) + (B[s] ** 2).sum(axis=1)
-                codes[:, s] = d2.argmin(axis=1)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["_id"],
                     "cell": cells.astype("int32"),
-                    "codes": list(codes),
+                    "codes": list(encode(V)),
                 }
             )
 
@@ -1783,34 +1790,12 @@ def pq_ivf_topk(
     ``coarse_centroids``.  Returns ``(query_id, neighbor_id,
     adc_score, rank)``.
     """
-    from pyspark.sql.window import Window
-
     luts = _query_luts(
         queries, codebooks, coarse_centroids, n_probe, vec_col, id_col
     )
-    score = F.aggregate(
-        F.zip_with(
-            F.col("codes"),
-            F.col("lut"),
-            lambda c, row: F.element_at(row, c + F.lit(1)),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_score"), F.asc("neighbor_id")
-    )
-    return (
-        codes.select(F.col("vec_id").alias("neighbor_id"), "cell", "codes")
-        .join(F.broadcast(luts), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(score, round_digits).alias("adc_score"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    codes = codes.select(F.col("vec_id").alias("neighbor_id"), "cell", "codes")
+    return _top_per_query(
+        _adc_scored(codes, luts, round_digits), F.col("adc_score").desc(), k
     )
 
 
@@ -2334,73 +2319,50 @@ def sq_topk(
     """
     if mins is None or maxs is None:
         mins, maxs = sq_train(corpus, vec_col)
-
-    c_codes = sq_encode(corpus, mins, maxs, vec_col, id_col).withColumn(
-        "cn", int_dot(F.col("codes"), F.col("codes"))
+    scored = _sq_scored(
+        sq_encode(corpus, mins, maxs, vec_col, id_col),
+        _sq_query_codes(queries, mins, maxs, vec_col, id_col),
     )
-    q_codes = (
-        sq_encode(queries, mins, maxs, vec_col, id_col)
-        .withColumnRenamed("vec_id", "query_id")
-        .withColumnRenamed("codes", "q_codes")
-        .withColumn("qn", int_dot(F.col("q_codes"), F.col("q_codes")))
-    )
-    iscore = int_dot(F.col("codes"), F.col("q_codes"))
-    scored = (
-        c_codes.crossJoin(F.broadcast(q_codes))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            iscore.alias("score_sq"),
-            F.when(
-                (F.col("cn") > 0) & (F.col("qn") > 0),
-                iscore / (F.sqrt(F.col("cn")) * F.sqrt(F.col("qn"))),
-            ).alias("code_cosine"),
-        )
-    )
-    return _sq_shortlist_rerank(
-        scored, corpus, queries, k, shortlist, vec_col, id_col, round_digits
+    return _shortlist_rerank(
+        scored, F.col("code_cosine").desc(), ("score_sq",),
+        corpus, queries, k, shortlist, vec_col, id_col, round_digits,
     )
 
 
-def _sq_shortlist_rerank(
-    scored: DataFrame,
-    corpus: DataFrame,
+def _sq_query_codes(
     queries: DataFrame,
-    k: int,
-    shortlist: int,
+    mins: Sequence[float],
+    maxs: Sequence[float],
     vec_col: str,
     id_col: str,
-    round_digits: int,
 ) -> DataFrame:
-    """Stage 2 shared by :func:`sq_topk` and :func:`sq_ivf_topk`:
-    code-cosine shortlist window, then exact-cosine rerank of the
-    ``|queries| · shortlist`` survivors only (one definition, so the
-    gated scan cannot drift from the full scan on ranking rules)."""
-    from pyspark.sql.window import Window
+    """``(query_id, q_codes)`` — the query side of every SQ8 scan."""
+    return sq_encode(queries, mins, maxs, vec_col, id_col).select(
+        F.col("vec_id").alias("query_id"), F.col("codes").alias("q_codes")
+    )
 
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.desc("code_cosine"), F.asc("neighbor_id")
+
+def _sq_scored(codes: DataFrame, q_codes: DataFrame) -> DataFrame:
+    """Stage 1 of every SQ8 scan: the :func:`_scan` of an int8 code
+    table (``vec_id, [cell,] codes``) against query codes (``query_id,
+    [cell,] q_codes``), scored by the exact integer dot ``score_sq``
+    and the code-space cosine ``code_cosine`` (see :func:`sq_topk`).
+    Code norms are per row, so both are computed before the join, not
+    per scanned pair."""
+    c = codes.withColumnRenamed("vec_id", "neighbor_id").withColumn(
+        "cn", int_dot(F.col("codes"), F.col("codes"))
     )
-    short = (
-        scored.withColumn("srank", F.row_number().over(w1))
-        .filter(F.col("srank") <= shortlist)
-        .drop("srank")
+    q = q_codes.withColumn("qn", int_dot(F.col("q_codes"), F.col("q_codes")))
+    iscore = int_dot(F.col("codes"), F.col("q_codes"))
+    return _scan(c, q).select(
+        "query_id",
+        "neighbor_id",
+        iscore.alias("score_sq"),
+        F.when(
+            (F.col("cn") > 0) & (F.col("qn") > 0),
+            iscore / (F.sqrt(F.col("cn")) * F.sqrt(F.col("qn"))),
+        ).alias("code_cosine"),
     )
-    cvec = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv")
-    )
-    qvec = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    )
-    rer = (
-        short.join(cvec, "neighbor_id")
-        .join(F.broadcast(qvec), "query_id")
-        .withColumn(
-            "cosine", F.round(cosine(F.col("qv"), F.col("cv")), round_digits)
-        )
-    )
-    return _rank_per_query(rer, k, extra_cols=("score_sq",), rank_type="long")
 
 
 def sq_encode_ivf(
@@ -2471,30 +2433,11 @@ def _sq_gated_scan(
     probe: DataFrame,
     q_codes: DataFrame,
 ) -> DataFrame:
-    """The cell-gated integer-dot scan shared by both IVF-SQ variants:
-    join the cell-tagged code table to the broadcast (query, probed
-    cell, query codes) table ON THE CELL ID — Catalyst prunes every
-    non-probed cell's rows at the join, so the scan fraction is
-    ``Σ probed-cell sizes`` instead of ``|corpus| · |queries|``.  Each
-    neighbor lives in exactly one cell, so no dedup is needed."""
-    q = probe.join(q_codes, "query_id").withColumn(
-        "qn", int_dot(F.col("q_codes"), F.col("q_codes"))
-    )
-    iscore = int_dot(F.col("codes"), F.col("q_codes"))
-    cn = int_dot(F.col("codes"), F.col("codes"))
-    return (
-        codes.join(F.broadcast(q), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            iscore.alias("score_sq"),
-            F.when(
-                (cn > 0) & (F.col("qn") > 0),
-                iscore / (F.sqrt(cn) * F.sqrt(F.col("qn"))),
-            ).alias("code_cosine"),
-        )
-    )
+    """The cell-gated SQ8 stage 1 of both IVF-SQ variants: the
+    cell-tagged code table scanned against each query's probed cells
+    (:func:`_sq_scored` over the (query, probed cell, query codes)
+    table, so the gate is the :func:`_scan` cell join)."""
+    return _sq_scored(codes, probe.join(q_codes, "query_id"))
 
 
 def sq_ivf_topk(
@@ -2529,12 +2472,10 @@ def sq_ivf_topk(
         n_probe,
         id_col,
     )
-    q_codes = sq_encode(queries, mins, maxs, vec_col, id_col).select(
-        F.col("vec_id").alias("query_id"), F.col("codes").alias("q_codes")
-    )
-    scored = _sq_gated_scan(codes, probe, q_codes)
-    return _sq_shortlist_rerank(
-        scored, corpus, queries, k, shortlist, vec_col, id_col, round_digits
+    q_codes = _sq_query_codes(queries, mins, maxs, vec_col, id_col)
+    return _shortlist_rerank(
+        _sq_gated_scan(codes, probe, q_codes), F.col("code_cosine").desc(),
+        ("score_sq",), corpus, queries, k, shortlist, vec_col, id_col, round_digits,
     )
 
 
@@ -2558,21 +2499,16 @@ def pq_anchor_codebooks(
     bit-replayable one."""
     from functools import reduce
 
-    from .dedup import md5_long
-
     u = corpus.select(
         F.col(id_col).alias("vec_id"), unit_vector(F.col(vec_col)).alias("ue")
     )
     # one ACTION for all m selections: each branch is a distributed
-    # partial top-ks (orderBy().limit() — no full sort, no shuffle of
-    # vectors), unioned so the job overhead is paid once; the union
-    # loses per-branch order, so the ≤ m·ks collected rows re-sort
-    # driver-side on their exact integer buckets.
+    # partial top-ks (no shuffle of vectors), unioned so the job
+    # overhead is paid once; the union loses per-branch order, so the
+    # ≤ m·ks collected rows re-sort driver-side on their exact integer
+    # buckets.
     branches = [
-        u.withColumn("_b", md5_long(F.col("vec_id").cast("string"), f"{seed}{s}|"))
-        .orderBy(F.asc("_b"), F.asc("vec_id"))
-        .limit(ks)
-        .select(F.lit(s).alias("s"), "_b", "vec_id", "ue")
+        _md5_sample(u, f"{seed}{s}|", ks).select(F.lit(s).alias("s"), "_b", "vec_id", "ue")
         for s in range(m)
     ]
     rows = sorted(
@@ -2592,6 +2528,21 @@ def pq_anchor_codebooks(
         dsub = dim // m
         books.append([list(r["ue"][s * dsub : (s + 1) * dsub]) for r in mine])
     return books
+
+
+def _md5_sample(df: DataFrame, seed: str, n: int) -> DataFrame:
+    """The ``n`` rows of ``df`` with the smallest ``md5_long(seed ||
+    vec_id)`` bucket ``_b`` (ties → lower ``vec_id``) — the frozen
+    anchor sample every portable quantizer draws and every oracle
+    replays.  A distributed top-n (``orderBy().limit()`` — never a full
+    sort); callers collect exactly ``n`` rows."""
+    from .dedup import md5_long
+
+    return (
+        df.withColumn("_b", md5_long(F.col("vec_id").cast("string"), seed))
+        .orderBy(F.asc("_b"), F.asc("vec_id"))
+        .limit(n)
+    )
 
 
 def _pq_subvectors(
@@ -2650,35 +2601,31 @@ def _pq_code_cols(books, sub) -> list:
     return cols
 
 
-def _pq_adc_rank(cand: DataFrame, k: int, round_digits: int) -> DataFrame:
-    """ADC score + per-query top-k tail over ``(query_id, neighbor_id,
-    codes, lut)`` candidates — shared by the full and the IVF-gated
-    portable scans so the gated path cannot drift from the full path on
-    scoring or tie-break rules (the ``_sq_shortlist_rerank``
-    argument)."""
-    from pyspark.sql.window import Window
+def _pq_adc_rank(codes: DataFrame, luts: DataFrame, k: int, round_digits: int) -> DataFrame:
+    """The portable ADC top-k ``(query_id, neighbor_id, rank BIGINT,
+    adc_score)`` of the full and the IVF-gated frozen scans: 1-based
+    portable codes through the shared :func:`_adc_scored` chain and
+    :func:`_top_per_query` window."""
+    ranked = _top_per_query(
+        _adc_scored(codes, luts, round_digits, code_base=1), F.col("adc_score").desc(), k
+    )
+    return ranked.select(
+        "query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"), "adc_score"
+    )
 
-    score = F.aggregate(
-        F.zip_with(
-            F.col("codes"), F.col("lut"), lambda c, row: F.element_at(row, c)
-        ),
-        F.lit(0.0),
-        lambda a, t: a + t,
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_score"), F.asc("neighbor_id")
-    )
-    return (
-        cand.filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(score, round_digits).alias("adc_score"),
+
+def _double_array_sql(values) -> str:
+    """A float sequence as the SQL text of a DOUBLE array literal; see
+    :func:`_double_array_literal`."""
+    vals = [float(v) for v in values]
+    bad = [v for v in vals if v != v or v in (float("inf"), float("-inf"))]
+    if bad:
+        raise ValueError(
+            f"non-finite value(s) {bad[:3]} in a literal float array — "
+            "NaN/Inf in a codebook/centroid/bound artifact is an "
+            "upstream data bug; filter or repair before freezing"
         )
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adc_score")
-    )
+    return "array(" + ",".join(repr(v) + "D" for v in vals) + ")"
 
 
 def _double_array_literal(values) -> Column:
@@ -2705,32 +2652,14 @@ def _double_array_literal(values) -> Column:
     dots/argmaxes were garbage anyway) — a NaN/Inf in a centroid,
     codebook, or SQ bound is an upstream data bug worth naming at the
     point it enters a frozen artifact."""
-    vals = [float(v) for v in values]
-    bad = [v for v in vals if v != v or v in (float("inf"), float("-inf"))]
-    if bad:
-        raise ValueError(
-            f"non-finite value(s) {bad[:3]} in a literal float array — "
-            "NaN/Inf in a codebook/centroid/bound artifact is an "
-            "upstream data bug; filter or repair before freezing"
-        )
-    return F.expr("array(" + ",".join(repr(v) + "D" for v in vals) + ")")
+    return F.expr(_double_array_sql(values))
 
 
 def _book_literal(book) -> Column:
     """A sub-codebook as an ``array<array<double>>`` literal column —
     one parsed expression per book (see :func:`_double_array_literal`
     for the construction-cost rationale and the non-finite guard)."""
-    rows = []
-    for c in book:
-        vals = [float(w) for w in c]
-        bad = [v for v in vals if v != v or v in (float("inf"), float("-inf"))]
-        if bad:
-            raise ValueError(
-                f"non-finite value(s) {bad[:3]} in a codebook row — "
-                "an upstream data bug; filter or repair before freezing"
-            )
-        rows.append("array(" + ",".join(repr(v) + "D" for v in vals) + ")")
-    return F.expr("array(" + ",".join(rows) + ")")
+    return F.expr("array(" + ",".join(_double_array_sql(c) for c in book) + ")")
 
 
 def _pq_portable_luts(df: DataFrame, books, vec_col: str, id_col: str) -> DataFrame:
@@ -2780,7 +2709,7 @@ def pq_adc_topk_portable(
     books = pq_anchor_codebooks(corpus, m, ks, seed, vec_col, id_col)
     codes = _pq_portable_codes(corpus, books, vec_col, id_col)
     luts = _pq_portable_luts(queries, books, vec_col, id_col)
-    return _pq_adc_rank(codes.crossJoin(F.broadcast(luts)), k, round_digits)
+    return _pq_adc_rank(codes, luts, k, round_digits)
 
 
 def pq_adc_ivf_topk_portable(
@@ -2808,22 +2737,13 @@ def pq_adc_ivf_topk_portable(
     scan was ALLOWED to touch, not just what it returned.  The
     Lloyd-trained composition (:func:`pq_ivf_topk`) stays the quality
     path; recall of this frozen variant is pinned by pytest."""
-    from .dedup import md5_long
-
     # coarse anchors: the k_coarse smallest md5(cell_seed || id) unit
-    # vectors — one distributed top-k, collected bounded.  Cell scores
-    # are centroid_scores (the shared left-fold dot chain), portable by
-    # the same argument as the ADC chain itself.
-    anchors = [
-        list(r["ue"])
-        for r in corpus.select(
-            F.col(id_col).alias("vec_id"), unit_vector(F.col(vec_col)).alias("ue")
-        )
-        .withColumn("_b", md5_long(F.col("vec_id").cast("string"), cell_seed))
-        .orderBy(F.asc("_b"), F.asc("vec_id"))
-        .limit(k_coarse)
-        .collect()
-    ]
+    # vectors.  Cell scores are centroid_scores (the shared left-fold
+    # dot chain), portable by the same argument as the ADC chain itself.
+    units = corpus.select(
+        F.col(id_col).alias("vec_id"), unit_vector(F.col(vec_col)).alias("ue")
+    )
+    anchors = [list(r["ue"]) for r in _md5_sample(units, cell_seed, k_coarse).collect()]
     if not anchors:
         raise ValueError("empty corpus")
 
@@ -2855,8 +2775,7 @@ def pq_adc_ivf_topk_portable(
         q_pre, centroid_scores(F.col("ue"), anchors), n_probe, "vec_id"
     )
     luts = _pq_portable_luts(queries, books, vec_col, id_col)
-    q = F.broadcast(probe.join(luts, "query_id"))
-    return _pq_adc_rank(codes.join(q, "cell"), k, round_digits)
+    return _pq_adc_rank(codes, probe.join(luts, "query_id"), k, round_digits)
 
 
 def sq_anchor_codes(
@@ -2880,16 +2799,8 @@ def sq_anchor_codes(
     (the ``embedding_sq_topk`` portability argument, reused for the
     cell gate).
     """
-    from .dedup import md5_long
-
-    rows = (
-        sq_encode(corpus, mins, maxs, vec_col, id_col)
-        .withColumn("_b", md5_long(F.col("vec_id").cast("string"), seed))
-        .orderBy(F.asc("_b"), F.asc("vec_id"))
-        .limit(k_coarse)
-        .select("codes")
-        .collect()
-    )
+    codes = sq_encode(corpus, mins, maxs, vec_col, id_col)
+    rows = _md5_sample(codes, seed, k_coarse).select("codes").collect()
     anchors = [list(r["codes"]) for r in rows]
     for j, a in enumerate(anchors):
         if not any(a):
@@ -2938,11 +2849,7 @@ def sq_ivf_topk_portable(
     anchors = sq_anchor_codes(corpus, mins, maxs, k_coarse, seed, vec_col, id_col)
     enc = sq_encode(corpus, mins, maxs, vec_col, id_col)
     codes = enc.select(
-        "vec_id",
-        F.array_position(
-            (sc := _anchor_cell_scores(F.col("codes"), anchors)), F.array_max(sc)
-        ).cast("int").alias("cell"),
-        "codes",
+        "vec_id", _cell_from_codes(anchors).alias("cell"), "codes"
     ).repartition("cell")  # IVF index layout + projection barrier (see sq_encode_ivf)
     q_enc = sq_encode(queries, mins, maxs, vec_col, id_col)
     probe = _probe_cells(
@@ -2951,9 +2858,9 @@ def sq_ivf_topk_portable(
     q_codes = q_enc.select(
         F.col("vec_id").alias("query_id"), F.col("codes").alias("q_codes")
     )
-    scored = _sq_gated_scan(codes, probe, q_codes)
-    return _sq_shortlist_rerank(
-        scored, corpus, queries, k, shortlist, vec_col, id_col, round_digits
+    return _shortlist_rerank(
+        _sq_gated_scan(codes, probe, q_codes), F.col("code_cosine").desc(),
+        ("score_sq",), corpus, queries, k, shortlist, vec_col, id_col, round_digits,
     )
 
 
@@ -3458,23 +3365,21 @@ def _bq_scored(
     — a cheap shuffle that moves only the 16-byte signature rows (at
     64 dims) to spread the broadcast-join scan across all cores —
     then streams through the scan; self-matches excluded."""
-    c_sig = bq_signature(corpus, vec_col, id_col).withColumnRenamed(
-        "vec_id", "neighbor_id"
+    c_sig = bq_signature(corpus, vec_col, id_col).repartition(
+        corpus.sparkSession.sparkContext.defaultParallelism
     )
-    q_sig = F.broadcast(
-        bq_signature(queries, vec_col, id_col).select(
-            F.col("vec_id").alias("query_id"), F.col("sig").alias("q_sig")
-        )
+    q_sig = bq_signature(queries, vec_col, id_col).select(
+        F.col("vec_id").alias("query_id"), F.col("sig").alias("q_sig")
     )
-    return (
-        c_sig.repartition(corpus.sparkSession.sparkContext.defaultParallelism)
-        .crossJoin(q_sig)
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            hamming(F.col("sig"), F.col("q_sig")).alias("hamming"),
-        )
+    return _hamming_scored(c_sig, q_sig)
+
+
+def _hamming_scored(c_sig: DataFrame, q_sig: DataFrame) -> DataFrame:
+    """``(query_id, neighbor_id, hamming)`` over the :func:`_scan` of a
+    signature table (``vec_id, [cell,] sig``) against query signatures
+    (``query_id, [cell,] q_sig``) — the flat and the gated BQ scan."""
+    return _scan(c_sig.withColumnRenamed("vec_id", "neighbor_id"), q_sig).select(
+        "query_id", "neighbor_id", hamming(F.col("sig"), F.col("q_sig")).alias("hamming")
     )
 
 
@@ -3491,16 +3396,11 @@ def bq_hamming_topk(
     (ties → lower neighbor id, the repo-wide rule).  The quality
     trade (1 bit/dim vs 8 for SQ8) is measured by the recall pytest,
     not trusted."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("hamming"), F.asc("neighbor_id")
+    ranked = _top_per_query(
+        _bq_scored(corpus, queries, vec_col, id_col), F.col("hamming").asc(), k
     )
-    return (
-        _bq_scored(corpus, queries, vec_col, id_col)
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "hamming")
+    return ranked.select(
+        "query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"), "hamming"
     )
 
 
@@ -3525,50 +3425,10 @@ def bq_topk(
     (map-only) and once more for the tiny shortlist join; every
     whole-collection scan touches 2 BIGINTs per row.  For the scan
     itself to prune too, compose the IVF gate: :func:`bq_ivf_topk`."""
-    return _bq_shortlist_rerank(
-        _bq_scored(corpus, queries, vec_col, id_col),
-        corpus, queries, k, shortlist, vec_col, id_col, round_digits,
+    return _shortlist_rerank(
+        _bq_scored(corpus, queries, vec_col, id_col), F.col("hamming").asc(),
+        ("hamming",), corpus, queries, k, shortlist, vec_col, id_col, round_digits,
     )
-
-
-def _bq_shortlist_rerank(
-    scored: DataFrame,
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    shortlist: int,
-    vec_col: str,
-    id_col: str,
-    round_digits: int,
-) -> DataFrame:
-    """Stage 2 shared by :func:`bq_topk` and :func:`bq_ivf_topk`:
-    integer-Hamming shortlist window, then exact-cosine rerank of the
-    ``|queries| · shortlist`` survivors only (one definition, so the
-    gated scan cannot drift from the full scan on ranking rules)."""
-    from pyspark.sql.window import Window
-
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.asc("hamming"), F.asc("neighbor_id")
-    )
-    short = (
-        scored.withColumn("srank", F.row_number().over(w1))
-        .filter(F.col("srank") <= shortlist)
-        .drop("srank")
-    )
-    cvec = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv")
-    )
-    qvec = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    )
-    rer = (
-        short.join(cvec, "neighbor_id")
-        .join(F.broadcast(qvec), "query_id")
-        .withColumn(
-            "cosine", F.round(cosine(F.col("qv"), F.col("cv")), round_digits)
-        )
-    )
-    return _rank_per_query(rer, k, extra_cols=("hamming",), rank_type="long")
 
 
 def bq_anchor_signatures(
@@ -3585,17 +3445,8 @@ def bq_anchor_signatures(
     at all (argmin of integer popcount distances, ties → lower anchor
     index).  Selection is a distributed top-k (``orderBy().limit()``)
     and the collect is exactly ``k_coarse`` tiny rows."""
-    from .dedup import md5_long
-
-    rows = (
-        bq_signature(corpus, vec_col, id_col)
-        .withColumn("_b", md5_long(F.col("vec_id").cast("string"), seed))
-        .orderBy(F.asc("_b"), F.asc("vec_id"))
-        .limit(k_coarse)
-        .select("sig")
-        .collect()
-    )
-    return [list(r["sig"]) for r in rows]
+    sigs = bq_signature(corpus, vec_col, id_col)
+    return [list(r["sig"]) for r in _md5_sample(sigs, seed, k_coarse).select("sig").collect()]
 
 
 def _anchor_hamming_array(
@@ -3675,17 +3526,9 @@ def bq_ivf_topk(
         ),
         "query_id",
     )
-    scored = (
-        codes.join(F.broadcast(q), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            hamming(F.col("sig"), F.col("q_sig")).alias("hamming"),
-        )
-    )
-    return _bq_shortlist_rerank(
-        scored, corpus, queries, k, shortlist, vec_col, id_col, round_digits
+    return _shortlist_rerank(
+        _hamming_scored(codes, q), F.col("hamming").asc(), ("hamming",),
+        corpus, queries, k, shortlist, vec_col, id_col, round_digits,
     )
 
 
@@ -3723,12 +3566,13 @@ def ann_eval(
     # rule): `exact` is referenced by its own method row AND by truth /
     # top1 / nq inside every one of the five method legs — composed
     # lazily, Catalyst re-expanded the brute-force cosine subtree ~16×
-    # across the union.  The frame is k·|queries| rows, so the
-    # checkpoint is tiny; each method leg now joins a materialized
-    # 500-row table instead of re-running the exact scan.
-    from .checkpoints import tracked_local_checkpoint
-
-    exact, _ = tracked_local_checkpoint(exact)
+    # across the union.  The frame is k·|queries| rows, so it is
+    # collected into a driver-side local relation: one eager job, like
+    # a checkpoint, but no persisted blocks left behind to release.  The
+    # rows go back through Arrow, not as pickled Rows: a Row list
+    # becomes a Python RDD that every one of those references re-reads
+    # through a Python worker (measured +0.9 s at sf0.1).
+    exact = corpus.sparkSession.createDataFrame(exact.toPandas(), exact.schema)
     methods = {
         "exact": exact,
         "sq8": sq_topk(corpus, queries, k=k, shortlist=50),
@@ -3825,8 +3669,6 @@ def bq_asym_topk(
     shared exact-cosine rerank.  How much the asymmetry buys is not
     claimed but measured: ``embedding_ann_eval`` scores this method
     beside symmetric BQ against the exact scan."""
-    from pyspark.sql.window import Window
-
     # Pack AND unpack in one corpus-side projection: the ±1 array (32
     # nested-transform terms per word) materializes once per corpus
     # row on the streamed side of the nested-loop join, instead of
@@ -3836,42 +3678,16 @@ def bq_asym_topk(
     c_pm1 = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         bq_unpack_pm1(_bq_sig_expr(cvec_expr), F.size(cvec_expr)).alias("pm1"),
-    )
-    q_f = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            _as_double(F.col(vec_col)).alias("qv"),
-        )
-    )
-    adot = F.round(dot(F.col("qv"), F.col("pm1")), round_digits)
-    scored = (
-        c_pm1.repartition(corpus.sparkSession.sparkContext.defaultParallelism)
-        .crossJoin(q_f)
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", adot.alias("adot"))
-    )
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.desc("adot"), F.asc("neighbor_id")
-    )
-    short = (
-        scored.withColumn("srank", F.row_number().over(w1))
-        .filter(F.col("srank") <= shortlist)
-        .drop("srank")
-    )
-    cvec = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv")
-    )
-    qvec = queries.select(
+    ).repartition(corpus.sparkSession.sparkContext.defaultParallelism)
+    q_f = queries.select(
         F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
     )
-    rer = (
-        short.join(cvec, "neighbor_id")
-        .join(F.broadcast(qvec), "query_id")
-        .withColumn(
-            "cosine", F.round(cosine(F.col("qv"), F.col("cv")), round_digits)
-        )
+    adot = F.round(dot(F.col("qv"), F.col("pm1")), round_digits)
+    scored = _scan(c_pm1, q_f).select("query_id", "neighbor_id", adot.alias("adot"))
+    return _shortlist_rerank(
+        scored, F.col("adot").desc(), ("adot",),
+        corpus, queries, k, shortlist, vec_col, id_col, round_digits,
     )
-    return _rank_per_query(rer, k, extra_cols=("adot",), rank_type="long")
 
 
 def bq_banded_pairs(

@@ -48,11 +48,12 @@ def register(name: str, oracle: str | None = None):
 # exchange to pay for itself; below this, dimension tables (region,
 # nation, supplier) stay single-task.
 _FAN_OUT_MIN_BYTES = 256 * 1024
-# Spark's file-split constants (spark.sql.files.openCostInBytes /
-# maxPartitionBytes defaults) — used to ESTIMATE the scan's split count
-# from file sizes instead of forcing a DataFrame→RDD conversion per
-# table load (r13 ADVICE: df.rdd.getNumPartitions() cost a measured
-# 40-150 ms of plan analysis + split planning on every load).
+# Spark's file-split defaults (spark.sql.files.openCostInBytes /
+# maxPartitionBytes) — the fallback when the session's own values can't
+# be read; the split count is ESTIMATED from file sizes instead of
+# forcing a DataFrame→RDD conversion per table load (r13 ADVICE:
+# df.rdd.getNumPartitions() cost a measured 40-150 ms of plan analysis
+# + split planning on every load).
 _FAN_OUT_OPEN_COST = 4 * 1024 * 1024
 _FAN_OUT_MAX_SPLIT = 128 * 1024 * 1024
 # Fan-out width is PROPORTIONAL TO INPUT BYTES (r13 verdict #1), one
@@ -84,6 +85,20 @@ def _parquet_bytes(path: str) -> tuple[int, int]:
     return total, n
 
 
+def _file_split_conf(spark: SparkSession) -> tuple[int, int]:
+    """The session's ``(openCostInBytes, maxPartitionBytes)`` in bytes,
+    read from the SQL conf object (``spark.conf.get`` returns size
+    strings such as ``'4194304b'`` or ``'1k'``); Spark's defaults when
+    the session has no JVM-side conf to read."""
+    from py4j.protocol import Py4JError
+
+    try:
+        conf = spark._jsparkSession.sessionState().conf()
+        return int(conf.filesOpenCostInBytes()), int(conf.filesMaxPartitionBytes())
+    except (AttributeError, Py4JError):
+        return _FAN_OUT_OPEN_COST, _FAN_OUT_MAX_SPLIT
+
+
 def _fan_out_thin_scan(df: DataFrame, path: str) -> DataFrame:
     """Repartition a scan that has fewer splits than cores (guide §2 —
     stragglers/idle capacity; §6 — input split size).
@@ -105,10 +120,11 @@ def _fan_out_thin_scan(df: DataFrame, path: str) -> DataFrame:
     ``defaultParallelism`` automatically).
 
     The split count is ESTIMATED from file sizes with Spark's own
-    packing formula (maxSplitBytes = min(maxPartitionBytes,
-    max(openCostInBytes, paddedBytes/cores)); splits ≈ ceil(padded /
-    maxSplitBytes)) instead of probing ``df.rdd`` — same decision on
-    every fixture table, none of the per-load RDD-conversion tax.
+    packing formula over the session's split settings (maxSplitBytes =
+    min(maxPartitionBytes, max(openCostInBytes, paddedBytes/cores));
+    splits ≈ ceil(padded / maxSplitBytes)) instead of probing
+    ``df.rdd`` — same decision on every fixture table, none of the
+    per-load RDD-conversion tax.
     """
     try:
         tbytes, nfiles = _parquet_bytes(path)
@@ -118,10 +134,9 @@ def _fan_out_thin_scan(df: DataFrame, path: str) -> DataFrame:
         return df
     spark = df.sparkSession
     cores = spark.sparkContext.defaultParallelism
-    padded = tbytes + nfiles * _FAN_OUT_OPEN_COST
-    max_split = min(
-        _FAN_OUT_MAX_SPLIT, max(_FAN_OUT_OPEN_COST, padded // max(cores, 1))
-    )
+    open_cost, max_bytes = _file_split_conf(spark)
+    padded = tbytes + nfiles * open_cost
+    max_split = min(max_bytes, max(open_cost, padded // max(cores, 1)))
     est_splits = -(-padded // max_split)
     width = min(cores, max(2, tbytes // _FAN_OUT_SPLIT_BYTES))
     if est_splits >= width:
@@ -2880,6 +2895,67 @@ def doc_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return repetition_stats(_t(spark, sf_dir, "documents"), n=2)
 
 
+def _md5_rank_cte(
+    name: str, salt: str, n: int, src: str = "v", part: str = "", key: str = "vec_id"
+) -> str:
+    """CTE ``name([part,] aid, j)``: the ``n`` rows of ``src`` (per
+    ``part`` group when given) with the smallest md5_long bucket of
+    ``salt || key`` — ``salt`` is a SQL string expression — ties →
+    lower key.  The DuckDB twin of ``similarity._md5_sample``, the
+    anchor sample every frozen-quantizer oracle replays."""
+    by, cols = (f"PARTITION BY {part} ", f"{part}, ") if part else ("", "")
+    return f"""{name} AS (
+  SELECT {cols}aid, j FROM (
+    SELECT {cols}{key} AS aid,
+      ROW_NUMBER() OVER ({by}ORDER BY
+        CAST(('0x' || substr(md5({salt} || CAST({key} AS VARCHAR)), 1, 15)) AS BIGINT) ASC,
+        {key} ASC) AS j
+    FROM {src}) ranked
+  WHERE j <= {n}
+)"""
+
+
+def _rerank_tail(scored: str, order: str, carry: str = "") -> str:
+    """The two-stage ANN oracle tail: each query's 50 best rows of CTE
+    ``scored`` by ``order`` (ties → lower neighbor id), then exact
+    cosine over the full vectors of CTE ``v``, top 5 by the repo-wide
+    4-dp + neighbor-id rule; ``carry`` is the stage-1 score column kept
+    in the output.  The DuckDB twin of ``similarity._shortlist_rerank``."""
+    c = f", {carry}" if carry else ""
+    return f"""short AS (
+  SELECT query_id, neighbor_id{c} FROM (
+    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                                 ORDER BY {order}, neighbor_id ASC) AS srank
+    FROM {scored}) s
+  WHERE srank <= 50
+),
+rer AS (
+  SELECT s.*,
+    round(list_dot_product(q.e, c.e)
+          / (sqrt(list_dot_product(q.e, q.e)) * sqrt(list_dot_product(c.e, c.e))), 4)
+      AS cosine
+  FROM short s
+  JOIN v c ON c.vec_id = s.neighbor_id
+  JOIN v q ON q.vec_id = s.query_id
+)
+SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank{c}, cosine FROM (
+  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                               ORDER BY cosine DESC, neighbor_id ASC) AS rank
+  FROM rer) r
+WHERE rank <= 5
+"""
+
+
+def _md5_anchor_vectors(vecs: DataFrame, seed: str, n: int = 16) -> list:
+    """The ``embedding`` arrays (as doubles) of the ``n`` rows of
+    ``vecs`` with the smallest md5_long(seed || vec_id) — the frozen
+    anchors the ``_md5_rank_cte`` oracles regenerate."""
+    from .operators.similarity import _md5_sample
+
+    e = vecs.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
+    return [r["e"] for r in _md5_sample(e, seed, n).collect()]
+
+
 _TOPK_ORACLE = """
 WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
 q AS (SELECT vec_id, e FROM v WHERE vec_id < 20),
@@ -2916,7 +2992,7 @@ def embedding_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dots) -> exact full-dim rerank of survivors; both stages under the
 # repo-wide 4-dp + neighbor-id rule, so the product hash-checks like
 # the BQ two-stage twin.
-_MRL_TOPK_ORACLE = """
+_MRL_TOPK_ORACLE = f"""
 WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
 q AS (SELECT vec_id, e FROM v WHERE vec_id < 20),
 s1 AS (
@@ -2927,29 +3003,7 @@ s1 AS (
   FROM v c, q
   WHERE c.vec_id <> q.vec_id
 ),
-short AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                 ORDER BY pcos DESC, neighbor_id ASC) AS r
-    FROM s1
-  ) t WHERE r <= 50
-),
-rer AS (
-  SELECT s.query_id, s.neighbor_id,
-    round(list_dot_product(qq.e, cc.e)
-          / (sqrt(list_dot_product(qq.e, qq.e))
-             * sqrt(list_dot_product(cc.e, cc.e))), 4) AS cosine
-  FROM short s
-  JOIN v cc ON cc.vec_id = s.neighbor_id
-  JOIN q qq ON qq.vec_id = s.query_id
-)
-SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, cosine FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM rer
-) ranked
-WHERE rank <= 5
-"""
+{_rerank_tail("s1", "pcos DESC")}"""
 
 
 @register("embedding_matryoshka_topk", _MRL_TOPK_ORACLE)
@@ -3150,17 +3204,11 @@ def embedding_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # its coarse codebook with xxhash64 (engine-local); this twin swaps in
 # the md5-ranked anchor discipline so the SAME shortlist plan — bucket
 # argmax, 4-probe cut, 4-dp cosine rank — hash-checks end to end.
-_ANN_IVF_FROZEN_ORACLE = """
+_ANN_IVF_FROZEN_ORACLE = f"""
 WITH av AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-aanch AS (
-  SELECT j, e AS c FROM (
-    SELECT vec_id, e, ROW_NUMBER() OVER (ORDER BY
-      CAST(('0x' || substr(md5('ivfq|' || CAST(vec_id AS VARCHAR)), 1, 15))
-           AS BIGINT) ASC,
-      vec_id ASC) AS j
-    FROM av) r
-  WHERE j <= 16),
+{_md5_rank_cte("aa", "'ivfq|'", 16, "av")},
+aanch AS (SELECT aa.j, av.e AS c FROM aa JOIN av ON av.vec_id = aa.aid),
 acb AS (
   SELECT vec_id, e, sqrt(list_dot_product(e, e)) AS cnorm, j AS bucket FROM (
     SELECT v.vec_id, v.e, a.j,
@@ -3200,21 +3248,10 @@ def embedding_ann_ivf_frozen(spark: SparkSession, sf_dir: str) -> DataFrame:
     — map-side bucket argmax, broadcast probed queries, per-query
     4-dp-cosine rank — land under the full oracle gate.  The sampled
     form stays registered as the zero-setup default."""
-    from .operators.dedup import md5_long
     from .operators.similarity import ann_topk_ivf
 
     emb = _t(spark, sf_dir, "embeddings")
-    anchors = [
-        r["e"]
-        for r in emb.select(
-            F.col("embedding").cast("array<double>").alias("e"),
-            md5_long(F.col("vec_id").cast("string"), "ivfq|").alias("_r"),
-            "vec_id",
-        )
-        .orderBy(F.asc("_r"), F.asc("vec_id"))
-        .limit(16)
-        .collect()
-    ]
+    anchors = _md5_anchor_vectors(emb, "ivfq|")
     return ann_topk_ivf(
         emb, emb.filter(F.col("vec_id") < 20), k=5, n_probe=4, centroids=anchors
     )
@@ -3251,33 +3288,15 @@ cd AS (
 qd AS (SELECT vec_id AS query_id, i, c FROM cd WHERE vec_id < 20),
 nm AS (SELECT vec_id, CAST(SUM(c * c) AS BIGINT) AS sn FROM cd GROUP BY vec_id)"""
 
-_SQ_TAIL = """short AS (
-  SELECT query_id, neighbor_id, score_sq FROM (
-    SELECT isc.*,
-      ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY
-        CASE WHEN cnm.sn > 0 AND qnm.sn > 0
-             THEN score_sq / (sqrt(cnm.sn) * sqrt(qnm.sn)) END DESC,
-        neighbor_id ASC) AS srank
-    FROM isc
-    JOIN nm cnm ON cnm.vec_id = isc.neighbor_id
-    JOIN nm qnm ON qnm.vec_id = isc.query_id) s
-  WHERE srank <= 50
+_SQ_TAIL = """iscc AS (
+  SELECT isc.*,
+    CASE WHEN cnm.sn > 0 AND qnm.sn > 0
+         THEN score_sq / (sqrt(cnm.sn) * sqrt(qnm.sn)) END AS code_cosine
+  FROM isc
+  JOIN nm cnm ON cnm.vec_id = isc.neighbor_id
+  JOIN nm qnm ON qnm.vec_id = isc.query_id
 ),
-rer AS (
-  SELECT s.query_id, s.neighbor_id, s.score_sq,
-    round(list_dot_product(q.e, c.e)
-          / (sqrt(list_dot_product(q.e, q.e)) * sqrt(list_dot_product(c.e, c.e))), 4)
-      AS cosine
-  FROM short s
-  JOIN v c ON c.vec_id = s.neighbor_id
-  JOIN v q ON q.vec_id = s.query_id
-)
-SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, score_sq, cosine FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM rer) r
-WHERE rank <= 5
-"""
+""" + _rerank_tail("iscc", "code_cosine DESC", "score_sq")
 
 _SQ_TOPK_ORACLE = f"""
 WITH {_SQ_CD_CTES},
@@ -3297,15 +3316,7 @@ isc AS (
 # shortlist, rerank) replays exactly.
 _SQ_IVF_ORACLE = f"""
 WITH {_SQ_CD_CTES},
-a16 AS (
-  SELECT aid, j FROM (
-    SELECT vec_id AS aid,
-      ROW_NUMBER() OVER (ORDER BY
-        CAST(('0x' || substr(md5('sqivf|' || CAST(vec_id AS VARCHAR)), 1, 15)) AS BIGINT) ASC,
-        vec_id ASC) AS j
-    FROM v) ranked
-  WHERE j <= 16
-),
+{_md5_rank_cte("a16", "'sqivf|'", 16)},
 acd AS (SELECT a16.j, cd.i, cd.c FROM cd JOIN a16 ON cd.vec_id = a16.aid),
 an AS (SELECT j, CAST(SUM(c * c) AS BIGINT) AS an FROM acd GROUP BY j),
 cellscore AS (
@@ -3411,7 +3422,7 @@ def embedding_sq_ivf_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 # argmax, per-cell before/added counts) — ONE definition for the
 # growth-report oracle, its streaming twin, and the hot-split
 # maintenance oracle, so the three cannot drift.
-_IVF_ASSIGN_CTES = """v AS (
+_IVF_ASSIGN_CTES = f"""v AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
     CAST(('0x' || substr(md5('ingest|' || CAST(vec_id AS VARCHAR)), 1, 15)) AS BIGINT) % 5 = 0 AS is_new
   FROM embeddings
@@ -3429,15 +3440,7 @@ cd AS (
          ELSE 0 END AS c
   FROM vd JOIN st USING (i)
 ),
-a16 AS (
-  SELECT aid, j FROM (
-    SELECT vec_id AS aid,
-      ROW_NUMBER() OVER (ORDER BY
-        CAST(('0x' || substr(md5('sqivf|' || CAST(vec_id AS VARCHAR)), 1, 15)) AS BIGINT) ASC,
-        vec_id ASC) AS j
-    FROM v WHERE NOT is_new) ranked
-  WHERE j <= 16
-),
+{_md5_rank_cte("a16", "'sqivf|'", 16, "v WHERE NOT is_new")},
 acd AS (SELECT a16.j, cd.i, cd.c FROM cd JOIN a16 ON cd.vec_id = a16.aid),
 an AS (SELECT j, CAST(SUM(c * c) AS BIGINT) AS an FROM acd GROUP BY j),
 cellscore AS (
@@ -3480,15 +3483,7 @@ _IVF_HOT_SPLIT_ORACLE = f"""
 WITH {_IVF_ASSIGN_CTES},
 hot AS (SELECT cell FROM agg, tot WHERE n_added * 16 > 2 * tot.t),
 hotm AS (SELECT c.vec_id, c.cell FROM cells c JOIN hot USING (cell)),
-sanch AS (
-  SELECT cell, aid, j FROM (
-    SELECT hm.cell, hm.vec_id AS aid,
-      ROW_NUMBER() OVER (PARTITION BY hm.cell ORDER BY
-        CAST(('0x' || substr(md5('sqsplit|' || CAST(hm.vec_id AS VARCHAR)), 1, 15)) AS BIGINT) ASC,
-        hm.vec_id ASC) AS j
-    FROM hotm hm) r
-  WHERE j <= 4
-),
+{_md5_rank_cte("sanch", "'sqsplit|'", 4, "hotm", part="cell")},
 scd AS (SELECT s.cell, s.j, cd.i, cd.c FROM sanch s JOIN cd ON cd.vec_id = s.aid),
 san AS (SELECT cell, j, CAST(SUM(c * c) AS BIGINT) AS an FROM scd GROUP BY cell, j),
 subscore AS (
@@ -3719,7 +3714,7 @@ def embedding_ivf_hot_split_kmeans(spark: SparkSession, sf_dir: str) -> DataFram
 # any margin.  The m per-subspace contributions re-assemble through
 # the MAX(CASE)-pivot + explicit fixed-order '+' chain (the BM25
 # trick), never a float SUM aggregate.
-_PQ_PORT_CTES = """v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+_PQ_PORT_CTES = f"""v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
 nrm AS (SELECT vec_id,
     sqrt(list_reduce(list_transform(e, x -> x * x), (a, b) -> a + b)) AS nr
   FROM v),
@@ -3728,16 +3723,7 @@ u AS (
     CASE WHEN nr > 0 THEN list_transform(e, x -> x / nr) ELSE e END AS ue
   FROM v JOIN nrm USING (vec_id)
 ),
-anch AS (
-  SELECT s, j, aid FROM (
-    SELECT ss.s, vec_id AS aid,
-      ROW_NUMBER() OVER (PARTITION BY ss.s ORDER BY
-        CAST(('0x' || substr(md5('pqcb|' || CAST(ss.s AS VARCHAR) || '|'
-              || CAST(vec_id AS VARCHAR)), 1, 15)) AS BIGINT) ASC,
-        vec_id ASC) AS j
-    FROM v, range(8) ss(s)) r
-  WHERE j <= 16
-),
+{_md5_rank_cte("anch", "'pqcb|' || CAST(s AS VARCHAR) || '|'", 16, "v, range(8) ss(s)", part="s")},
 cb AS (
   SELECT a.s, a.j, u.ue[a.s * 8 + 1 : a.s * 8 + 8] AS w
   FROM anch a JOIN u ON u.vec_id = a.aid
@@ -3794,17 +3780,9 @@ contrib AS (
 # the contrib CTE scans only (query probe-cell = corpus cell) pairs.
 _PQ_IVF_PORT_ORACLE = f"""
 WITH {_PQ_PORT_CTES},
-ca AS (
-  SELECT cj, aid FROM (
-    SELECT vec_id AS aid,
-      ROW_NUMBER() OVER (ORDER BY
-        CAST(('0x' || substr(md5('pqivf|' || CAST(vec_id AS VARCHAR)), 1, 15)) AS BIGINT) ASC,
-        vec_id ASC) AS cj
-    FROM v) r
-  WHERE cj <= 16
-),
+{_md5_rank_cte("ca", "'pqivf|'", 16)},
 cellscore AS (
-  SELECT u.vec_id, ca.cj,
+  SELECT u.vec_id, ca.j AS cj,
     list_reduce(list_transform(generate_series(1, 64),
       d -> u.ue[d] * au.ue[d]), (a, b) -> a + b) AS sc
   FROM u, ca JOIN u au ON au.vec_id = ca.aid
@@ -10266,28 +10244,7 @@ ham AS (
 
 # Shared tail: Hamming shortlist of 50, exact-cosine rerank to top 5
 # (4 dp + neighbor-id tie-break — the repo-wide ranking rule).
-_BQ_TAIL = """short AS (
-  SELECT query_id, neighbor_id, hamming FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                 ORDER BY hamming ASC, neighbor_id ASC) AS srank
-    FROM ham) s
-  WHERE srank <= 50
-),
-rer AS (
-  SELECT s.query_id, s.neighbor_id, s.hamming,
-    round(list_dot_product(q.e, c.e)
-          / (sqrt(list_dot_product(q.e, q.e)) * sqrt(list_dot_product(c.e, c.e))), 4)
-      AS cosine
-  FROM short s
-  JOIN v c ON c.vec_id = s.neighbor_id
-  JOIN v q ON q.vec_id = s.query_id
-)
-SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, hamming, cosine FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM rer) r
-WHERE rank <= 5
-"""
+_BQ_TAIL = _rerank_tail("ham", "hamming ASC", "hamming")
 
 _BQ_PORTABLE_ORACLE = f"""
 WITH {_BQ_SIG_CTES}
@@ -10310,15 +10267,7 @@ WITH {_BQ_SIG_CTES},
 # cell, verifying what the gated scan was allowed to touch.
 _BQ_IVF_ORACLE = f"""
 WITH {_BQ_SIG_BASE},
-a16 AS (
-  SELECT aid, j FROM (
-    SELECT vec_id AS aid,
-      ROW_NUMBER() OVER (ORDER BY
-        CAST(('0x' || substr(md5('bqivf|' || CAST(vec_id AS VARCHAR)), 1, 15)) AS BIGINT) ASC,
-        vec_id ASC) AS j
-    FROM v) ranked
-  WHERE j <= 16
-),
+{_md5_rank_cte("a16", "'bqivf|'", 16)},
 asig AS (SELECT a16.j, s.w, s.word FROM sig s JOIN a16 ON s.vec_id = a16.aid),
 celld AS (
   SELECT s.vec_id, a.j, CAST(SUM(bit_count(xor(s.word, a.word))) AS BIGINT) AS d
@@ -10417,28 +10366,7 @@ ascore AS (
   FROM v q, pmv c
   WHERE q.vec_id < 20 AND c.vec_id <> q.vec_id
 ),
-short AS (
-  SELECT query_id, neighbor_id, adot FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                 ORDER BY adot DESC, neighbor_id ASC) AS srank
-    FROM ascore) s
-  WHERE srank <= 50
-),
-rer AS (
-  SELECT s.query_id, s.neighbor_id, s.adot,
-    round(list_dot_product(q.e, c.e)
-          / (sqrt(list_dot_product(q.e, q.e)) * sqrt(list_dot_product(c.e, c.e))), 4)
-      AS cosine
-  FROM short s
-  JOIN v c ON c.vec_id = s.neighbor_id
-  JOIN v q ON q.vec_id = s.query_id
-)
-SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, adot, cosine FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                               ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM rer) r
-WHERE rank <= 5
-"""
+{_rerank_tail("ascore", "adot DESC", "adot")}"""
 
 
 @register("embedding_bq_asym", _BQ_ASYM_ORACLE)
@@ -11215,7 +11143,7 @@ def embedding_semantic_dedup_gated(spark: SparkSession, sf_dir: str) -> DataFram
 # list_transform division — the same left-fold IEEE trees every
 # hash-green cosine oracle already relies on.
 _SEMDEDUP_FROZEN_ORACLE = (
-    """
+    f"""
 WITH sdv AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
   UNION ALL
@@ -11232,16 +11160,7 @@ sdrep AS (
   SELECT vec_id, u, MIN(vec_id) OVER (PARTITION BY u) AS rep_id FROM sdu
 ),
 sdreps AS (SELECT vec_id, u FROM sdrep WHERE vec_id = rep_id),
-sda AS (
-  SELECT aid, j FROM (
-    SELECT vec_id AS aid,
-      ROW_NUMBER() OVER (ORDER BY
-        CAST(('0x' || substr(md5('semf|' || CAST(vec_id AS VARCHAR)), 1, 15))
-             AS BIGINT) ASC,
-        vec_id ASC) AS j
-    FROM embeddings) ranked
-  WHERE j <= 16
-),
+{_md5_rank_cte("sda", "'semf|'", 16, "embeddings")},
 sdav AS (
   SELECT sda.j, CAST(embedding AS DOUBLE[]) AS c
   FROM embeddings JOIN sda ON vec_id = sda.aid
@@ -11324,7 +11243,6 @@ def embedding_semantic_dedup_frozen(spark: SparkSession, sf_dir: str) -> DataFra
     comparable across the two codebooks; the Lloyd variant remains the
     QUALITY path (anchors are a coarse quantizer, not a trained one —
     the ivf_hot_split duality)."""
-    from .operators.dedup import md5_long
     from .operators.similarity import semantic_dedup
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -11333,17 +11251,7 @@ def embedding_semantic_dedup_frozen(spark: SparkSession, sf_dir: str) -> DataFra
             "vec_id", F.col("vec_id") + 100000
         )
     )
-    anchors = [
-        r["e"]
-        for r in emb.select(
-            F.col("embedding").cast("array<double>").alias("e"),
-            md5_long(F.col("vec_id").cast("string"), "semf|").alias("_r"),
-            "vec_id",
-        )
-        .orderBy(F.asc("_r"), F.asc("vec_id"))
-        .limit(16)
-        .collect()
-    ]
+    anchors = _md5_anchor_vectors(emb, "semf|")
     return semantic_dedup(corpus, anchors, threshold=0.999, hamming_gate=16)
 
 
@@ -11553,16 +11461,10 @@ def corpus_build_semantic_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
 # coarse codebook — the hash-checkable anchor discipline — first-argmax
 # bucket assignment, top-4 probes, 4-dp cosine + neighbor-id rank) cut
 # at top-40, feeding the unrolled MMR greedy restricted to that pool.
-_MMR_ANN_SHORTLIST_CTES = """av AS (
+_MMR_ANN_SHORTLIST_CTES = f"""av AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-aanch AS (
-  SELECT j, e AS c FROM (
-    SELECT vec_id, e, ROW_NUMBER() OVER (ORDER BY
-      CAST(('0x' || substr(md5('ivfq|' || CAST(vec_id AS VARCHAR)), 1, 15))
-           AS BIGINT) ASC,
-      vec_id ASC) AS j
-    FROM av) r
-  WHERE j <= 16),
+{_md5_rank_cte("aa", "'ivfq|'", 16, "av")},
+aanch AS (SELECT aa.j, av.e AS c FROM aa JOIN av ON av.vec_id = aa.aid),
 acb AS (
   SELECT vec_id, e, sqrt(list_dot_product(e, e)) AS cnorm, j AS bucket FROM (
     SELECT v.vec_id, v.e, a.j,
@@ -11613,21 +11515,10 @@ def embedding_mmr_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(k·shortlist·dim) regardless of corpus size).  Every stage is
     hash-checked: the bucket argmax, probe cut, 4-dp cosine rank, and
     the full unrolled greedy trajectory replay in the oracle."""
-    from .operators.dedup import md5_long
     from .operators.similarity import ann_topk_ivf, mmr_select
 
     emb = _t(spark, sf_dir, "embeddings")
-    anchors = [
-        r["e"]
-        for r in emb.select(
-            F.col("embedding").cast("array<double>").alias("e"),
-            md5_long(F.col("vec_id").cast("string"), "ivfq|").alias("_r"),
-            "vec_id",
-        )
-        .orderBy(F.asc("_r"), F.asc("vec_id"))
-        .limit(16)
-        .collect()
-    ]
+    anchors = _md5_anchor_vectors(emb, "ivfq|")
     short = ann_topk_ivf(
         emb,
         emb.filter(F.col("vec_id") == 0),
@@ -11653,7 +11544,7 @@ def embedding_mmr_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 # only; the float dots replay via list_dot_product left-folds and are
 # never emitted), the Lloyd member is the quality path (rows-only,
 # iterative training — the ivf_hot_split / semantic_dedup duality).
-_PROTO_PRUNE_ORACLE = """
+_PROTO_PRUNE_ORACLE = f"""
 WITH ppv AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
 ),
@@ -11663,16 +11554,7 @@ ppu AS (
     CASE WHEN nrm > 0 THEN list_transform(e, x -> x / nrm) ELSE e END AS u
   FROM ppn
 ),
-ppa AS (
-  SELECT aid, j FROM (
-    SELECT vec_id AS aid,
-      ROW_NUMBER() OVER (ORDER BY
-        CAST(('0x' || substr(md5('prot|' || CAST(vec_id AS VARCHAR)), 1, 15))
-             AS BIGINT) ASC,
-        vec_id ASC) AS j
-    FROM embeddings) ranked
-  WHERE j <= 16
-),
+{_md5_rank_cte("ppa", "'prot|'", 16, "embeddings")},
 ppav AS (
   SELECT ppa.j, CAST(embedding AS DOUBLE[]) AS c
   FROM embeddings JOIN ppa ON vec_id = ppa.aid
@@ -11711,21 +11593,10 @@ def embedding_prototype_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-copies, pruning removes redundancy that isn't duplication.
     Map-only score/assign against the broadcast codebook + ONE 16-byte
     rank exchange on cell_id; decisions are integers, hash-checked."""
-    from .operators.dedup import md5_long
     from .operators.similarity import prototype_prune
 
     emb = _t(spark, sf_dir, "embeddings")
-    anchors = [
-        r["e"]
-        for r in emb.select(
-            F.col("embedding").cast("array<double>").alias("e"),
-            md5_long(F.col("vec_id").cast("string"), "prot|").alias("_r"),
-            "vec_id",
-        )
-        .orderBy(F.asc("_r"), F.asc("vec_id"))
-        .limit(16)
-        .collect()
-    ]
+    anchors = _md5_anchor_vectors(emb, "prot|")
     return prototype_prune(emb, anchors, prune_frac=0.5)
 
 
@@ -11755,7 +11626,7 @@ def embedding_prototype_prune_kmeans(spark: SparkSession, sf_dir: str) -> DataFr
 # codebook as s/(n·2^24), one IEEE division of exact integers, so the
 # trained decision replays bit-for-bit (float Lloyd's order-dependent
 # double means cannot).
-_PROTO_PRUNE_REFINED_ORACLE = """
+_PROTO_PRUNE_REFINED_ORACLE = f"""
 WITH ppv AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
 ),
@@ -11765,16 +11636,7 @@ ppu AS (
     CASE WHEN nrm > 0 THEN list_transform(e, x -> x / nrm) ELSE e END AS u
   FROM ppn
 ),
-ppa AS (
-  SELECT aid, j FROM (
-    SELECT vec_id AS aid,
-      ROW_NUMBER() OVER (ORDER BY
-        CAST(('0x' || substr(md5('prot|' || CAST(vec_id AS VARCHAR)), 1, 15))
-             AS BIGINT) ASC,
-        vec_id ASC) AS j
-    FROM embeddings) ranked
-  WHERE j <= 16
-),
+{_md5_rank_cte("ppa", "'prot|'", 16, "embeddings")},
 ppav AS (
   SELECT ppa.j, CAST(embedding AS DOUBLE[]) AS c
   FROM embeddings JOIN ppa ON vec_id = ppa.aid
@@ -11855,21 +11717,10 @@ def embedding_prototype_prune_refined(spark: SparkSession, sf_dir: str) -> DataF
     as the frozen form, so the effect of ONE training step on the
     per-cell quotas is directly measurable between the two green
     registrations."""
-    from .operators.dedup import md5_long
     from .operators.similarity import prototype_prune_refined
 
     emb = _t(spark, sf_dir, "embeddings")
-    anchors = [
-        r["e"]
-        for r in emb.select(
-            F.col("embedding").cast("array<double>").alias("e"),
-            md5_long(F.col("vec_id").cast("string"), "prot|").alias("_r"),
-            "vec_id",
-        )
-        .orderBy(F.asc("_r"), F.asc("vec_id"))
-        .limit(16)
-        .collect()
-    ]
+    anchors = _md5_anchor_vectors(emb, "prot|")
     return prototype_prune_refined(emb, anchors, prune_frac=0.5)
 
 
@@ -11887,21 +11738,10 @@ def embedding_kmeans_ivf_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer sum, one IEEE division.  Size skew and coherence ranking
     are the same signals the float profile reports; the float form
     remains the quality path."""
-    from .operators.dedup import md5_long
     from .operators.similarity import ivf_cluster_profile_quantized
 
     emb = _t(spark, sf_dir, "embeddings")
-    anchors = [
-        r["e"]
-        for r in emb.select(
-            F.col("embedding").cast("array<double>").alias("e"),
-            md5_long(F.col("vec_id").cast("string"), "prot|").alias("_r"),
-            "vec_id",
-        )
-        .orderBy(F.asc("_r"), F.asc("vec_id"))
-        .limit(16)
-        .collect()
-    ]
+    anchors = _md5_anchor_vectors(emb, "prot|")
     return ivf_cluster_profile_quantized(emb, anchors)
 
 
@@ -11958,16 +11798,7 @@ tun AS (
     CASE WHEN nrm > 0 THEN list_transform(e, x -> x / nrm) ELSE e END AS u
   FROM tnrm
 ),
-tanch AS (
-  SELECT aid, j FROM (
-    SELECT doc_id AS aid,
-      ROW_NUMBER() OVER (ORDER BY
-        CAST(('0x' || substr(md5('topic|' || CAST(doc_id AS VARCHAR)), 1, 15))
-             AS BIGINT) ASC,
-        doc_id ASC) AS j
-    FROM dvec) ranked
-  WHERE j <= 8
-),
+{_md5_rank_cte("tanch", "'topic|'", 8, "dvec", key="doc_id")},
 tav AS (
   SELECT tanch.j, dvec.e AS c FROM dvec JOIN tanch ON dvec.doc_id = tanch.aid
 ),
@@ -12019,24 +11850,13 @@ def doc_topic_clusters_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster profile.  The text → vector → trained-cluster-report
     workflow lands under the full oracle gate; the ln/float-Lloyd
     registration stays as the quality path."""
-    from .operators.dedup import md5_long
     from .operators.similarity import ivf_cluster_profile_quantized
     from .operators.text_analysis import tfidf_vectors
 
     vecs = tfidf_vectors(
         _t(spark, sf_dir, "documents"), vocab_size=64, weight="mitchell"
     ).withColumnRenamed("doc_id", "vec_id")
-    anchors = [
-        r["e"]
-        for r in vecs.select(
-            F.col("embedding").alias("e"),
-            md5_long(F.col("vec_id").cast("string"), "topic|").alias("_r"),
-            "vec_id",
-        )
-        .orderBy(F.asc("_r"), F.asc("vec_id"))
-        .limit(8)
-        .collect()
-    ]
+    anchors = _md5_anchor_vectors(vecs, "topic|", 8)
     return ivf_cluster_profile_quantized(vecs, anchors)
 
 
