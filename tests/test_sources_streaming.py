@@ -1987,6 +1987,7 @@ class TestAudioIngest:
     @staticmethod
     def _handler(state):
         from textract_farmdata_pipeline_spark.operators.multimodal import (
+            _AUDIO_LAYOUT,
             attach_media,
             audio_fingerprint,
         )
@@ -1999,7 +2000,7 @@ class TestAudioIngest:
             fp = audio_fingerprint(media.where(F.length("media") >= 264))
             return fp.select("doc_id", F.array(F.col("fp")).alias("sig"))
 
-        return _sig_process_batch(state, hash_fn, 3, 8)
+        return _sig_process_batch(state, hash_fn, _AUDIO_LAYOUT, 3, 8)
 
     def test_gate_twins_and_replay(self, spark, tmp_path):
         from textract_farmdata_pipeline_spark.operators.merge import (

@@ -116,7 +116,8 @@ def hash_sample(
     matter when a sample defines a training corpus.  Pure filter: no
     shuffle, pushes down past column pruning.
     """
-    assert 0.0 <= fraction <= 1.0
+    if not 0.0 <= fraction <= 1.0:
+        raise ValueError(f"fraction must be in [0, 1], got {fraction}")
     return df.filter(md5_bucket(F.col(key_col), 1_000_000, seed) < int(fraction * 1_000_000))
 
 

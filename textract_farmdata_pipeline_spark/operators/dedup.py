@@ -563,7 +563,8 @@ def simhash_near_dup_pairs(
     candidate join is an equi-join on (band, chunk) — never an all-pairs
     XOR scan.  Candidates then verify with one popcount each.
     """
-    assert max_hamming < n_bands, "pigeonhole guarantee needs max_hamming < n_bands"
+    if not max_hamming < n_bands:
+        raise ValueError("pigeonhole guarantee needs max_hamming < n_bands")
     bits_per = SIMHASH_BITS // n_bands
     mask = (1 << bits_per) - 1
     sh = simhash(docs, hash_family=hash_family)

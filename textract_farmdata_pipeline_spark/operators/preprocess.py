@@ -89,7 +89,8 @@ def dataset_split(
     and every rerun puts a given id in the same split — the property
     that keeps eval sets uncontaminated as the corpus grows.
     """
-    assert sum(weights) == 100
+    if sum(weights) != 100:
+        raise ValueError(f"weights must sum to 100, got {sum(weights)}")
     bucket = F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10).cast(
         "long"
     ) % 100
@@ -114,7 +115,8 @@ def chunk_tokens(
     when short.  One codegen'd expression per row, then an explode —
     chunk parallelism is row parallelism, no Python.
     """
-    assert 0 <= overlap < chunk_size
+    if not 0 <= overlap < chunk_size:
+        raise ValueError(f"need 0 <= overlap < chunk_size, got {overlap}, {chunk_size}")
     stride = chunk_size - overlap
     toks = F.split(F.col(text_col), " ")
     n = F.size(toks)

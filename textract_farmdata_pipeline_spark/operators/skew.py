@@ -32,7 +32,8 @@ def salted_join(
     Salt assignment hashes the whole left row (deterministic, and
     spreads even rows that are identical on the join key).
     """
-    assert how in ("inner", "left", "left_semi"), "salting breaks right/outer semantics"
+    if how not in ("inner", "left", "left_semi"):
+        raise ValueError("salting breaks right/outer semantics")
     on = list(on)
     spread = F.pmod(F.xxhash64(*[F.col(c) for c in left.columns]), F.lit(salt))
     l = left.withColumn("_salt", spread)

@@ -1607,8 +1607,10 @@ def _force_materialized(sql: str) -> str:
     predecessor TWICE, so an inlined 4-round chain re-evaluates the
     whole md5-shingle scaffold ~2⁴ times per component graph (measured
     on ``doc_split_incremental``'s oracle: 500 s inlined → 0.4 s
-    materialized at sf0.01).  Only oracles with an unrolled fixpoint
-    need this; single-pass chains stay default.
+    materialized at sf0.01).  Only oracles with an unrolled fixpoint,
+    or a chain that reads one CTE from several branches (the media
+    near-dup pair tail: ~7× at sf0.1), need this; the rest stay
+    default.
 
     The rewrite only fires where a CTE definition can legally start —
     right after ``WITH`` or after a top-level ``,\\n`` separator (every
@@ -8237,13 +8239,55 @@ def multimodal_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return audio_windows(attach_media(_t(spark, sf_dir, "documents")), window_bytes=256)
 
 
-# dHash perceptual hashing — shared ss-style CTE chain for the hash
-# table and the banded near-dup pairs.  The strided resample replays
-# the resize_image index math (the _IMAGE_RESIZE_ORACLE discipline),
-# the gradient/packing is pure integer, and the pairs stage reuses the
-# BQ gate's chunk arithmetic verbatim — all ANSI-replayable.  The
-# dhsrc CTE is provided by each query (plain corpus vs planted twins).
-_DHASH_CTES = """
+# Media near-dup oracle templates — the SQL twin of the one near-dup
+# kernel in operators/multimodal.py.  A signature CTE has one row per
+# (doc_id, frame fi) with its packed 32-bit words as columns; the
+# distance is the MAX over aligned frames of the per-frame XOR-popcount
+# and banding uses frame 0, so image (1 frame x 2 words), audio (1 x 1)
+# and video (4 x 2) run the same pair tail and admission rounds.  Every
+# step is integer and the 8-bit pigeonhole gates capture exactly, so
+# the whole chain is ANSI-replayable.
+_DHASH_WORDS = ("w0", "w1")
+
+
+def _with_twins_sql(where: str = "doc_id < 50") -> str:
+    """The documents plus planted near-dups: a same-length twin of each
+    ``where`` document with its first character overwritten (id +
+    100001) — perturbs at most two dHash gradient bits, and only
+    audio window 0.  The SQL side of :func:`_planted_twins`."""
+    return f"""
+    SELECT doc_id, text FROM documents
+    UNION ALL
+    SELECT doc_id + 100001 AS doc_id, '~' || substr(text, 2) AS text
+    FROM documents WHERE {where}"""
+
+
+def _planted_twins(docs: DataFrame) -> DataFrame:
+    """The twins of :func:`_with_twins_sql` (``doc_id < 50``) for the
+    registrations to union into their corpus."""
+    return docs.filter(F.col("doc_id") < 50).select(
+        (F.col("doc_id") + 100001).alias("doc_id"),
+        F.concat(F.lit("~"), F.expr("substring(text, 2)")).alias("text"),
+    )
+
+
+def _dhash_sig_ctes(src: str, n_frames: int = 1) -> str:
+    """``dhsig(doc_id, fi, w0, w1)`` over the ``(doc_id, text)`` rows of
+    ``src``: each text splits into ``n_frames`` evenly-spaced frames
+    (the frame_sample slicing; one frame is the whole text), every
+    frame runs the dHash chain under the composite id ``doc_id *
+    n_frames + fi``, and the words pivot to one row per frame.  The
+    strided resample replays the resize_image index math and the
+    gradient/packing is pure integer."""
+    return f"""dhsrc AS (
+  SELECT doc_id * {n_frames} + u.i AS doc_id,
+    substr(text, CAST(u.i * step + 1 AS INT), CAST(step AS INT)) AS text,
+    length(substr(text, CAST(u.i * step + 1 AS INT), CAST(step AS INT))) AS n
+  FROM (
+    SELECT doc_id, text, greatest(length(text) // {n_frames}, 1) AS step
+    FROM ({src}) v
+  ) f, LATERAL unnest(generate_series(0, {n_frames - 1})) AS u(i)
+),
 dhpx AS (
   SELECT doc_id, k,
     ascii(substr(text,
@@ -8266,11 +8310,126 @@ dhwords AS (
   SELECT doc_id, u.w, CAST(0 AS BIGINT) AS word
   FROM dhsrc, LATERAL unnest(generate_series(0, 1)) AS u(w)
   WHERE n = 0
+),
+dhsig AS (
+  SELECT doc_id // {n_frames} AS doc_id, CAST(doc_id % {n_frames} AS INT) AS fi,
+    MAX(CASE WHEN w = 0 THEN word END) AS w0,
+    MAX(CASE WHEN w = 1 THEN word END) AS w1
+  FROM dhwords GROUP BY doc_id
 )"""
 
+
+def _xor_popcount(a: str, b: str, words: tuple[str, ...]) -> str:
+    """One frame's Hamming distance between rows ``a`` and ``b``."""
+    return " + ".join(f"bit_count(xor({a}.{w}, {b}.{w}))" for w in words)
+
+
+def _band_cte(name: str, src: str, words: tuple[str, ...]) -> str:
+    """Pigeonhole ``(doc_id, band, chunk)`` rows over frame 0 of
+    ``src``: four 8-bit chunks per 32-bit word (sig_chunk_bands at
+    ``chunk_bits = 8``)."""
+    word = " ".join(f"WHEN {i} THEN {w}" for i, w in enumerate(words))
+    return f"""{name} AS (
+  SELECT doc_id, CAST(t.b AS INT) AS band,
+    ((CASE t.b // 4 {word} END)
+     // (1::BIGINT << CAST((t.b % 4) * 8 AS INT))) % 256 AS chunk
+  FROM {src}, UNNEST(generate_series(0, {4 * len(words) - 1})) AS t(b)
+  WHERE fi = 0
+)"""
+
+
+def _near_dup_pair_ctes(sig: str, words: tuple[str, ...], radius: int) -> str:
+    """The pair tail over signature CTE ``sig``, ending in
+    ``ndpairs(id_a, id_b, hamming)``: identical signature vectors
+    collapse to their min-id rep, reps band on frame 0, candidates
+    verify by the frame-MAX Hamming ``<= radius``, and verified rep
+    pairs expand back to members (within-group pairs at Hamming 0) —
+    the twin of ``_sig_rep_pairs`` + ``_expand_member_pairs``."""
+    canon = " || ',' || ".join(f"CAST({w} AS VARCHAR)" for w in words)
+    return f"""ndvec AS (
+  SELECT doc_id, string_agg({canon}, '|' ORDER BY fi) AS vs
+  FROM {sig} GROUP BY doc_id
+),
+ndrep AS (
+  SELECT doc_id, MIN(doc_id) OVER (PARTITION BY vs) AS rep_id FROM ndvec
+),
+ndreps AS (
+  SELECT s.* FROM {sig} s
+  JOIN ndrep r ON r.doc_id = s.doc_id AND r.doc_id = r.rep_id
+),
+{_band_cte("ndbands", "ndreps", words)},
+ndcand AS (
+  SELECT DISTINCT x.doc_id AS ra, y.doc_id AS rb
+  FROM ndbands x JOIN ndbands y
+    ON x.band = y.band AND x.chunk = y.chunk AND x.doc_id < y.doc_id
+),
+ndrp AS (
+  SELECT ra, rb, hamming FROM (
+    SELECT c.ra, c.rb,
+      CAST(MAX({_xor_popcount("a", "b", words)}) AS BIGINT) AS hamming
+    FROM ndcand c
+    JOIN ndreps a ON a.doc_id = c.ra
+    JOIN ndreps b ON b.doc_id = c.rb AND b.fi = a.fi
+    GROUP BY c.ra, c.rb
+  ) s WHERE hamming <= {radius}
+),
+ndpairs AS (
+  SELECT LEAST(ma.doc_id, mb.doc_id) AS id_a,
+         GREATEST(ma.doc_id, mb.doc_id) AS id_b, p.hamming
+  FROM ndrp p
+  JOIN ndrep ma ON ma.rep_id = p.ra
+  JOIN ndrep mb ON mb.rep_id = p.rb
+  UNION ALL
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(0 AS BIGINT) AS hamming
+  FROM ndrep a JOIN ndrep b ON a.rep_id = b.rep_id AND a.doc_id < b.doc_id
+)"""
+
+
+def _admission_ctes(sig: str, words: tuple[str, ...], radius: int) -> str:
+    """The 4-batch replay of the signature stream handlers over ``sig``,
+    ending in ``adlog(doc_id, dup_of)``: batch ``doc_id % 4 = k`` docs
+    take the MIN admitted earlier doc within frame-MAX Hamming
+    ``radius``, and non-matches join the admitted set.  Banding is
+    left out: the gates capture exactly, so it never changes a
+    decision (see replay_dhash_batches)."""
+    cols = ", ".join(words)
+    rounds = "".join(
+        f""",
+adm{k} AS (
+  SELECT b.doc_id, m.dup_of
+  FROM (SELECT DISTINCT doc_id FROM adb WHERE b = {k}) b
+  LEFT JOIN (
+    SELECT doc_id, MIN(sid) AS dup_of FROM (
+      SELECT x.doc_id, s.doc_id AS sid,
+        MAX({_xor_popcount("x", "s", words)}) AS mh
+      FROM adb x JOIN ads{k - 1} s ON s.fi = x.fi
+      WHERE x.b = {k}
+      GROUP BY x.doc_id, s.doc_id
+    ) p WHERE mh <= {radius} GROUP BY doc_id
+  ) m USING (doc_id)
+),
+ads{k} AS (
+  SELECT doc_id, fi, {cols} FROM ads{k - 1}
+  UNION ALL
+  SELECT h.doc_id, h.fi, {", ".join(f"h.{w}" for w in words)} FROM adb h
+  JOIN adm{k} m ON m.doc_id = h.doc_id AND m.dup_of IS NULL
+)"""
+        for k in (1, 2, 3)
+    )
+    return f"""adb AS (SELECT doc_id, fi, {cols}, doc_id % 4 AS b FROM {sig}),
+ads0 AS (SELECT doc_id, fi, {cols} FROM adb WHERE b = 0){rounds},
+adlog AS (
+  SELECT DISTINCT doc_id, CAST(NULL AS BIGINT) AS dup_of FROM adb WHERE b = 0
+  UNION ALL SELECT doc_id, dup_of FROM adm1
+  UNION ALL SELECT doc_id, dup_of FROM adm2
+  UNION ALL SELECT doc_id, dup_of FROM adm3
+)"""
+
+
+_ADMISSION_SELECT = "SELECT doc_id, dup_of, dup_of IS NULL AS is_new FROM adlog"
+
 _IMAGE_DHASH_ORACLE = f"""
-WITH dhsrc AS (SELECT doc_id, text, length(text) AS n FROM documents),
-{_DHASH_CTES}
+WITH {_dhash_sig_ctes("SELECT doc_id, text FROM documents")}
 SELECT doc_id, CAST(w AS BIGINT) AS w, word FROM dhwords
 """
 
@@ -8292,58 +8451,13 @@ def multimodal_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", F.col("w").cast("long").alias("w"), "word")
 
 
-_DHASH_PAIRS_ORACLE = f"""
-WITH dhsrc AS (
-  SELECT doc_id, text, length(text) AS n FROM (
-    SELECT doc_id, text FROM documents
-    UNION ALL
-    SELECT doc_id + 100001 AS doc_id, '~' || substr(text, 2) AS text
-    FROM documents WHERE doc_id < 50
-  ) u
-),
-{_DHASH_CTES},
-dhsig AS (
-  SELECT doc_id,
-    MAX(CASE WHEN w = 0 THEN word END) AS w0,
-    MAX(CASE WHEN w = 1 THEN word END) AS w1
-  FROM dhwords GROUP BY doc_id
-),
-dhrep AS (
-  SELECT doc_id, w0, w1,
-    MIN(doc_id) OVER (PARTITION BY w0, w1) AS rep_id
-  FROM dhsig
-),
-dhreps AS (SELECT doc_id, w0, w1 FROM dhrep WHERE doc_id = rep_id),
-dhchunks AS (
-  SELECT doc_id, CAST(t.b AS INT) AS band,
-    ((CASE WHEN t.b < 4 THEN w0 ELSE w1 END)
-     // (1::BIGINT << CAST((t.b % 4) * 8 AS INT))) % 256 AS chunk
-  FROM dhreps, UNNEST(generate_series(0, 7)) AS t(b)
-),
-dhcand AS (
-  SELECT DISTINCT x.doc_id AS ra, y.doc_id AS rb
-  FROM dhchunks x JOIN dhchunks y
-    ON x.band = y.band AND x.chunk = y.chunk AND x.doc_id < y.doc_id
-),
-dhrp AS (
-  SELECT ra, rb, hamming FROM (
-    SELECT c.ra, c.rb,
-      CAST(bit_count(xor(a.w0, b.w0)) + bit_count(xor(a.w1, b.w1)) AS BIGINT)
-        AS hamming
-    FROM dhcand c
-    JOIN dhreps a ON a.doc_id = c.ra
-    JOIN dhreps b ON b.doc_id = c.rb
-  ) s WHERE hamming <= 7
-)
-SELECT LEAST(ma.doc_id, mb.doc_id) AS id_a,
-       GREATEST(ma.doc_id, mb.doc_id) AS id_b, p.hamming
-FROM dhrp p
-JOIN dhrep ma ON ma.rep_id = p.ra
-JOIN dhrep mb ON mb.rep_id = p.rb
-UNION ALL
-SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(0 AS BIGINT) AS hamming
-FROM dhrep a JOIN dhrep b ON a.rep_id = b.rep_id AND a.doc_id < b.doc_id
+_DHASH_PAIRS_ORACLE = _force_materialized(
+    f"""
+WITH {_dhash_sig_ctes(_with_twins_sql())},
+{_near_dup_pair_ctes("dhsig", _DHASH_WORDS, 7)}
+SELECT id_a, id_b, hamming FROM ndpairs
 """
+)
 
 
 @register("multimodal_dhash_pairs", _DHASH_PAIRS_ORACLE)
@@ -8364,36 +8478,24 @@ def multimodal_dhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.multimodal import attach_media, dhash_pairs
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    twins = docs.filter(F.col("doc_id") < 50).select(
-        (F.col("doc_id") + 100001).alias("doc_id"),
-        F.concat(F.lit("~"), F.expr("substring(text, 2)")).alias("text"),
-    )
     return dhash_pairs(
-        attach_media(docs.unionByName(twins)), max_hamming=7, chunk_bits=8
+        attach_media(docs.unionByName(_planted_twins(docs))),
+        max_hamming=7,
+        chunk_bits=8,
     )
 
 
-# The clusters product shares the pairs oracle's whole chain; edges are
-# the expanded pair set, labels are 4 unrolled min-label rounds with
-# the 5th-round diameter guard ('dc'-prefixed — the _PCC_ROUND rule).
-_DHASH_CLUSTERS_ORACLE = (
-    _DHASH_PAIRS_ORACLE.replace(
-        ") s WHERE hamming <= 7\n)\nSELECT LEAST(ma.doc_id",
-        """) s WHERE hamming <= 7
-),
-dhpr AS (
-SELECT LEAST(ma.doc_id""",
-        1,
-    ).replace(
-        "FROM dhrep a JOIN dhrep b ON a.rep_id = b.rep_id AND a.doc_id < b.doc_id\n",
-        "FROM dhrep a JOIN dhrep b ON a.rep_id = b.rep_id AND a.doc_id < b.doc_id\n),\n",
-        1,
-    )
-    + """
+# The clusters product is the pairs chain plus 4 unrolled min-label
+# rounds over the pair edges and the 5th-round diameter guard
+# ('dc'-prefixed — the _PCC_ROUND rule).
+_DHASH_CLUSTERS_ORACLE = _force_materialized(
+    f"""
+WITH {_dhash_sig_ctes(_with_twins_sql())},
+{_near_dup_pair_ctes("dhsig", _DHASH_WORDS, 7)},
 dce AS (
-  SELECT id_a AS src, id_b AS dst FROM dhpr
+  SELECT id_a AS src, id_b AS dst FROM ndpairs
   UNION ALL
-  SELECT id_b AS src, id_a AS dst FROM dhpr
+  SELECT id_b AS src, id_a AS dst FROM ndpairs
 ),
 dcl0 AS (SELECT DISTINCT src AS node, src AS label FROM dce)"""
     + "".join(
@@ -8409,11 +8511,10 @@ SELECT s.doc_id,
   COALESCE(l.label, s.doc_id) = s.doc_id AS keep,
   CASE WHEN COALESCE(l.label, s.doc_id) <> s.doc_id
        THEN CAST(l.label AS BIGINT) END AS dup_of
-FROM dhsrc s LEFT JOIN dcl4 l ON l.node = s.doc_id
+FROM dhsig s LEFT JOIN dcl4 l ON l.node = s.doc_id
 WHERE (SELECT n_moved FROM dcfix) = 0
 """
 )
-_DHASH_CLUSTERS_ORACLE = _force_materialized(_DHASH_CLUSTERS_ORACLE)
 
 
 @register("multimodal_dhash_clusters", _DHASH_CLUSTERS_ORACLE)
@@ -8429,31 +8530,15 @@ def multimodal_dhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.multimodal import attach_media, dhash_clusters
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    twins = docs.filter(F.col("doc_id") < 50).select(
-        (F.col("doc_id") + 100001).alias("doc_id"),
-        F.concat(F.lit("~"), F.expr("substring(text, 2)")).alias("text"),
-    )
     return dhash_clusters(
-        attach_media(docs.unionByName(twins)), max_hamming=7, chunk_bits=8
+        attach_media(docs.unionByName(_planted_twins(docs))),
+        max_hamming=7,
+        chunk_bits=8,
     )
 
 
 _DHASH_INCR_ORACLE = f"""
-WITH dhsrc AS (
-  SELECT doc_id, text, length(text) AS n FROM (
-    SELECT doc_id, text FROM documents
-    UNION ALL
-    SELECT doc_id + 100001 AS doc_id, '~' || substr(text, 2) AS text
-    FROM documents WHERE doc_id % 5 <> 0 AND doc_id < 50
-  ) u
-),
-{_DHASH_CTES},
-dhsig AS (
-  SELECT doc_id,
-    MAX(CASE WHEN w = 0 THEN word END) AS w0,
-    MAX(CASE WHEN w = 1 THEN word END) AS w1
-  FROM dhwords GROUP BY doc_id
-),
+WITH {_dhash_sig_ctes(_with_twins_sql("doc_id % 5 <> 0 AND doc_id < 50"))},
 dib AS (
   SELECT * FROM dhsig
   WHERE (doc_id % 5 = 0 AND doc_id <= 100000) OR doc_id > 100000
@@ -8461,18 +8546,8 @@ dib AS (
 dis AS (
   SELECT * FROM dhsig WHERE doc_id % 5 <> 0 AND doc_id <= 100000
 ),
-dibc AS (
-  SELECT doc_id, CAST(t.b AS INT) AS band,
-    ((CASE WHEN t.b < 4 THEN w0 ELSE w1 END)
-     // (1::BIGINT << CAST((t.b % 4) * 8 AS INT))) % 256 AS chunk
-  FROM dib, UNNEST(generate_series(0, 7)) AS t(b)
-),
-disc AS (
-  SELECT doc_id, CAST(t.b AS INT) AS band,
-    ((CASE WHEN t.b < 4 THEN w0 ELSE w1 END)
-     // (1::BIGINT << CAST((t.b % 4) * 8 AS INT))) % 256 AS chunk
-  FROM dis, UNNEST(generate_series(0, 7)) AS t(b)
-),
+{_band_cte("dibc", "dib", _DHASH_WORDS)},
+{_band_cte("disc", "dis", _DHASH_WORDS)},
 dicand AS (
   SELECT DISTINCT x.doc_id AS bid, y.doc_id AS sid
   FROM dibc x JOIN disc y ON x.band = y.band AND x.chunk = y.chunk
@@ -8482,7 +8557,7 @@ diver AS (
   FROM dicand c
   JOIN dib b ON b.doc_id = c.bid
   JOIN dis s ON s.doc_id = c.sid
-  WHERE bit_count(xor(b.w0, s.w0)) + bit_count(xor(b.w1, s.w1)) <= 7
+  WHERE {_xor_popcount("b", "s", _DHASH_WORDS)} <= 7
   GROUP BY c.bid
 )
 SELECT b.doc_id, v.dup_of, v.dup_of IS NULL AS is_new
@@ -8502,6 +8577,7 @@ def multimodal_dhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     never self-joins.  Each batch doc reports its minimum radius-7
     corpus match or ``is_new``.  Every stage is integer, so the
     incremental decisions hash-check end to end."""
+    from .operators.checkpoints import tracked_local_checkpoint
     from .operators.multimodal import (
         attach_media,
         image_dhash,
@@ -8510,13 +8586,9 @@ def multimodal_dhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     corpus = docs.filter(F.col("doc_id") % 5 != 0)
-    twins = corpus.filter(F.col("doc_id") < 50).select(
-        (F.col("doc_id") + 100001).alias("doc_id"),
-        F.concat(F.lit("~"), F.expr("substring(text, 2)")).alias("text"),
+    batch = docs.filter(F.col("doc_id") % 5 == 0).unionByName(
+        _planted_twins(corpus)
     )
-    batch = docs.filter(F.col("doc_id") % 5 == 0).unionByName(twins)
-    from .operators.checkpoints import tracked_local_checkpoint
-
     # In production `stored` IS a materialized table; the local
     # stand-in stages the corpus hash so the batch decision consumes a
     # 16-byte/row scan, not a re-runnable mapInPandas lineage — the
@@ -8527,59 +8599,13 @@ def multimodal_dhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dhash_admit_round(k: int) -> str:
-    """One unrolled admission round: batch-``k`` docs take the MIN
-    radius-7 match among admitted earlier docs; non-matches join the
-    admitted set.  Pure integer SQL — composable because the 8-chunk/
-    radius-7 gate's capture is EXACT, so banding never changes the
-    decision (see replay_dhash_batches)."""
-    return f""",
-dm{k} AS (
-  SELECT x.doc_id, MIN(s.doc_id) AS dup_of
-  FROM dhb x LEFT JOIN dad{k - 1} s
-    ON bit_count(xor(x.w0, s.w0)) + bit_count(xor(x.w1, s.w1)) <= 7
-  WHERE x.b = {k} GROUP BY x.doc_id
-),
-dad{k} AS (
-  SELECT doc_id, w0, w1 FROM dad{k - 1}
-  UNION ALL
-  SELECT h.doc_id, h.w0, h.w1 FROM dhb h
-  JOIN dm{k} m ON m.doc_id = h.doc_id AND m.dup_of IS NULL
-)"""
-
-
-_DHASH_STREAM_ORACLE = (
+_DHASH_STREAM_ORACLE = _force_materialized(
     f"""
-WITH dhsrc AS (
-  SELECT doc_id, text, length(text) AS n FROM (
-    SELECT doc_id, text FROM documents
-    UNION ALL
-    SELECT doc_id + 100001 AS doc_id, '~' || substr(text, 2) AS text
-    FROM documents WHERE doc_id < 50
-  ) u
-),
-{_DHASH_CTES},
-dhsig AS (
-  SELECT doc_id,
-    MAX(CASE WHEN w = 0 THEN word END) AS w0,
-    MAX(CASE WHEN w = 1 THEN word END) AS w1
-  FROM dhwords GROUP BY doc_id
-),
-dhb AS (SELECT doc_id, w0, w1, doc_id % 4 AS b FROM dhsig),
-dad0 AS (SELECT doc_id, w0, w1 FROM dhb WHERE b = 0)"""
-    + "".join(_dhash_admit_round(k) for k in (1, 2, 3))
-    + """
-SELECT doc_id, CAST(NULL AS BIGINT) AS dup_of, TRUE AS is_new
-FROM dhb WHERE b = 0
-UNION ALL
-SELECT doc_id, dup_of, dup_of IS NULL AS is_new FROM dm1
-UNION ALL
-SELECT doc_id, dup_of, dup_of IS NULL AS is_new FROM dm2
-UNION ALL
-SELECT doc_id, dup_of, dup_of IS NULL AS is_new FROM dm3
+WITH {_dhash_sig_ctes(_with_twins_sql())},
+{_admission_ctes("dhsig", _DHASH_WORDS, 7)}
+{_ADMISSION_SELECT}
 """
 )
-_DHASH_STREAM_ORACLE = _force_materialized(_DHASH_STREAM_ORACLE)
 
 
 @register("multimodal_dhash_stream_replay", _DHASH_STREAM_ORACLE)
@@ -8598,13 +8624,9 @@ def multimodal_dhash_stream_replay(spark: SparkSession, sf_dir: str) -> DataFram
     from .streaming.ingest import replay_dhash_batches
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    twins = docs.filter(F.col("doc_id") < 50).select(
-        (F.col("doc_id") + 100001).alias("doc_id"),
-        F.concat(F.lit("~"), F.expr("substring(text, 2)")).alias("text"),
-    )
     workdir = tempfile.mkdtemp(prefix="dhash_replay_")
     return replay_dhash_batches(
-        docs.unionByName(twins), workdir, k_batches=4
+        docs.unionByName(_planted_twins(docs)), workdir, k_batches=4
     )
 
 
@@ -13056,85 +13078,16 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     return keep_best_per_cluster(docs, clusters)
 
 
-# ---------------------------------------------------------------------------
-# Video near-dup: frame-sample -> per-frame dHash (composite id through
-# the SAME kernel) -> exact-collapse on the full frame-signature vector
-# -> pigeonhole banding on frame 0 -> frame-aligned MAX-Hamming verify.
-# The oracle reuses _DHASH_CTES verbatim with a frames dhsrc keyed by
-# vid * 8 + frame_idx.
-# ---------------------------------------------------------------------------
-
-_VIDEO_NEAR_DUP_ORACLE = f"""
-WITH vids AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 100001 AS doc_id, '~' || substr(text, 2) AS text
-  FROM documents WHERE doc_id < 50
-),
-vstep AS (
-  SELECT doc_id AS vid, text, length(text) AS vn,
-         greatest(length(text) // 4, 1) AS step
-  FROM vids
-),
-dhsrc AS (
-  SELECT vid * 8 + u.i AS doc_id,
-    substr(text, CAST(u.i * step + 1 AS INT), CAST(step AS INT)) AS text,
-    length(substr(text, CAST(u.i * step + 1 AS INT), CAST(step AS INT))) AS n
-  FROM vstep, LATERAL unnest(generate_series(0, 3)) AS u(i)
-),
-{_DHASH_CTES},
-fsig AS (
-  SELECT doc_id // 8 AS vid, CAST(doc_id % 8 AS INT) AS fi,
-    MAX(CASE WHEN w = 0 THEN word END) AS w0,
-    MAX(CASE WHEN w = 1 THEN word END) AS w1
-  FROM dhwords GROUP BY doc_id
-),
-vcanon AS (
-  SELECT vid,
-    string_agg(CAST(w0 AS VARCHAR) || ',' || CAST(w1 AS VARCHAR),
-               '|' ORDER BY fi) AS vs
-  FROM fsig GROUP BY vid
-),
-vrep AS (
-  SELECT vid, MIN(vid) OVER (PARTITION BY vs) AS rep_id FROM vcanon
-),
-f0 AS (
-  SELECT f.vid, f.w0, f.w1
-  FROM fsig f JOIN vrep r ON r.vid = f.vid AND r.vid = r.rep_id
-  WHERE f.fi = 0
-),
-vchunks AS (
-  SELECT vid, CAST(t.b AS INT) AS band,
-    ((CASE WHEN t.b < 4 THEN w0 ELSE w1 END)
-     // (1::BIGINT << CAST((t.b % 4) * 8 AS INT))) % 256 AS chunk
-  FROM f0, UNNEST(generate_series(0, 7)) AS t(b)
-),
-vcand AS (
-  SELECT DISTINCT x.vid AS ra, y.vid AS rb
-  FROM vchunks x JOIN vchunks y
-    ON x.band = y.band AND x.chunk = y.chunk AND x.vid < y.vid
-),
-vph AS (
-  SELECT c.ra, c.rb,
-    CAST(MAX(bit_count(xor(a.w0, b.w0)) + bit_count(xor(a.w1, b.w1)))
-         AS BIGINT) AS max_frame_hamming
-  FROM vcand c
-  JOIN fsig a ON a.vid = c.ra
-  JOIN fsig b ON b.vid = c.rb AND b.fi = a.fi
-  GROUP BY c.ra, c.rb
-),
-vrp AS (
-  SELECT ra, rb, max_frame_hamming FROM vph WHERE max_frame_hamming <= 7
-)
-SELECT LEAST(ma.vid, mb.vid) AS id_a, GREATEST(ma.vid, mb.vid) AS id_b,
-       p.max_frame_hamming
-FROM vrp p
-JOIN vrep ma ON ma.rep_id = p.ra
-JOIN vrep mb ON mb.rep_id = p.rb
-UNION ALL
-SELECT a.vid AS id_a, b.vid AS id_b, CAST(0 AS BIGINT) AS max_frame_hamming
-FROM vrep a JOIN vrep b ON a.rep_id = b.rep_id AND a.vid < b.vid
+# Video near-dup: the image pair tail over 4-frame signature vectors —
+# dHash per frame, exact collapse on the whole vector, banding on frame
+# 0, frame-aligned MAX-Hamming verify.
+_VIDEO_NEAR_DUP_ORACLE = _force_materialized(
+    f"""
+WITH {_dhash_sig_ctes(_with_twins_sql(), n_frames=4)},
+{_near_dup_pair_ctes("dhsig", _DHASH_WORDS, 7)}
+SELECT id_a, id_b, hamming AS max_frame_hamming FROM ndpairs
 """
+)
 
 
 @register("multimodal_video_near_dup", _VIDEO_NEAR_DUP_ORACLE)
@@ -13142,9 +13095,9 @@ def multimodal_video_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate VIDEO pairs
     (:func:`..operators.multimodal.video_near_dup`): sample 4 frames
     per payload, dHash every frame through the SAME strided-grid
-    kernel (composite ``vid * 8 + frame_idx`` id — zero new hash
-    code), and match videos whose frame-aligned signatures are ALL
-    within Hamming 7 (max over frames).  Candidates band frame 0's
+    kernel into one 8-word signature vector, and match videos whose
+    frame-aligned signatures are ALL within Hamming 7 (max over
+    frames) — the image pair kernel with 4 frames.  Candidates band frame 0's
     signature only — exact capture, since the accept region includes
     frame 0 within 7 and the 8×8-bit pigeonhole covers that radius
     completely — at a quarter of the banding volume.  Same planted
@@ -13157,12 +13110,8 @@ def multimodal_video_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.multimodal import attach_media, video_near_dup
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    twins = docs.filter(F.col("doc_id") < 50).select(
-        (F.col("doc_id") + 100001).alias("doc_id"),
-        F.concat(F.lit("~"), F.expr("substring(text, 2)")).alias("text"),
-    )
     return video_near_dup(
-        attach_media(docs.unionByName(twins)),
+        attach_media(docs.unionByName(_planted_twins(docs))),
         n_frames=4,
         max_hamming=7,
         chunk_bits=8,
@@ -13415,9 +13364,24 @@ affp AS (
   GROUP BY l.doc_id
 )"""
 
+
+
+def _audio_sig_ctes(src: str) -> str:
+    """``afsig(doc_id, fi, fp)`` over the ``(doc_id, text)`` rows of
+    ``src``: the 32-bit fingerprint as a one-frame, one-word
+    signature."""
+    return f"""afsrc AS ({src}),
+{_AUDIO_FP_CTES},
+afsig AS (SELECT doc_id, 0 AS fi, fp FROM affp)"""
+
+
+# the min_bytes duration gate: half the 33 x 16-byte fingerprint span
+_AUDIO_GATED_TWINS = (
+    f"SELECT doc_id, text FROM ({_with_twins_sql()}) u WHERE length(text) >= 264"
+)
+
 _AUDIO_FP_ORACLE = f"""
-WITH afsrc AS (SELECT doc_id, text FROM documents),
-{_AUDIO_FP_CTES}
+WITH {_audio_sig_ctes("SELECT doc_id, text FROM documents")}
 SELECT doc_id, fp FROM affp
 """
 
@@ -13467,50 +13431,13 @@ def multimodal_audio_wav_fingerprint(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-_AUDIO_NEAR_DUP_ORACLE = f"""
-WITH afsrc AS (
-  SELECT doc_id, text FROM (
-    SELECT doc_id, text FROM documents
-    UNION ALL
-    SELECT doc_id + 100001 AS doc_id, '~' || substr(text, 2) AS text
-    FROM documents WHERE doc_id < 50
-  ) u
-  WHERE length(text) >= 264
-),
-{_AUDIO_FP_CTES},
-afrep AS (
-  SELECT doc_id, fp, MIN(doc_id) OVER (PARTITION BY fp) AS rep_id
-  FROM affp
-),
-afreps AS (SELECT doc_id, fp FROM afrep WHERE doc_id = rep_id),
-afchunks AS (
-  SELECT doc_id, CAST(t.b AS INT) AS band,
-    (fp // (1::BIGINT << CAST(t.b * 8 AS INT))) % 256 AS chunk
-  FROM afreps, UNNEST(generate_series(0, 3)) AS t(b)
-),
-afcand AS (
-  SELECT DISTINCT x.doc_id AS ra, y.doc_id AS rb
-  FROM afchunks x JOIN afchunks y
-    ON x.band = y.band AND x.chunk = y.chunk AND x.doc_id < y.doc_id
-),
-afrp AS (
-  SELECT ra, rb, hamming FROM (
-    SELECT c.ra, c.rb,
-      CAST(bit_count(xor(a.fp, b.fp)) AS BIGINT) AS hamming
-    FROM afcand c
-    JOIN afreps a ON a.doc_id = c.ra
-    JOIN afreps b ON b.doc_id = c.rb
-  ) s WHERE hamming <= 3
-)
-SELECT LEAST(ma.doc_id, mb.doc_id) AS id_a,
-       GREATEST(ma.doc_id, mb.doc_id) AS id_b, p.hamming
-FROM afrp p
-JOIN afrep ma ON ma.rep_id = p.ra
-JOIN afrep mb ON mb.rep_id = p.rb
-UNION ALL
-SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(0 AS BIGINT) AS hamming
-FROM afrep a JOIN afrep b ON a.rep_id = b.rep_id AND a.doc_id < b.doc_id
+_AUDIO_NEAR_DUP_ORACLE = _force_materialized(
+    f"""
+WITH {_audio_sig_ctes(_AUDIO_GATED_TWINS)},
+{_near_dup_pair_ctes("afsig", ("fp",), 3)}
+SELECT id_a, id_b, hamming FROM ndpairs
 """
+)
 
 
 @register("multimodal_audio_near_dup", _AUDIO_NEAR_DUP_ORACLE)
@@ -13536,12 +13463,8 @@ def multimodal_audio_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.multimodal import attach_media, audio_near_dup
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    twins = docs.filter(F.col("doc_id") < 50).select(
-        (F.col("doc_id") + 100001).alias("doc_id"),
-        F.concat(F.lit("~"), F.expr("substring(text, 2)")).alias("text"),
-    )
     return audio_near_dup(
-        attach_media(docs.unionByName(twins)),
+        attach_media(docs.unionByName(_planted_twins(docs))),
         window_bytes=16,
         n_bits=32,
         max_hamming=3,
@@ -13778,49 +13701,11 @@ def corpus_build_rocchio_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _audio_admit_round(k: int) -> str:
-    """One unrolled audio admission round — the `_dhash_admit_round`
-    shape on the single 32-bit fingerprint word at radius 3 (capture
-    exact over 4 chunks, so banding never changes the decision)."""
-    return f""",
-am{k} AS (
-  SELECT x.doc_id, MIN(s.doc_id) AS dup_of
-  FROM afb x LEFT JOIN aad{k - 1} s
-    ON bit_count(xor(x.fp, s.fp)) <= 3
-  WHERE x.b = {k} GROUP BY x.doc_id
-),
-aad{k} AS (
-  SELECT doc_id, fp FROM aad{k - 1}
-  UNION ALL
-  SELECT h.doc_id, h.fp FROM afb h
-  JOIN am{k} m ON m.doc_id = h.doc_id AND m.dup_of IS NULL
-)"""
-
-
 _AUDIO_STREAM_ORACLE = _force_materialized(
     f"""
-WITH afsrc AS (
-  SELECT doc_id, text FROM (
-    SELECT doc_id, text FROM documents
-    UNION ALL
-    SELECT doc_id + 100001 AS doc_id, '~' || substr(text, 2) AS text
-    FROM documents WHERE doc_id < 50
-  ) u
-  WHERE length(text) >= 264
-),
-{_AUDIO_FP_CTES},
-afb AS (SELECT doc_id, fp, doc_id % 4 AS b FROM affp),
-aad0 AS (SELECT doc_id, fp FROM afb WHERE b = 0)"""
-    + "".join(_audio_admit_round(k) for k in (1, 2, 3))
-    + """
-SELECT doc_id, CAST(NULL AS BIGINT) AS dup_of, TRUE AS is_new
-FROM afb WHERE b = 0
-UNION ALL
-SELECT doc_id, dup_of, dup_of IS NULL AS is_new FROM am1
-UNION ALL
-SELECT doc_id, dup_of, dup_of IS NULL AS is_new FROM am2
-UNION ALL
-SELECT doc_id, dup_of, dup_of IS NULL AS is_new FROM am3
+WITH {_audio_sig_ctes(_AUDIO_GATED_TWINS)},
+{_admission_ctes("afsig", ("fp",), 3)}
+{_ADMISSION_SELECT}
 """
 )
 
@@ -13843,12 +13728,10 @@ def multimodal_audio_stream_replay(spark: SparkSession, sf_dir: str) -> DataFram
     from .streaming.ingest import replay_audio_batches
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    twins = docs.filter(F.col("doc_id") < 50).select(
-        (F.col("doc_id") + 100001).alias("doc_id"),
-        F.concat(F.lit("~"), F.expr("substring(text, 2)")).alias("text"),
-    )
     workdir = tempfile.mkdtemp(prefix="audio_replay_")
-    return replay_audio_batches(docs.unionByName(twins), workdir, k_batches=4)
+    return replay_audio_batches(
+        docs.unionByName(_planted_twins(docs)), workdir, k_batches=4
+    )
 
 
 # =========================================================================
@@ -13927,80 +13810,16 @@ def corpus_build_keepbest_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =========================================================================
 # r13: the video streaming face — the FOURTH modality on the signature-
 # generic handler.  Frame vectors flatten to one array<bigint> signature
-# (video_sigs); only the match predicate differs (frame-aligned MAX
-# Hamming, video_match_stored).  Frame-0 banding at radius 7 over 16
-# chunks is exact capture, so the K-batch state evolution unrolls to
-# plain SQL like the image/audio twins.
+# (video_sigs) matched by the frame-aligned MAX Hamming.  Frame-0
+# banding at radius 7 over 16 chunks is exact capture, so the K-batch
+# state evolution unrolls to plain SQL like the image/audio twins.
 # =========================================================================
-
-
-def _video_admit_round(k: int) -> str:
-    """One unrolled VIDEO admission round — `_dhash_admit_round` with
-    the frame-aligned MAX predicate: batch-``k`` videos pair with
-    admitted videos frame-by-frame, the per-pair Hamming is the MAX
-    over the 4 aligned frames, and a radius-7 max admits the earliest
-    (min-id) match as ``dup_of``."""
-    return f""",
-vp{k} AS (
-  SELECT x.vid AS vid, s.vid AS svid,
-    MAX(bit_count(xor(x.w0, s.w0)) + bit_count(xor(x.w1, s.w1))) AS mh
-  FROM vb x JOIN vad{k - 1} s ON s.fi = x.fi
-  WHERE x.b = {k}
-  GROUP BY x.vid, s.vid
-),
-vm{k} AS (
-  SELECT b.vid, m.dup_of
-  FROM (SELECT DISTINCT vid FROM vb WHERE b = {k}) b
-  LEFT JOIN (
-    SELECT vid, MIN(svid) AS dup_of FROM vp{k} WHERE mh <= 7 GROUP BY vid
-  ) m USING (vid)
-),
-vad{k} AS (
-  SELECT vid, fi, w0, w1 FROM vad{k - 1}
-  UNION ALL
-  SELECT h.vid, h.fi, h.w0, h.w1 FROM vb h
-  JOIN vm{k} m ON m.vid = h.vid AND m.dup_of IS NULL
-)"""
-
 
 _VIDEO_STREAM_ORACLE = _force_materialized(
     f"""
-WITH vids AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 100001 AS doc_id, '~' || substr(text, 2) AS text
-  FROM documents WHERE doc_id < 50
-),
-vstep AS (
-  SELECT doc_id AS vid, text, length(text) AS vn,
-         greatest(length(text) // 4, 1) AS step
-  FROM vids
-),
-dhsrc AS (
-  SELECT vid * 8 + u.i AS doc_id,
-    substr(text, CAST(u.i * step + 1 AS INT), CAST(step AS INT)) AS text,
-    length(substr(text, CAST(u.i * step + 1 AS INT), CAST(step AS INT))) AS n
-  FROM vstep, LATERAL unnest(generate_series(0, 3)) AS u(i)
-),
-{_DHASH_CTES},
-vsig AS (
-  SELECT doc_id // 8 AS vid, CAST(doc_id % 8 AS INT) AS fi,
-    MAX(CASE WHEN w = 0 THEN word END) AS w0,
-    MAX(CASE WHEN w = 1 THEN word END) AS w1
-  FROM dhwords GROUP BY doc_id // 8, doc_id % 8
-),
-vb AS (SELECT vid, fi, w0, w1, vid % 4 AS b FROM vsig),
-vad0 AS (SELECT vid, fi, w0, w1 FROM vb WHERE b = 0)"""
-    + "".join(_video_admit_round(k) for k in (1, 2, 3))
-    + """
-SELECT vid AS doc_id, CAST(NULL AS BIGINT) AS dup_of, TRUE AS is_new
-FROM (SELECT DISTINCT vid FROM vb WHERE b = 0) z
-UNION ALL
-SELECT vid AS doc_id, dup_of, dup_of IS NULL AS is_new FROM vm1
-UNION ALL
-SELECT vid AS doc_id, dup_of, dup_of IS NULL AS is_new FROM vm2
-UNION ALL
-SELECT vid AS doc_id, dup_of, dup_of IS NULL AS is_new FROM vm3
+WITH {_dhash_sig_ctes(_with_twins_sql(), n_frames=4)},
+{_admission_ctes("dhsig", _DHASH_WORDS, 7)}
+{_ADMISSION_SELECT}
 """
 )
 
@@ -14010,11 +13829,10 @@ def multimodal_video_stream_replay(spark: SparkSession, sf_dir: str) -> DataFram
     """The video family's streaming face
     (:func:`..streaming.ingest.video_ingest_stream` replayed over 4
     deterministic micro-batches) — the FOURTH modality on the
-    signature-generic handler, and the proof the handler generalizes
-    past sum-Hamming: video contributes a ``hash_fn`` (frame fan-out →
-    shared dHash kernel → flattened 8-word vector,
-    :func:`..operators.multimodal.video_sigs`) and a ``match_fn``
-    (frame-aligned MAX Hamming ≤ 7,
+    signature-generic handler: video contributes a ``hash_fn`` (frame
+    fan-out → shared dHash kernel → flattened 8-word vector,
+    :func:`..operators.multimodal.video_sigs`) and its frame count
+    (the shared matcher's frame-aligned MAX Hamming ≤ 7,
     :func:`..operators.multimodal.video_match_stored`); the state
     layout, replay anti-join, and MERGE protocol are the image/audio
     code verbatim.  Frame-0 banding at radius 7 over 16 chunks is
@@ -14027,12 +13845,10 @@ def multimodal_video_stream_replay(spark: SparkSession, sf_dir: str) -> DataFram
     from .streaming.ingest import replay_video_batches
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    twins = docs.filter(F.col("doc_id") < 50).select(
-        (F.col("doc_id") + 100001).alias("doc_id"),
-        F.concat(F.lit("~"), F.expr("substring(text, 2)")).alias("text"),
-    )
     workdir = tempfile.mkdtemp(prefix="video_replay_")
-    return replay_video_batches(docs.unionByName(twins), workdir, k_batches=4)
+    return replay_video_batches(
+        docs.unionByName(_planted_twins(docs)), workdir, k_batches=4
+    )
 
 
 # =========================================================================
@@ -14046,35 +13862,12 @@ def multimodal_video_stream_replay(spark: SparkSession, sf_dir: str) -> DataFram
 
 _KEEPBEST_STREAM_ORACLE = _force_materialized(
     f"""
-WITH dhsrc AS (
-  SELECT doc_id, text, length(text) AS n FROM (
-    SELECT doc_id, text FROM documents
-    UNION ALL
-    SELECT doc_id + 100001 AS doc_id, '~' || substr(text, 2) AS text
-    FROM documents WHERE doc_id < 50
-  ) u
-),
-{_DHASH_CTES},
-dhsig AS (
-  SELECT doc_id,
-    MAX(CASE WHEN w = 0 THEN word END) AS w0,
-    MAX(CASE WHEN w = 1 THEN word END) AS w1
-  FROM dhwords GROUP BY doc_id
-),
-dhb AS (SELECT doc_id, w0, w1, doc_id % 4 AS b FROM dhsig),
-dad0 AS (SELECT doc_id, w0, w1 FROM dhb WHERE b = 0)"""
-    + "".join(_dhash_admit_round(k) for k in (1, 2, 3))
-    + """,
-kadm AS (
-  SELECT doc_id, CAST(NULL AS BIGINT) AS dup_of FROM dhb WHERE b = 0
-  UNION ALL SELECT doc_id, dup_of FROM dm1
-  UNION ALL SELECT doc_id, dup_of FROM dm2
-  UNION ALL SELECT doc_id, dup_of FROM dm3
-),
+WITH {_dhash_sig_ctes(_with_twins_sql())},
+{_admission_ctes("dhsig", _DHASH_WORDS, 7)},
 kc AS (
   SELECT doc_id, COALESCE(dup_of, doc_id) AS cluster_id,
          (doc_id * 37) % 1000 AS q
-  FROM kadm
+  FROM adlog
 ),
 kb AS (
   SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS n_members,
@@ -14118,11 +13911,7 @@ def multimodal_keepbest_stream_replay(spark: SparkSession, sf_dir: str) -> DataF
     from .streaming.ingest import replay_keepbest_batches
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    twins = docs.filter(F.col("doc_id") < 50).select(
-        (F.col("doc_id") + 100001).alias("doc_id"),
-        F.concat(F.lit("~"), F.expr("substring(text, 2)")).alias("text"),
-    )
-    src = docs.unionByName(twins).withColumn(
+    src = docs.unionByName(_planted_twins(docs)).withColumn(
         "quality", F.pmod(F.col("doc_id") * 37, F.lit(1000)).cast("long")
     )
     workdir = tempfile.mkdtemp(prefix="keepbest_replay_")

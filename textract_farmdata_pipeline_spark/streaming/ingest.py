@@ -469,11 +469,12 @@ def dhash_process_batch(
     exposed as a factory so tests can invoke a batch directly — in
     particular to simulate a checkpoint REPLAY of an already-committed
     batch and assert the state is reproduced, not corrupted."""
-    from ..operators.multimodal import attach_media, image_dhash
+    from ..operators.multimodal import _DHASH_LAYOUT, attach_media, image_dhash
 
     return _sig_process_batch(
         state_path,
         lambda b: image_dhash(attach_media(b.select("doc_id", "text"))),
+        _DHASH_LAYOUT,
         max_hamming,
         chunk_bits,
         sink,
@@ -483,25 +484,21 @@ def dhash_process_batch(
 def _sig_process_batch(
     state_path: str,
     hash_fn,
+    layout: tuple[int, int],
     max_hamming: int,
     chunk_bits: int,
     sink=None,
-    match_fn=None,
 ):
     """Signature-generic per-micro-batch admission: ``hash_fn(batch)``
-    → ``(doc_id, sig array<bigint>)``, decided against the accumulated
-    admitted-signature state with ``match_fn`` (default
-    :func:`..operators.multimodal.dhash_match_stored`, itself
-    signature-generic), keyed-MERGE committed.  One handler for every
-    modality on the shared near-dup kernel — image dHash words and
-    audio fingerprint words differ only in ``hash_fn``; video
-    additionally swaps ``match_fn`` for the frame-aligned-MAX
-    predicate (:func:`..operators.multimodal.video_match_stored`) —
-    the state layout, replay anti-join, and MERGE protocol are the
-    same code for all three."""
-    from ..operators.multimodal import dhash_match_stored
-
-    match_fn = match_fn or dhash_match_stored
+    → ``(doc_id, sig array<bigint>)`` in signature ``layout``
+    ``(n_frames, words)``, decided against the accumulated
+    admitted-signature state by the shared stored-state matcher
+    (frame-0 banding, frame-MAX Hamming), keyed-MERGE committed.  One
+    handler for every modality on the shared near-dup kernel — the
+    modalities differ only in ``hash_fn`` and the layout; the state
+    table, replay anti-join, and MERGE protocol are the same code for
+    all three."""
+    from ..operators.multimodal import _match_stored
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         table = ParquetMergeTable(batch_df.sparkSession, state_path)
@@ -522,7 +519,7 @@ def _sig_process_batch(
                 .join(bsig.select("doc_id"), "doc_id", "left_anti")
                 .select("doc_id", "sig")
             )
-            ann = match_fn(stored, bsig, max_hamming=max_hamming, chunk_bits=chunk_bits)
+            ann = _match_stored(stored, bsig, layout, max_hamming, chunk_bits)
             table.merge(
                 bsig.join(ann.select("doc_id", "dup_of", "is_new"), "doc_id"),
                 key="doc_id",
@@ -1078,22 +1075,16 @@ def audio_ingest_stream(
     the shared handler.  At the 4-chunk/radius-3 gate banding capture
     is exact, so the K-batch state evolution unrolls to plain SQL —
     the replay twin shares the full hash gate."""
-    from ..operators.multimodal import attach_media, audio_fingerprint
-
-    if min_bytes is None:
-        min_bytes = (n_bits + 1) * window_bytes // 2
+    from ..operators.multimodal import _AUDIO_LAYOUT, _audio_sigs, attach_media
 
     def hash_fn(batch_df: DataFrame) -> DataFrame:
         media = attach_media(batch_df.select("doc_id", "text"))
-        fp = audio_fingerprint(
-            media.where(F.length("media") >= min_bytes),
-            window_bytes=window_bytes,
-            n_bits=n_bits,
-        )
-        return fp.select("doc_id", F.array(F.col("fp")).alias("sig"))
+        return _audio_sigs(media, window_bytes, n_bits, min_bytes)
 
     return docs.writeStream.foreachBatch(
-        _sig_process_batch(state_path, hash_fn, max_hamming, chunk_bits, sink)
+        _sig_process_batch(
+            state_path, hash_fn, _AUDIO_LAYOUT, max_hamming, chunk_bits, sink
+        )
     )
 
 
@@ -1134,43 +1125,29 @@ def video_ingest_stream(
 ):
     """Streaming VIDEO near-dup admission — the fourth modality on the
     signature-generic handler (:func:`_sig_process_batch`): each
-    micro-batch fans its payloads into frames, hashes every frame
-    through the shared dHash kernel, flattens the per-video signature
-    vector ONCE (:func:`..operators.multimodal.video_sigs` — 32
-    bytes/video of state), and is decided against the accumulated
-    admitted-vector state with the frame-aligned MAX predicate
-    (:func:`..operators.multimodal.video_match_stored`).  The handler,
-    state layout, replay anti-join, and MERGE protocol are the image/
-    audio code verbatim — video contributes a ``hash_fn`` and a
-    ``match_fn``, nothing else.
+    micro-batch hashes its payloads ONCE into per-video frame-signature
+    vectors in one fused pass (:func:`..operators.multimodal.video_sigs`
+    — 32 bytes/video of state), and is decided against the accumulated
+    admitted-vector state with the frame-aligned MAX predicate (the
+    matcher :func:`..operators.multimodal.video_match_stored` runs).
+    The handler, matcher, state layout, replay anti-join, and MERGE
+    protocol are the image/audio code verbatim — video contributes a
+    ``hash_fn`` and its signature layout, nothing else.
 
     At the frame-0-banding/radius-7 gate capture is exact (the accept
     region requires frame 0 within radius; 16 chunks cover it), so
     the K-batch state evolution unrolls to plain SQL — the replay twin
     shares the full hash gate."""
-    from ..operators.multimodal import (
-        attach_media,
-        video_match_stored,
-        video_sigs,
-    )
+    from ..operators.multimodal import _video_layout, attach_media, video_sigs
 
     def hash_fn(batch_df: DataFrame) -> DataFrame:
         return video_sigs(
             attach_media(batch_df.select("doc_id", "text")), n_frames=n_frames
         )
 
-    def match_fn(stored, bsig, max_hamming, chunk_bits):
-        return video_match_stored(
-            stored,
-            bsig,
-            n_frames=n_frames,
-            max_hamming=max_hamming,
-            chunk_bits=chunk_bits,
-        )
-
     return docs.writeStream.foreachBatch(
         _sig_process_batch(
-            state_path, hash_fn, max_hamming, chunk_bits, sink, match_fn
+            state_path, hash_fn, _video_layout(n_frames), max_hamming, chunk_bits, sink
         )
     )
 
@@ -1219,7 +1196,7 @@ def keepbest_ingest_stream(
 
     * ``sigs/``    — the admission table the dHash ingest already
       keeps (``doc_id, sig, dup_of, is_new``), maintained by the
-      UNCHANGED :func:`_sig_process_batch`.
+      UNCHANGED :func:`dhash_process_batch`.
     * ``winners/`` — one row per cluster (= admitted rep id):
       ``(cluster_id, best_q, best_id)``, MERGE-upserted per batch as
       ``max(struct(quality, -id))`` over {stored winner} ∪ {batch
@@ -1231,10 +1208,6 @@ def keepbest_ingest_stream(
     SUM) — and the per-batch upsert of a max equals the one-shot max
     for ANY batching, which is what lets the replay twin share a
     one-shot SQL oracle."""
-    from ..operators.multimodal import attach_media, image_dhash
-
-    def hash_fn(batch_df: DataFrame) -> DataFrame:
-        return image_dhash(attach_media(batch_df.select("doc_id", "text")))
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         winners = ParquetMergeTable(
@@ -1279,8 +1252,8 @@ def keepbest_ingest_stream(
             )
             winners.merge(best, key="cluster_id")
 
-        inner = _sig_process_batch(
-            os.path.join(state_path, "sigs"), hash_fn, max_hamming, chunk_bits, sink
+        inner = dhash_process_batch(
+            os.path.join(state_path, "sigs"), max_hamming, chunk_bits, sink
         )
         try:
             inner(batch_df, batch_id)
