@@ -69,7 +69,6 @@ def main() -> None:
         gated,
         eval_docs,
         num_shards=8,
-        decontam_n=3,
         substring_len=12,
         split_weights=(90, 5, 5),
     )

@@ -527,7 +527,7 @@ class TestBuildCorpusFull:
             "doc_id long, text string, source string",
         )
         return build_corpus(
-            docs, ev, num_shards=4, decontam_n=3, quality_gate=True, span_words=10
+            docs, ev, num_shards=4, quality_gate=True, span_words=10
         ).collect()
 
     def test_stage_semantics_in_manifest(self, spark):
@@ -569,7 +569,7 @@ class TestBuildCorpusFull:
             [(99, "zz yy xx", "eval")], "rec_id long, body string, source string"
         )
         out = build_corpus(
-            docs, ev, num_shards=2, decontam_n=3,
+            docs, ev, num_shards=2,
             key_col="rec_id", text_col="body",
             quality_gate=True, span_words=10,
         ).collect()
@@ -676,7 +676,7 @@ class TestBuildCorpusLmGated:
             "doc_id long, text string, source string",
         )
         out = build_corpus(
-            docs, ev, num_shards=2, decontam_n=3, lm_train=train, lm_threshold=0.0
+            docs, ev, num_shards=2, lm_train=train, lm_threshold=0.0
         ).collect()
         assert sorted(r["doc_id"] for r in out) == [1, 2]
 
@@ -809,7 +809,6 @@ class TestJsonlPipeline:
                 docs,
                 docs.filter(F.col("doc_id") % 97 == 0),
                 num_shards=16,
-                decontam_n=3,
                 lm_train=docs.filter(F.col("lang") == "en"),
                 lm_threshold=0.033,
                 containment_t=0.8,
@@ -843,7 +842,7 @@ class TestBuildCorpusSplit:
             [(99, "q1 q2 q3", "eval")], "doc_id long, text string, source string"
         )
         out = build_corpus(
-            docs, ev, num_shards=4, decontam_n=3, split_weights=(90, 5, 5)
+            docs, ev, num_shards=4, split_weights=(90, 5, 5)
         ).collect()
         got = {r["doc_id"]: r["split"] for r in out}
         # exact dedup keeps min-id doc 1; survivors 1,2,3 all selected
@@ -858,7 +857,7 @@ class TestBuildCorpusSplit:
         again = {
             r["doc_id"]: r["split"]
             for r in build_corpus(
-                docs, ev, num_shards=4, decontam_n=3, split_weights=(90, 5, 5)
+                docs, ev, num_shards=4, split_weights=(90, 5, 5)
             ).collect()
         }
         assert got == again
@@ -888,7 +887,7 @@ class TestBuildCorpusSplit:
         out = {
             r["doc_id"]
             for r in build_corpus(
-                docs, ev, num_shards=4, decontam_n=3, substring_len=12
+                docs, ev, num_shards=4, substring_len=12
             ).collect()
         }
         # 3,4 fully duplicated -> gone; 1 cleans to "alpha beta", 2 to
@@ -918,7 +917,7 @@ class TestBuildCorpusSplit:
         out = {
             r["doc_id"]
             for r in build_corpus(
-                docs, ev, num_shards=4, decontam_n=3, substring_len=12
+                docs, ev, num_shards=4, substring_len=12
             ).collect()
         }
         assert 1 in out and 2 not in out  # exact dedup on CLEANED text
@@ -956,7 +955,7 @@ class TestBuildCorpusSplit:
         out = {
             r["doc_id"]
             for r in build_corpus(
-                docs, ev, num_shards=4, decontam_n=3, paragraph_words=12
+                docs, ev, num_shards=4, paragraph_words=12
             ).collect()
         }
         assert 1 in out          # first occurrence survives (CCNet)
@@ -971,7 +970,7 @@ class TestBuildCorpusSplit:
         ev = spark.createDataFrame(
             [(99, "q1 q2 q3", "eval")], "doc_id long, text string, source string"
         )
-        out = build_corpus(docs, ev, num_shards=4, decontam_n=3)
+        out = build_corpus(docs, ev, num_shards=4)
         assert out.columns == ["doc_id", "source", "shard", "shard_pos"]
 
 
@@ -1463,14 +1462,14 @@ class TestBuildCorpusDecontamScrub:
             ).collect()
         }
         # doc 2 is entirely eval text -> exits; doc 1 keeps its
-        # residue; the drop rule (decontam_n=3) would kill BOTH.
+        # residue; the 3-gram drop rule would kill BOTH.
         # (doc 3 is sampled out downstream by the mixture stage: web
         # rate = 1.5/2 = 0.75 and md5-bucket(3) = 778110 >= 750000 —
         # a mixture decision, not a decontamination one.)
         assert 2 not in kept and 1 in kept and 4 in kept and 3 not in kept
         dropped = {
             r["doc_id"]
-            for r in build_corpus(docs, ev, num_shards=4, decontam_n=3).collect()
+            for r in build_corpus(docs, ev, num_shards=4).collect()
         }
         assert 1 not in dropped and 2 not in dropped
 
@@ -1683,9 +1682,9 @@ class TestBuildCorpusTokenMixture:
         ev = spark.createDataFrame(
             [(100, "zz yy xx ww", "e")], "doc_id long, text string, source string"
         )
-        doc_bal = build_corpus(docs, ev, num_shards=2, decontam_n=3)
+        doc_bal = build_corpus(docs, ev, num_shards=2)
         tok_bal = build_corpus(
-            docs, ev, num_shards=2, decontam_n=3, mixture_unit="tokens"
+            docs, ev, num_shards=2, mixture_unit="tokens"
         )
         per = lambda df: {
             s: n

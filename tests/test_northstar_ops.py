@@ -6639,10 +6639,12 @@ class TestMediaNearDupKernel:
         assert {v[1] for v in want_match.values()} == {False, True}
 
 
-class TestMediaRegistryParity:
-    """Spark rows of the media near-dup registrations equal their
+class TestRegistryParity:
+    """Spark rows of registrations over ``documents`` equal their
     DuckDB oracles' rows on the test fixture — the oracle templates
-    and the engine kernel checked against each other in tier 1."""
+    and the engine checked against each other in tier 1.  The media
+    near-dup family, and the corpus builds whose stages together
+    cover every piece of ``_corpus_chain_sql`` but span dedup."""
 
     @pytest.mark.parametrize(
         "name",
@@ -6654,6 +6656,13 @@ class TestMediaRegistryParity:
             "multimodal_video_near_dup",
             "multimodal_audio_fingerprint",
             "multimodal_audio_near_dup",
+            "corpus_build_pipeline",
+            "corpus_build_token_mixture",
+            "corpus_build_scrub_text",
+            "corpus_build_substring_gated",
+            "corpus_build_paragraph_gated",
+            "corpus_build_lm_gated",
+            "corpus_build_curated",
         ],
     )
     def test_matches_oracle(self, spark, sf_dir, name):

@@ -8,6 +8,11 @@ Two decisions live behind one module each and must not leak back out:
 * input validation in the operators (the merge table included) and
   the streaming handlers raises real exceptions — ``assert`` is
   stripped by ``python -O``.
+
+The corpus build has one core on each side: its oracles come from one
+SQL template with no string surgery (a ``.split`` or ``.replace`` whose
+target drifted splices the wrong text and raises nothing), and
+``build_corpus`` stages through one checkpoint call.
 """
 
 from __future__ import annotations
@@ -46,3 +51,43 @@ def test_no_assert_in_merge_table_or_streaming():
         if isinstance(node, ast.Assert)
     ]
     assert offenders == []
+
+
+def _root_name(node: ast.AST) -> str | None:
+    """The variable a chain like ``X.split(...)[1].rsplit`` starts at."""
+    while not isinstance(node, ast.Name):
+        if isinstance(node, (ast.Attribute, ast.Subscript)):
+            node = node.value
+        elif isinstance(node, ast.Call):
+            node = node.func
+        else:
+            return None
+    return node.id
+
+
+def test_corpus_build_oracles_are_not_spliced():
+    src = (PKG / "registry.py").read_text(encoding="utf-8")
+    protected = {"_PARA_KEEPFIRST_CTES", "_SEMDC_SCORE_CTES"}
+    offenders = [
+        f"registry.py:{node.lineno}"
+        for node in ast.walk(ast.parse(src))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("split", "rsplit", "replace")
+        and (name := _root_name(node.func.value)) is not None
+        and (name.startswith("_CORPUS_BUILD") or name in protected)
+    ]
+    assert offenders == []
+    assert src.count("'|shard'") == 1
+
+
+def test_build_corpus_stages_through_one_checkpoint_call():
+    tree = ast.parse((PKG / "operators" / "corpus.py").read_text(encoding="utf-8"))
+    calls = [
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Name)
+        and node.func.id == "tracked_local_checkpoint"
+    ]
+    assert len(calls) == 1

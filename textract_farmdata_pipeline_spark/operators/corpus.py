@@ -292,368 +292,248 @@ def corpus_ngram_counts(
     )
 
 
+# build_corpus constants: every caller balances by source, scores the
+# drop-rule decontamination and the excerpt stage on 3-gram shingles,
+# and counts a substring as duplicated at two occurrences.
+_BY = "source"
+_DECONTAM_N = 3
+_CONTAINMENT_N = 3
+_SUBSTRING_MIN_COUNT = 2
+
+
+def _stage(df: DataFrame) -> DataFrame:
+    """The corpus build's one staging boundary: an eager local
+    checkpoint, so every later reference scans materialized rows
+    instead of re-expanding the stage's subtree."""
+    from .checkpoints import tracked_local_checkpoint
+
+    staged, _ = tracked_local_checkpoint(df)
+    return staged
+
+
+def _gate(docs: DataFrame, passed: DataFrame, key_col: str) -> DataFrame:
+    """Keep the documents whose id is in ``passed``."""
+    return docs.join(passed.select(key_col), key_col)
+
+
+def _rewrite(
+    docs: DataFrame, cleaned: DataFrame, key_col: str, text_col: str, *extra: str
+) -> DataFrame:
+    """Replace ``docs``' text with ``cleaned``'s ``clean_text`` (plus
+    ``extra`` columns); documents left with nothing (``''``) drop."""
+    kept = cleaned.where(F.col("clean_text") != "")
+    return docs.drop(text_col).join(
+        kept.select(key_col, F.col("clean_text").alias(text_col), *extra), key_col
+    )
+
+
 def build_corpus(
     docs: DataFrame,
     eval_docs: DataFrame,
     num_shards: int = 16,
-    decontam_n: int = 3,
-    by: str = "source",
     key_col: str = "doc_id",
     text_col: str = "text",
-    persist_intermediate: bool = False,
     quality_gate: bool = False,
     span_words: int | None = None,
     lm_train: DataFrame | None = None,
     lm_threshold: float = 0.0,
     containment_t: float | None = None,
-    containment_n: int = 3,
     split_weights: tuple[int, int, int] | None = None,
     substring_len: int | None = None,
-    substring_min_count: int = 2,
     paragraph_words: int | None = None,
     decontam_scrub_len: int | None = None,
     mixture_unit: str | None = None,
     return_text: bool = False,
 ) -> DataFrame:
-    """The end-to-end corpus build: [KN-LM quality gate →] [Gopher
-    quality gate → cross-document span dedup →] [ExactSubstr removal →]
-    exact dedup → [containment excerpt removal →] eval-set
-    decontamination → uniform domain-mixture resample → training-shard
-    layout, composed from this module's operators into one lazy plan.
+    """The end-to-end corpus build: one lazy plan that folds the
+    stages its keywords switch on over the corpus, in this order, and
+    returns the ``(key, source, shard, shard_pos)`` manifest a loader
+    consumes.
 
-    ``substring_len`` enables the ExactSubstr stage
-    (:func:`substring_dedup`, Lee et al. 2022): every token covered by
-    a duplicated substring of ≥ ``substring_len`` tokens (≥
-    ``substring_min_count`` occurrences corpus-wide, stride-1 windows
-    — catches the phase-shifted verbatim copies fixed-phase span
-    windows miss) is removed from ALL occurrences before exact dedup;
-    fully-duplicated documents (clean text ``''``) are dropped, the
-    span-stage rule.  Downstream digests and decontamination shingles
-    see the cleaned text.
+    ``lm_train`` (CCNet LM gate, Wenzek et al. 2020): train
+    :func:`..operators.text_analysis.kn_doc_score`'s Kneser-Ney bigram
+    model on ``lm_train`` and keep documents with ``kn_score >=
+    lm_threshold``; documents with no scorable bigram fail.  The score
+    is a ratio of exact integer sums, so the gate is engine-portable.
 
-    ``paragraph_words`` enables the CCNet paragraph-dedup stage
-    (:func:`..operators.paragraphs.paragraph_dedup_keepfirst`, Wenzek
-    et al. 2020 §4.1): every repeated ``paragraph_words``-word
-    paragraph keeps exactly its first ``(doc_id, chunk_idx)``
-    occurrence and every later copy is removed before exact dedup;
-    documents whose every paragraph was a later copy drop out (clean
-    text ``''``).  Unlike the C4 span stage (which keeps no canonical
-    copy) one occurrence of shared boilerplate always survives.
+    ``quality_gate`` (Gopher gate): keep documents passing the six
+    integer rules of :func:`..operators.text_analysis.gopher_quality_filter`.
 
-    ``containment_t`` enables the excerpt-removal stage
-    (:func:`..operators.dedup.containment_excerpt_drop`) after exact
-    dedup: any surviving document whose ``containment_n``-gram shingle
-    set is covered ≥ t by a document strictly above it in the
-    (set-size ASC, id DESC) order is dropped — truncations, excerpts,
-    and boilerplate-wrapped copies that byte-level dedup cannot see.
-    Running it post-exact-dedup confines the directional pair join to
-    distinct texts (the declared product discipline for every pair
-    primitive in :mod:`..operators.dedup`).
+    ``span_words`` (C4 span dedup, :func:`span_dedup`): remove every
+    ``span_words``-word span shared by two or more documents from all
+    of them; later stages see the cleaned text.
 
-    ``lm_train`` prepends the CCNet-style LM gate (Wenzek et al.
-    2020): train :func:`..operators.text_analysis.kn_doc_score`'s
-    Kneser-Ney bigram model on the given trusted slice, score every
-    document, and keep only ``kn_score >= lm_threshold`` (documents
-    with no scorable bigram — all-OOV under the model — fail the
-    gate, exactly the CCNet behavior for out-of-model text).  The
-    score is a ratio of exact integer sums, so the gate predicate is
-    engine-portable and the gated build stays hash-oracle-checkable.
+    ``substring_len`` (ExactSubstr, :func:`substring_dedup`, Lee et al.
+    2022): remove every token covered by a stride-1 substring of at
+    least ``substring_len`` tokens that occurs twice or more in the
+    corpus, from all occurrences.
 
-    ``split_weights`` appends the leakage-safe train/val/test stage:
-    the FINAL selected documents (post-mixture ``sampled`` set — the
-    only docs that can appear in shards, so the only docs that can
-    leak) are near-dup-clustered with the portable md5 family
-    (:func:`..operators.dedup.near_dup_clusters`) and each doc gets
-    the md5-bucket split of its CLUSTER id
-    (:func:`..operators.preprocess.dataset_split`), so a document and
-    its surviving near-duplicates always ship in the same split.  The
-    manifest then carries a fifth column ``split``.  Clustering the
-    final selection instead of the raw input keeps the shingle chain
-    on the smallest possible doc set — upstream stages (exact dedup,
-    excerpt removal) have already removed most twins, and a twin that
-    did NOT survive to the output cannot leak by definition.
+    ``paragraph_words`` (CCNet paragraph keep-first,
+    :func:`..operators.paragraphs.paragraph_dedup_keepfirst`): every
+    repeated ``paragraph_words``-word paragraph keeps only its first
+    ``(doc_id, chunk_idx)`` occurrence.  Each of the three rewrites
+    drops documents left with no text.
 
-    ``decontam_scrub_len`` switches the decontamination stage from the
-    document-DROP rule to SPAN-level scrubbing
-    (:func:`decontaminate_scrub`): every ≥ ``decontam_scrub_len``-token
-    verbatim eval overlap is removed from the surviving text and the
-    document stays in the corpus unless nothing remains (``clean_text
-    = ''`` exits, the span-stage rule).  Partially-contaminated
-    documents that the n-gram drop rule would discard wholesale are
-    retained minus exactly their overlapping spans — the data-efficient
-    decontamination discipline for long documents.  ``decontam_n`` is
-    ignored in this mode.  The corpus is REWRITTEN with the scrubbed
-    text (the substring/paragraph-stage pattern): every downstream
-    stage — token-budget mixture weights, the leakage-safe split's
-    near-dup clustering, and the ``return_text`` manifest — sees the
-    post-scrub text.  Consumers of an id-only manifest (``return_text
-    =False``) MUST NOT join text back from the raw document store in
-    scrub mode — that would re-import the verbatim eval spans; set
-    ``return_text=True`` (or materialize :func:`decontaminate_scrub`
-    separately) to ship the clean text.
+    Exact dedup (always): one document per distinct text, the lowest id.
 
-    ``return_text=True`` appends the final per-document text column to
-    the manifest — post-dedup text, and post-scrub in scrub mode — so
-    the manifest alone is a loadable corpus (id → text join already
-    done, on the cleaned side of every rewrite stage).  Default off:
-    an id manifest is what a 100 TB build materializes (the text join
-    runs in the loader against the staged clean corpus).
+    ``containment_t`` (excerpt removal,
+    :func:`..operators.dedup.containment_excerpt_drop`): drop each
+    document whose 3-gram shingle set is covered at least
+    ``containment_t`` by a document above it in the (set size ASC, id
+    DESC) order.  Running after exact dedup confines the pair join to
+    distinct texts.
 
-    ``mixture_unit="tokens"`` switches the resample stage from
-    doc-balanced (:func:`mixture_resample`) to TOKEN-budget-balanced
-    (:func:`weighted_mixture_resample` on whitespace-token counts of
-    the post-dedup — and, in scrub mode, post-scrub — text): every
-    domain contributes ≈ the same expected token mass, the unit a
-    training run actually budgets (doc-balanced mixtures silently
-    over-train low-fertility domains).  The rates stay pure rationals
-    of integer sums, so the composed build remains hash-checkable —
-    which is exactly why this form (and not float-pow temperature
-    scaling) is the one composed into the product.
+    Decontamination (always) against ``eval_docs``: by default drop
+    every document sharing a 3-gram with the eval set.
+    ``decontam_scrub_len`` switches to span scrubbing
+    (:func:`decontaminate_scrub`): every verbatim eval overlap of at
+    least that many tokens is removed from the text, documents left
+    with nothing drop, and every later stage (mixture weights, split
+    clustering, ``return_text``) sees the scrubbed text.  An id-only
+    manifest must not be joined back to the raw store in this mode; set
+    ``return_text=True`` to ship the clean text.
 
-    ``quality_gate=True`` prepends the Gopher composite gate
-    (:func:`..operators.text_analysis.gopher_quality_filter`) so
-    documents failing any of the six integer rules never reach the
-    heavier stages; ``span_words=N`` then runs C4-style
-    :func:`span_dedup` over the survivors and every later stage
-    (exact dedup, decontamination hashes, mixture) operates on the
-    span-cleaned text — documents whose every span was shared drop
-    out entirely.  Both default off, preserving the original
-    4-stage build.
+    Mixture (always): resample each source to the same expected
+    document count (:func:`mixture_resample`), or with
+    ``mixture_unit="tokens"`` the same expected whitespace-token count
+    of the current text (:func:`weighted_mixture_resample`).  The rates
+    are rationals of integer sums, so the build stays hash-checkable.
 
-    Stage plan shapes (nothing here is new — the composition is the
-    point): the gate adds one (doc, bigram) partial-aggregated shuffle
-    joined back on the id; span dedup shuffles 8-byte span hashes plus
-    the one unavoidable reassembly shuffle keyed on the id; dedup
-    shuffles md5 digests only; decontamination is a broadcast
-    semi-filter (no corpus shuffle); the mixture join broadcasts
-    #domains rows; sharding shuffles once on shard id.  Catalyst fuses
-    the narrow stages, so each stage's corpus pass is exactly the one
-    its own plan snapshot shows — composing them adds no new exchange.
-    Returns ``(key, domain, shard, shard_pos)`` — the manifest a
-    loader consumes.
+    Shards (always): :func:`shuffle_shards` into ``num_shards``.
 
-    STAGING BOUNDARIES: the extended stages each end in a self-join
-    back onto the corpus (gate-pass ids onto docs, clean spans onto
-    docs), and the downstream build references its input 2× per stage
-    (dedup keep-join, decontamination anti-join, mixture rate-join).
-    Composed strictly lazily those multiplicities compound — Catalyst
-    re-expands the gate+span subtree ~8×, turning a 33-exchange sum of
-    stages into a 200-exchange plan that re-scans the corpus per
-    reference.  A 100 TB build breaks exactly this chain with staging
-    tables between macro-stages; the local analogue is an eager
-    ``localCheckpoint`` after the gate and after the span reassembly,
-    which truncates lineage so each stage's bytes are computed once and
-    downstream sees a materialized scan (the checkpoint blocks live as
-    long as the returned frame — swap for a parquet staging write in a
-    real deployment, which also survives executor loss).
+    ``split_weights`` (leakage-safe split): cluster the final selection
+    with the md5 near-dup family
+    (:func:`..operators.dedup.near_dup_clusters`) and give each
+    document the md5-bucket split of its cluster id
+    (:func:`..operators.preprocess.dataset_split`), so near-duplicates
+    ship in the same split; the manifest gains a ``split`` column.
+
+    ``return_text`` appends the text of the last text-rewriting stage,
+    so the manifest alone is a loadable corpus.
+
+    Staging: each gate and rewrite ends in a join back onto the
+    corpus, and later stages reference their input two or three times.
+    Composed lazily, Catalyst re-expands those subtrees per reference
+    (a 33-exchange sum of stages became a 200-exchange plan), so the
+    fold stages (:func:`_stage`) the output of the LM gate, of the
+    Gopher gate when span dedup follows it, of each rewrite, of exact
+    dedup when excerpt removal or scrubbing follows, of excerpt
+    removal, of the scrub, and of the mixture when the split follows.
+    The checkpoint blocks live as long as the returned frame; a
+    production build writes staging tables instead.
     """
-    from .checkpoints import tracked_local_checkpoint
     from .dedup import exact_dedup_by_hash
-    from .text_analysis import gopher_quality_filter
 
+    key, text = key_col, text_col
+    split = split_weights is not None
+    steps = []  # (stage, staged, ships_text), in fold order
     if lm_train is not None:
-        # kn_doc_score touches the corpus once but its output joins
-        # back onto docs, and every later stage references docs 2-3×;
-        # stage the gated corpus so the scoring pass runs once.
         from .text_analysis import kn_doc_score
 
-        lm_pass = (
-            kn_doc_score(docs, train=lm_train, text_col=text_col, id_col=key_col)
-            .filter(F.col("kn_score") >= F.lit(lm_threshold))
-            .select(key_col)
-        )
-        docs = docs.join(lm_pass, key_col)
-        docs, _ = tracked_local_checkpoint(docs)
+        steps.append((
+            lambda d: _gate(d, kn_doc_score(d, train=lm_train, text_col=text, id_col=key)
+                            .filter(F.col("kn_score") >= F.lit(lm_threshold)), key),
+            True, True,
+        ))
     if quality_gate:
-        passed = gopher_quality_filter(
-            docs, text_col=text_col, id_col=key_col
-        ).where(F.col("keep")).select(key_col)
-        docs = docs.join(passed, key_col)
-        if span_words is not None:
-            # span_dedup references its input 3× (segments ×2, totals);
-            # stage the gated corpus so the gate runs once, not thrice.
-            docs, _ = tracked_local_checkpoint(docs)
-    if span_words is not None:
-        cleaned = span_dedup(
-            docs, span_words=span_words, id_col=key_col, text_col=text_col
-        ).where(F.col("clean_text") != "")
-        docs = docs.drop(text_col).join(
-            cleaned.select(key_col, F.col("clean_text").alias(text_col)), key_col
-        )
-        docs, _ = tracked_local_checkpoint(docs)
-    if substring_len is not None:
-        # the ExactSubstr chain references its input from three
-        # branches (window counts, hit lookup, rewrite/pass-through) —
-        # same staging rule as the span stage: checkpoint the cleaned
-        # corpus so downstream build branches re-scan a materialized
-        # table, not the window-hash subtree per consumer.
-        ss = substring_dedup(
-            docs,
-            min_len=substring_len,
-            min_count=substring_min_count,
-            id_col=key_col,
-            text_col=text_col,
-        ).where(F.col("clean_text") != "")
-        docs = docs.drop(text_col).join(
-            ss.select(key_col, F.col("clean_text").alias(text_col)), key_col
-        )
-        docs, _ = tracked_local_checkpoint(docs)
-    if paragraph_words is not None:
-        # keep-first paragraph dedup references its input from three
-        # branches (segments ×2 through the min-struct join, totals) —
-        # the same staging rule as the span and substring stages.
-        from .paragraphs import paragraph_dedup_keepfirst
+        from .text_analysis import gopher_quality_filter
 
-        pd = paragraph_dedup_keepfirst(
-            docs, para_words=paragraph_words, id_col=key_col, text_col=text_col
-        ).where(F.col("clean_text") != "")
-        docs = docs.drop(text_col).join(
-            pd.select(key_col, F.col("clean_text").alias(text_col)), key_col
-        )
-        docs, _ = tracked_local_checkpoint(docs)
+        steps.append((
+            lambda d: _gate(d, gopher_quality_filter(d, text_col=text, id_col=key)
+                            .where(F.col("keep")), key),
+            span_words is not None, True,
+        ))
+    from .paragraphs import paragraph_dedup_keepfirst
 
-    keep = exact_dedup_by_hash(docs, text_col=text_col, id_col=key_col).select(
-        F.col("keep_doc_id").alias(key_col)
-    )
-    # base feeds the decontamination shingle explode AND the anti join;
-    # clean feeds the mixture-rate aggregate AND the resample join.
-    # persist_intermediate materializes both so each corpus pass runs
-    # once instead of per consumer — a loss at test scale (cache cost
-    # exceeds the cheap recompute), the right call when a pass means
-    # re-scanning 100 TB; at that size prefer staging-table writes,
-    # which also survive executor loss.
-    base = docs.join(keep, key_col)
+    cleaners = [  # (enabled, text rewrite), in fold order
+        (span_words, lambda d: span_dedup(
+            d, span_words=span_words, id_col=key, text_col=text)),
+        (substring_len, lambda d: substring_dedup(
+            d, min_len=substring_len, min_count=_SUBSTRING_MIN_COUNT,
+            id_col=key, text_col=text)),
+        (paragraph_words, lambda d: paragraph_dedup_keepfirst(
+            d, para_words=paragraph_words, id_col=key, text_col=text)),
+    ]
+    steps += [
+        (lambda d, clean=clean: _rewrite(d, clean(d), key, text), True, True)
+        for enabled, clean in cleaners
+        if enabled is not None
+    ]
+    steps.append((
+        lambda d: d.join(exact_dedup_by_hash(d, text_col=text, id_col=key)
+                         .select(F.col("keep_doc_id").alias(key)), key),
+        containment_t is not None or decontam_scrub_len is not None, False,
+    ))
     if containment_t is not None:
         from .dedup import containment_excerpt_drop
 
-        # the excerpt stage references base many times (shingle sets,
-        # posting/prefix tables, verification arrays) — stage it so the
-        # upstream subtree is computed once, not per reference (the
-        # STAGING BOUNDARIES argument above)
-        base, _ = tracked_local_checkpoint(base)
-        drop = containment_excerpt_drop(
-            base,
-            threshold=containment_t,
-            shingle_n=containment_n,
-            id_col=key_col,
-            text_col=text_col,
-        ).withColumnRenamed("doc_id", key_col)
-        base = base.join(drop, key_col, "left_anti")
-        # the post-containment corpus is referenced by BOTH the
-        # decontamination branch and the mixture chain (which itself
-        # references its input twice — rates + keep), so a lazy `base`
-        # re-expands the join-heavy excerpt subtree 3× (measured: the
-        # full build's plan at 79 exchanges / 60 sort-merge joins with
-        # zero reuse).  Same staging rule as every other macro-stage.
-        base, _ = tracked_local_checkpoint(base)
-    if persist_intermediate:
-        base = base.persist()
-    clean_docs = docs  # corpus whose text downstream consumers see
+        steps.append((
+            lambda d: d.join(containment_excerpt_drop(
+                d, threshold=containment_t, shingle_n=_CONTAINMENT_N,
+                id_col=key, text_col=text,
+            ).withColumnRenamed("doc_id", key), key, "left_anti"),
+            True, False,
+        ))
     if decontam_scrub_len is not None:
-        # Span-scrub mode: the scrub chain references base from three
-        # branches (corpus windows, rewrite, pass-through) — the same
-        # staging rule as the front gates, so base's subtree computes
-        # once.  Only fully-contaminated docs (clean_text == '') exit,
-        # the span-stage rule; the surviving text is REWRITTEN to the
-        # scrubbed form (the substring/paragraph-stage pattern), so
-        # the mixture weights, the split-stage clustering, and the
-        # ``return_text`` manifest all operate on post-scrub text —
-        # the verbatim eval spans never reach a training consumer.
-        base, _ = tracked_local_checkpoint(base)
-        survivors = decontaminate_scrub(
-            base,
-            eval_docs,
-            min_len=decontam_scrub_len,
-            id_col=key_col,
-            text_col=text_col,
-        ).where(F.col("clean_text") != "")
-        base = base.drop(text_col).join(
-            survivors.select(
-                key_col,
-                F.col("clean_text").alias(text_col),
-                "n_tokens_kept",
-            ),
-            key_col,
-        )
-        # stage the REWRITTEN corpus too: the scrub subtree (window
-        # explode → islands → rewrite) would otherwise re-expand into
-        # every downstream reference (mixture weights, split-stage
-        # text, return_text join) — measured as the curated build's
-        # exchange count doubling when this was lazy.
-        base, _ = tracked_local_checkpoint(base)
-        clean_docs = base
-        if mixture_unit == "tokens":
-            # budget the tokens that actually remain after the scrub
-            clean = base.select(
-                key_col, by, F.col("n_tokens_kept").alias("_w")
-            )
-        else:
-            clean = base.select(key_col, by)
+        steps.append((
+            lambda d: _rewrite(d, decontaminate_scrub(
+                d, eval_docs, min_len=decontam_scrub_len, id_col=key, text_col=text,
+            ), key, text, "n_tokens_kept"),
+            True, True,
+        ))
+        weight = F.col("n_tokens_kept")
     else:
-        contaminated = decontaminate(
-            base, eval_docs, n=decontam_n, text_col=text_col, id_col=key_col
-        ).select(key_col)
-        keep_cols = [F.col(key_col), F.col(by)]
-        if mixture_unit == "tokens":
-            keep_cols.append(
-                F.size(F.split(F.col(text_col), " ")).cast("long").alias("_w")
-            )
-        clean = base.join(
-            F.broadcast(contaminated), key_col, "left_anti"
-        ).select(*keep_cols)
-    if persist_intermediate:
-        clean = clean.persist()
+        steps.append((
+            lambda d: d.join(F.broadcast(decontaminate(
+                d, eval_docs, n=_DECONTAM_N, text_col=text, id_col=key
+            ).select(key)), key, "left_anti"),
+            False, False,
+        ))
+        weight = F.size(F.split(F.col(text), " ")).cast("long")
     if mixture_unit == "tokens":
-        sampled = weighted_mixture_resample(
-            clean, "_w", by=by, key_col=key_col
-        ).select(key_col, by)
+        steps.append((
+            lambda d: weighted_mixture_resample(
+                d.select(key, _BY, weight.alias("_w")), "_w", by=_BY, key_col=key
+            ).select(key, _BY),
+            split, False,
+        ))
     else:
-        sampled = mixture_resample(clean, by=by, key_col=key_col)
-    if split_weights is not None:
-        # `sampled` re-roots the whole build subtree and is about to be
-        # referenced TWICE (shard layout + the split chain's doc set);
-        # stage it once (the STAGING BOUNDARIES argument above) so the
-        # split stage adds one pass over the selected ids, not a second
-        # full build execution.
-        sampled, _ = tracked_local_checkpoint(sampled)
-    manifest = shuffle_shards(sampled, key_col, num_shards).select(
-        key_col, by, "shard", "shard_pos"
-    )
-    if split_weights is None:
-        if return_text:
-            manifest = manifest.join(
-                clean_docs.select(key_col, text_col), key_col
-            ).select(key_col, by, "shard", "shard_pos", text_col)
-        return manifest
-    from .dedup import near_dup_clusters
-    from .preprocess import dataset_split
+        steps.append((
+            lambda d: mixture_resample(d.select(key, _BY), by=_BY, key_col=key),
+            split, False,
+        ))
 
-    # Leakage-safe split over the FINAL selection only; `clean_docs`
-    # is the gated corpus (post-scrub in scrub mode), already staged
-    # after the heavy gates, so the text join below is a cheap scan of
-    # that checkpoint.
-    sel = clean_docs.select(
-        F.col(key_col).alias("doc_id"), F.col(text_col).alias("text")
-    ).join(sampled.select(F.col(key_col).alias("doc_id")), "doc_id")
-    clusters = near_dup_clusters(
-        sel,
-        n_hashes=8,
-        bands=4,
-        threshold=0.5,
-        shingle_n=3,
-        max_bucket_size=None,
-        hash_family="md5",
-    )
-    split_map = dataset_split(
-        clusters, id_col="cluster_id", weights=split_weights
-    ).select(F.col("doc_id").alias(key_col), "split")
-    out = manifest.join(split_map, key_col).select(
-        key_col, by, "shard", "shard_pos", "split"
-    )
-    if return_text:
-        out = out.join(clean_docs.select(key_col, text_col), key_col).select(
-            key_col, by, "shard", "shard_pos", "split", text_col
+    cur = text_docs = docs
+    for stage, staged, ships_text in steps:
+        cur = stage(cur)
+        if staged:
+            cur = _stage(cur)
+        if ships_text:
+            text_docs = cur
+    sampled = cur
+
+    cols = [key, _BY, "shard", "shard_pos"]
+    out = shuffle_shards(sampled, key, num_shards).select(*cols)
+    if split:
+        from .dedup import near_dup_clusters
+        from .preprocess import dataset_split
+
+        # cluster the final selection only: a twin that did not
+        # survive to the output cannot leak
+        sel = text_docs.select(
+            F.col(key).alias("doc_id"), F.col(text).alias("text")
+        ).join(sampled.select(F.col(key).alias("doc_id")), "doc_id")
+        clusters = near_dup_clusters(
+            sel, n_hashes=8, bands=4, threshold=0.5, shingle_n=3,
+            max_bucket_size=None, hash_family="md5",
         )
+        split_map = dataset_split(
+            clusters, id_col="cluster_id", weights=split_weights
+        ).select(F.col("doc_id").alias(key), "split")
+        cols.append("split")
+        out = out.join(split_map, key).select(*cols)
+    if return_text:
+        out = out.join(text_docs.select(key, text), key).select(*cols, text)
     return out
 
 

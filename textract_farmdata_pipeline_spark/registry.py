@@ -61,8 +61,8 @@ _FAN_OUT_MAX_SPLIT = 128 * 1024 * 1024
 # a blanket repartition-to-cores taxed ~70 sub-second queries 0.3-0.7 s
 # each in 32-task downstream stages, while the heavy narrow chains
 # (shingle explodes, Arrow islands) keep nearly all of their win at
-# width ∝ size (A/B in OPTIMIZATION_r14.md: cheap tier back to
-# no-fan-out parity, heavy tier unchanged within noise).  Not a local
+# width ∝ size (an A/B over the registry put the cheap tier back at
+# no-fan-out parity, the heavy tier unchanged within noise).  Not a local
 # constant: width scales with the data and is capped by the session's
 # core count, and at production scale the split estimate short-circuits
 # the fan-out entirely.
@@ -2417,7 +2417,8 @@ def _compress_cents_link(sf_dir: str) -> str:
     """The published-signal location for a scale factor: a fixed
     symlink under the temp dir, atomically swapped by
     :func:`_publish_parquet_atomic` — readers (the DuckDB oracle, a
-    concurrent run) always see a complete, consistent parquet dir."""
+    concurrent run) always see a complete, consistent parquet dir.
+    ``_compress_cents_link("*")`` globs every scale's link."""
     import os
     import tempfile
 
@@ -2463,32 +2464,39 @@ def _publish_parquet_atomic(df: DataFrame, link_path: str) -> None:
 # the six integer rule predicates — shared by _GOPHER_ORACLE and the
 # compressibility-gated variant, so the two gates cannot drift (the
 # _LSH_EVAL_TAIL / _IVF_ASSIGN_CTES discipline).
-_GOPHER_CTES = """tok AS (
-  SELECT doc_id, string_split(text, ' ') AS t, length(text) AS nch FROM documents
+def _gopher_ctes(src: str = "documents", p: str = "") -> str:
+    """The Gopher statistics over ``src(doc_id, text)``, CTE names
+    prefixed with ``p``: per-doc token/char/stopword counts
+    (``{p}base``) and bigram repetition counts (``{p}grams``)."""
+    return f"""{p}tok AS (
+  SELECT doc_id, string_split(text, ' ') AS t, length(text) AS nch FROM {src}
 ),
-base AS (
+{p}base AS (
   SELECT doc_id,
     CAST(len(t) AS BIGINT) AS n_tokens,
     CAST(nch - (len(t) - 1) AS BIGINT) AS n_word_chars,
     CAST(len(list_distinct(list_filter(t,
       w -> w IN ('the','a','of','and','to','in','is','on','for','with')
     ))) AS BIGINT) AS n_distinct_stopwords
-  FROM tok
+  FROM {p}tok
 ),
-sh AS (
+{p}sh AS (
   SELECT doc_id, array_to_string(t[i : i + 1], ' ') AS shingle
-  FROM tok, LATERAL unnest(generate_series(1, greatest(len(t) - 1, 1))) AS u(i)
+  FROM {p}tok, LATERAL unnest(generate_series(1, greatest(len(t) - 1, 1))) AS u(i)
 ),
-per AS (
-  SELECT doc_id, shingle, COUNT(*) AS cnt FROM sh GROUP BY doc_id, shingle
+{p}per AS (
+  SELECT doc_id, shingle, COUNT(*) AS cnt FROM {p}sh GROUP BY doc_id, shingle
 ),
-grams AS (
+{p}grams AS (
   SELECT doc_id,
     CAST(SUM(cnt) AS BIGINT) AS n_bigrams,
     CAST(MAX(cnt) AS BIGINT) AS top_bigram_cnt,
     CAST(SUM(CASE WHEN cnt > 1 THEN cnt ELSE 0 END) AS BIGINT) AS dup_bigram_cnt
-  FROM per GROUP BY doc_id
+  FROM {p}per GROUP BY doc_id
 )"""
+
+
+_GOPHER_CTES = _gopher_ctes()
 
 
 def _gopher_rules_sql(extra: str = "") -> str:
@@ -2507,18 +2515,19 @@ def _gopher_rules_sql(extra: str = "") -> str:
   )"""
 
 
-def _compress_gate_oracle(link_path: str) -> str:
+def _compress_gate_oracle(link_glob: str) -> str:
     """The 7-rule quality-gate oracle: the shared _GOPHER_CTES six
     integer rules recomputed from ``documents``, plus the
     compressibility band applied to the PRECOMPUTED ``(doc_id,
-    n_bytes, n_zlib)`` signal published at ``link_path`` — the oracle
-    checks the GATING DECISION (exact integer-cent arithmetic
-    ``25·n_bytes ≤ 100·n_zlib ≤ 75·n_bytes``) and its composition
-    with the other rules; the zlib ratio itself honestly stays
-    rows-only (``doc_compressibility``).  Registered with the
-    driver's correctness scale (sf0.01 — the only scale the oracle
-    comparison ever runs at); tests regenerate the template for their
-    own scale."""
+    text_md5, n_bytes, n_zlib)`` signal published under the links
+    matching ``link_glob`` — the oracle checks the GATING DECISION
+    (exact integer-cent arithmetic ``25·n_bytes ≤ 100·n_zlib ≤
+    75·n_bytes``) and its composition with the other rules; the zlib
+    ratio itself honestly stays rows-only (``doc_compressibility``).
+    A published row applies to a document only when both its id and
+    the md5 of its text match, so the one registered oracle reads the
+    stats of whatever scale ``documents`` is: other scales' rows (or
+    stale ones) never join."""
     band = """,
     CASE WHEN NOT COALESCE(
            25 * n_bytes <= 100 * n_zlib AND 100 * n_zlib <= 75 * n_bytes
@@ -2528,15 +2537,16 @@ def _compress_gate_oracle(link_path: str) -> str:
     return f"""
 WITH {_GOPHER_CTES},
 cents AS (
-  SELECT doc_id, CAST(n_bytes AS BIGINT) AS n_bytes,
+  SELECT DISTINCT doc_id, text_md5, CAST(n_bytes AS BIGINT) AS n_bytes,
     CAST(n_zlib AS BIGINT) AS n_zlib
-  FROM read_parquet('{link_path}/*.parquet')
+  FROM read_parquet('{link_glob}/*.parquet', union_by_name = true)
 ),
 j AS (
   SELECT b.*, g.n_bigrams, g.top_bigram_cnt, g.dup_bigram_cnt,
     c.n_bytes, c.n_zlib
   FROM base b LEFT JOIN grams g USING (doc_id)
-  LEFT JOIN cents c USING (doc_id)
+  JOIN documents d USING (doc_id)
+  LEFT JOIN cents c ON c.doc_id = b.doc_id AND c.text_md5 = md5(d.text)
 )
 SELECT doc_id, n_tokens, n_word_chars, n_distinct_stopwords,
   n_bigrams, top_bigram_cnt, dup_bigram_cnt, n_bytes, n_zlib,
@@ -2548,7 +2558,7 @@ FROM j
 
 @register(
     "doc_quality_gate_compress",
-    _compress_gate_oracle(_compress_cents_link("/root/testdata/sf0.01")),
+    _compress_gate_oracle(_compress_cents_link("*")),
 )
 def doc_quality_gate_compress(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Gopher gate with the zlib compressibility band wired in as
@@ -2558,16 +2568,20 @@ def doc_quality_gate_compress(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer-cent thresholds ``25·n_bytes ≤ 100·n_zlib ≤
     75·n_bytes`` composed into the six integer Gopher rules.  The
     oracle reads the SAME published stats and replays the decision and
-    its composition — so what's hash-checked is the gate, while the
+    its composition (keyed by id and text md5, so it reads the scale
+    it runs at) — so what's hash-checked is the gate, while the
     DEFLATE ratio itself honestly stays rows-only
     (``doc_compressibility``).  Scale shape: one map-only zlib pass,
     the Gopher plan unchanged, one equality join on the id."""
     from .operators.text_analysis import compressibility, gopher_quality_filter
 
     docs = _t(spark, sf_dir, "documents")
-    stats = compressibility(docs)
+    stats = compressibility(docs).join(
+        docs.select("doc_id", F.md5("text").alias("text_md5")), "doc_id"
+    )
     _publish_parquet_atomic(
-        stats.select("doc_id", "n_bytes", "n_zlib"), _compress_cents_link(sf_dir)
+        stats.select("doc_id", "text_md5", "n_bytes", "n_zlib"),
+        _compress_cents_link(sf_dir),
     )
     published = spark.read.parquet(_compress_cents_link(sf_dir))
     return gopher_quality_filter(docs, compress_stats=published)
@@ -2815,15 +2829,21 @@ def doc_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stratified_sample(docs, "lang", 20, "doc_id")
 
 
-_SHARDS_ORACLE = """
+def _shard_select(src: str, n: int, cols: str = "doc_id") -> str:
+    """``cols`` of ``src`` plus ``shuffle_shards``' md5 shard of the
+    doc id in ``[0, n)`` and its in-shard order key ``h``."""
+    return f"""SELECT {cols},
+    CAST('0x' || substr(md5('|shard' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)
+      % {n} AS shard,
+    md5(CAST(doc_id AS VARCHAR)) AS h
+  FROM {src}"""
+
+
+_SHARDS_ORACLE = f"""
 SELECT doc_id, shard,
   CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY h) AS INTEGER) AS shard_pos
 FROM (
-  SELECT doc_id,
-    CAST('0x' || substr(md5('|shard' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)
-      % 8 AS shard,
-    md5(CAST(doc_id AS VARCHAR)) AS h
-  FROM documents
+  {_shard_select("documents", 8)}
 ) s
 """
 
@@ -5055,7 +5075,8 @@ SELECT l_returnflag,
   CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*)
     AS mean_price,
   sqrt(
-    (CAST(SUM(CAST(l_extendedprice * l_extendedprice AS DECIMAL(28,4))) AS DOUBLE)
+    (CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
+                   * CAST(l_extendedprice AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE)
      - CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
        * CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*))
     / (COUNT(*) - 1)
@@ -5068,18 +5089,22 @@ FROM lineitem GROUP BY l_returnflag
 def lineitem_stats_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column statistics profile: exact percentiles + mean/stddev.
 
-    stddev is computed from decimal SUM/SUM-of-squares (order-exact
-    partials; the built-in ``stddev`` accumulates doubles and is
-    order-dependent) and one IEEE ``sqrt`` (correctly rounded by spec,
-    so bit-identical on any engine).  Exact ``percentile`` is a
+    stddev is computed from decimal SUM/SUM-of-squares of the
+    ``DECIMAL(18,2)`` price (exact, order-independent partials; the
+    built-in ``stddev`` accumulates doubles and is order-dependent),
+    each converted to double once with correct rounding, then IEEE
+    arithmetic and one ``sqrt`` (correctly rounded by spec), so the
+    result is bit-identical on any engine.  The oracle converts the
+    sum of squares through its decimal string: DuckDB's direct
+    ``DECIMAL(38,4)`` → ``DOUBLE`` cast rounds twice above 2^53 and
+    missed by one ulp at sf0.001.  Exact ``percentile`` is a
     per-group sort — fine for bounded groups; at 100 TB unbounded
     cardinality switch to ``approx_percentile`` (t-digest, map-side
     mergeable)."""
     li = _t(spark, sf_dir, "lineitem")
-    s = F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast("double")
-    sq = F.sum(
-        (F.col("l_extendedprice") * F.col("l_extendedprice")).cast("decimal(28,4)")
-    ).cast("double")
+    price = F.col("l_extendedprice").cast("decimal(18,2)")
+    s = F.sum(price).cast("double")
+    sq = F.sum(price * price).cast("double")
     n = F.count("*")
     return (
         li.groupBy("l_returnflag")
@@ -5453,20 +5478,131 @@ def customer_scd2_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CORPUS_BUILD_ORACLE = """
-WITH dedup AS (
-  SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY md5(text)
+def _span_dedup_ctes(src: str, w: int) -> str:
+    """C4 span dedup over ``src(doc_id, text)``: non-overlapping
+    ``w``-word spans, every span found in two or more documents dropped
+    from all of them; ``agg(doc_id, clean_text, n_spans_kept)``."""
+    return f"""seg AS (
+  SELECT doc_id, CAST(i - 1 AS INTEGER) AS ci,
+    array_to_string(toks[(i-1)*{w} + 1 : (i-1)*{w} + {w}], ' ') AS seg
+  FROM (
+    SELECT doc_id, string_split(text, ' ') AS toks,
+      greatest(CAST(ceil(len(string_split(text, ' ')) / {w}.0) AS BIGINT), 1) AS nc
+    FROM {src}
+  ) d, LATERAL unnest(generate_series(1, nc)) AS t(i)
 ),
-base AS (
-  SELECT d.doc_id, d.text, d.source FROM documents d JOIN dedup USING (doc_id)
+dup AS (
+  SELECT seg FROM seg GROUP BY seg HAVING COUNT(DISTINCT doc_id) >= 2
 ),
-toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM base),
+kept AS (
+  SELECT s.doc_id, s.ci, s.seg
+  FROM seg s LEFT JOIN dup d ON s.seg = d.seg
+  WHERE d.seg IS NULL
+),
+agg AS (
+  SELECT doc_id, string_agg(seg, ' ' ORDER BY ci) AS clean_text,
+         CAST(COUNT(*) AS INTEGER) AS n_spans_kept
+  FROM kept GROUP BY doc_id
+)"""
+
+
+def _corpus_ctes(
+    head: str | None = None,
+    *,
+    lm: bool = False,
+    gopher: bool = False,
+    span: int | None = None,
+    substring: int | None = None,
+    paragraph: int | None = None,
+    containment: bool = False,
+    scrub: int | None = None,
+    eval_mod: int = 97,
+    mixture: str = "docs",
+    split: bool = False,
+) -> str:
+    """The CTE chain of every corpus-build oracle, one piece per
+    ``build_corpus`` stage in its fold order; the keywords mirror
+    ``build_corpus``'s (16 shards, 3-gram drop rule, containment 0.8,
+    LM threshold ``_LM_GATE_THRESHOLD``).
+
+    ``head`` is a registration's own gate: CTEs ending in ``gated(doc_id,
+    text, source)`` over ``documents``; without one the chain starts at
+    ``documents``.  Each stage reads the previous stage's corpus, and
+    the eval holdout ``doc_id % eval_mod`` always reads the raw
+    ``documents``.  The chain ends in ``clean(doc_id, source, text)``
+    (the decontaminated corpus with the text later stages see),
+    ``sampled(doc_id, source)``, ``shards(doc_id, source, shard, h)``
+    and, with ``split``, the ``sp``-prefixed split chain over the
+    selection's clean text (``spsplit``, ``spfix``)."""
+    ctes = [head] if head else []
+    cur = "gated" if head else "documents"
+
+    def rewritten(name: str, agg: str) -> str:
+        return f"""{name} AS (
+  SELECT d.doc_id, COALESCE(a.clean_text, '') AS text, d.source
+  FROM {cur} d LEFT JOIN {agg} a USING (doc_id)
+  WHERE COALESCE(a.clean_text, '') <> ''
+)"""
+
+    if lm:
+        ctes += [
+            _kn_chain_ctes(cur),
+            f"""lmpass AS (
+  SELECT doc_id FROM scn GROUP BY doc_id
+  HAVING CAST(CAST(SUM(num) AS BIGINT) AS DOUBLE)
+         / CAST(CAST(SUM(den) AS BIGINT) AS DOUBLE) >= {_LM_GATE_THRESHOLD!r}::DOUBLE
+)""",
+            f"lmgated AS (SELECT d.doc_id, d.text, d.source FROM {cur} d JOIN lmpass USING (doc_id))",
+        ]
+        cur = "lmgated"
+    if gopher:
+        ctes += [
+            _gopher_ctes(cur, "g"),
+            f"""passed AS (
+  SELECT doc_id FROM gbase LEFT JOIN ggrams USING (doc_id)
+  WHERE {_gopher_rules_sql()} = ''
+)""",
+            f"qgated AS (SELECT d.doc_id, d.text, d.source FROM {cur} d JOIN passed USING (doc_id))",
+        ]
+        cur = "qgated"
+    if span is not None:
+        ctes += [_span_dedup_ctes(cur, span), rewritten("spangated", "agg")]
+        cur = "spangated"
+    if substring is not None:
+        ctes += [_substring_removal_ctes(substring, cur), rewritten("ssgated", "ssagg")]
+        cur = "ssgated"
+    if paragraph is not None:
+        ctes += [_para_keepfirst_ctes(cur, paragraph), rewritten("pgated", "pagg")]
+        cur = "pgated"
+    ctes += [
+        f"""dedup AS (
+  SELECT MIN(doc_id) AS doc_id FROM {cur} GROUP BY md5(text)
+)""",
+        f"""base AS (
+  SELECT d.doc_id, d.text, d.source FROM {cur} d JOIN dedup USING (doc_id)
+)""",
+    ]
+    cur = "base"
+    if containment:
+        ctes.append(_containment_drop_ctes(cur, "text"))
+        cur = "cbase"
+    if scrub is not None:
+        ctes += [
+            _dc_scrub_ctes(cur, f"doc_id % {eval_mod} = 0", scrub),
+            f"""clean AS (
+  SELECT b.doc_id, b.source, a.clean_text AS text
+  FROM {cur} b JOIN dcagg a USING (doc_id)
+  WHERE a.clean_text <> ''
+)""",
+        ]
+    else:
+        ctes.append(f"""toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM {cur}),
 sh AS (
   SELECT doc_id, array_to_string(t[i : i + 2], ' ') AS shingle
   FROM toks, LATERAL unnest(generate_series(1, greatest(len(t) - 2, 1))) AS u(i)
 ),
 evtoks AS (
-  SELECT doc_id, string_split(text, ' ') AS t FROM documents WHERE doc_id % 97 = 0
+  SELECT doc_id, string_split(text, ' ') AS t FROM documents WHERE doc_id % {eval_mod} = 0
 ),
 evsh AS (
   SELECT DISTINCT array_to_string(t[i : i + 2], ' ') AS shingle
@@ -5474,33 +5610,55 @@ evsh AS (
 ),
 contaminated AS (SELECT DISTINCT s.doc_id FROM sh s JOIN evsh USING (shingle)),
 clean AS (
-  SELECT b.doc_id, b.source FROM base b
+  SELECT b.doc_id, b.source, b.text FROM {cur} b
   WHERE NOT EXISTS (SELECT 1 FROM contaminated c WHERE c.doc_id = b.doc_id)
-),
-counts AS (SELECT source, COUNT(*) AS n_docs FROM clean GROUP BY source),
-tot AS (SELECT SUM(n_docs) AS total, COUNT(*) AS n_groups FROM counts),
+)""")
+    # Mixture: every source keeps rate min(1, (total / #sources) / own),
+    # in documents or in whitespace tokens of the current text.
+    weight = "CAST(len(string_split(text, ' ')) AS BIGINT)" if mixture == "tokens" else "1"
+    ctes.append(f"""counts AS (SELECT source, SUM({weight}) AS n FROM clean GROUP BY source),
+tot AS (SELECT SUM(n) AS total, COUNT(*) AS n_groups FROM counts),
 rates AS (
-  SELECT source, LEAST(1.0, CAST(total AS DOUBLE) / n_groups / n_docs) AS rate
+  SELECT source, LEAST(1.0, CAST(total AS DOUBLE) / n_groups / CAST(n AS DOUBLE)) AS rate
   FROM counts, tot
 ),
 sampled AS (
   SELECT c.doc_id, c.source FROM clean c JOIN rates r USING (source)
   WHERE CAST('0x' || substr(md5(CAST(c.doc_id AS VARCHAR)), 1, 8) AS BIGINT)
         % 1000000 < r.rate * 1000000
-)
-SELECT doc_id, source, shard,
-  CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY h) AS INTEGER) AS shard_pos
-FROM (
-  SELECT doc_id, source,
-    CAST('0x' || substr(md5('|shard' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)
-      % 16 AS shard,
-    md5(CAST(doc_id AS VARCHAR)) AS h
-  FROM sampled
-) s
+),
+shards AS (
+  {_shard_select("sampled", 16, "doc_id, source")}
+)""")
+    if split:
+        # cluster the final selection's clean text: a twin that did not
+        # survive to the output cannot leak
+        ctes += [
+            "spdocs AS (SELECT c.doc_id, c.text FROM clean c JOIN sampled USING (doc_id))",
+            _split_chain_ctes("sp", "spdocs"),
+        ]
+    return ",\n".join(ctes)
+
+
+def _corpus_chain_sql(head: str | None = None, *, text: bool = False, **stages) -> str:
+    """A corpus-build oracle: :func:`_corpus_ctes` then the manifest
+    ``(doc_id, source, shard, shard_pos[, split][, text])``.  With a
+    split stage the fixpoint guard empties the result if the unrolled
+    clustering did not converge, and every CTE is materialized (the
+    unrolled rounds read their predecessor twice)."""
+    split = stages.get("split", False)
+    sql = f"""
+WITH {_corpus_ctes(head, **stages)}
+SELECT s.doc_id, s.source, s.shard,
+  CAST(ROW_NUMBER() OVER (PARTITION BY s.shard ORDER BY s.h) AS INTEGER)
+    AS shard_pos{", sp.split" if split else ""}{", c.text" if text else ""}
+FROM shards s{" JOIN spsplit sp USING (doc_id)" if split else ""}{" JOIN clean c USING (doc_id)" if text else ""}
+{"WHERE (SELECT n_moved FROM spfix) = 0" if split else ""}
 """
+    return _force_materialized(sql) if split else sql
 
 
-@register("corpus_build_pipeline", _CORPUS_BUILD_ORACLE)
+@register("corpus_build_pipeline", _corpus_chain_sql())
 def corpus_build_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed corpus build: exact dedup → 3-gram decontamination
     against the doc_id%97 holdout → uniform source mixture → 16-shard
@@ -5510,21 +5668,17 @@ def corpus_build_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     return build_corpus(
-        docs, docs.filter(F.col("doc_id") % 97 == 0), num_shards=16, decontam_n=3
+        docs, docs.filter(F.col("doc_id") % 97 == 0), num_shards=16
     )
 
 
-# The source-gated build: the domain-blocklist decision
-# (_SOURCE_GATE_ORACLE's CTEs, sg-prefixed) feeds a keep-list that
-# pre-filters the corpus BEFORE the 4-stage build — the stage order a
-# real pipeline wants, because a blocked source then never pays
-# per-document dedup/decontamination cost.  The build chain is
-# _CORPUS_BUILD_ORACLE verbatim, re-rooted on the gated corpus; the
-# eval holdout stays rooted on the FULL corpus (the eval set is
-# external to curation — gating the training side must not change
-# what you decontaminate against).
-_CORPUS_BUILD_SOURCE_GATED_ORACLE = """
-WITH sgd AS (
+# The source-gated build: the domain-blocklist decision (sg-prefixed)
+# reduces to a keep-list of sources that gates the corpus BEFORE the
+# build, so a blocked source never pays per-document dedup or
+# decontamination cost.  The eval holdout stays rooted on the FULL
+# corpus (gating the training side must not change what you
+# decontaminate against).
+_SOURCE_GATE_HEAD = """sgd AS (
   SELECT source, md5(coalesce(text, '')) AS h,
     (len(list_filter(string_split(coalesce(text, ''), ' '),
          t -> t IN ('the','a','of','and','to','in','is','on','for','with')))
@@ -5546,54 +5700,10 @@ sgkeep AS (
 ),
 gated AS (
   SELECT d.doc_id, d.text, d.source FROM documents d JOIN sgkeep USING (source)
-),
-dedup AS (
-  SELECT MIN(doc_id) AS doc_id FROM gated GROUP BY md5(text)
-),
-base AS (
-  SELECT g.doc_id, g.text, g.source FROM gated g JOIN dedup USING (doc_id)
-),
-toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM base),
-sh AS (
-  SELECT doc_id, array_to_string(t[i : i + 2], ' ') AS shingle
-  FROM toks, LATERAL unnest(generate_series(1, greatest(len(t) - 2, 1))) AS u(i)
-),
-evtoks AS (
-  SELECT doc_id, string_split(text, ' ') AS t FROM documents WHERE doc_id % 97 = 0
-),
-evsh AS (
-  SELECT DISTINCT array_to_string(t[i : i + 2], ' ') AS shingle
-  FROM evtoks, LATERAL unnest(generate_series(1, greatest(len(t) - 2, 1))) AS u(i)
-),
-contaminated AS (SELECT DISTINCT s.doc_id FROM sh s JOIN evsh USING (shingle)),
-clean AS (
-  SELECT b.doc_id, b.source FROM base b
-  WHERE NOT EXISTS (SELECT 1 FROM contaminated c WHERE c.doc_id = b.doc_id)
-),
-counts AS (SELECT source, COUNT(*) AS n_docs FROM clean GROUP BY source),
-tot AS (SELECT SUM(n_docs) AS total, COUNT(*) AS n_groups FROM counts),
-rates AS (
-  SELECT source, LEAST(1.0, CAST(total AS DOUBLE) / n_groups / n_docs) AS rate
-  FROM counts, tot
-),
-sampled AS (
-  SELECT c.doc_id, c.source FROM clean c JOIN rates r USING (source)
-  WHERE CAST('0x' || substr(md5(CAST(c.doc_id AS VARCHAR)), 1, 8) AS BIGINT)
-        % 1000000 < r.rate * 1000000
-)
-SELECT doc_id, source, shard,
-  CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY h) AS INTEGER) AS shard_pos
-FROM (
-  SELECT doc_id, source,
-    CAST('0x' || substr(md5('|shard' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)
-      % 16 AS shard,
-    md5(CAST(doc_id AS VARCHAR)) AS h
-  FROM sampled
-) s
-"""
+)"""
 
 
-@register("corpus_build_source_gated", _CORPUS_BUILD_SOURCE_GATED_ORACLE)
+@register("corpus_build_source_gated", _corpus_chain_sql(_SOURCE_GATE_HEAD))
 def corpus_build_source_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 4-stage corpus build with :func:`source_quality_gate`
     composed in FRONT: the |sources|-row block decision broadcasts
@@ -5630,127 +5740,14 @@ def corpus_build_source_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("source").isin(keep) if keep else F.lit(False)
     )
     return build_corpus(
-        gated, docs.filter(F.col("doc_id") % 97 == 0), num_shards=16, decontam_n=3
+        gated, docs.filter(F.col("doc_id") % 97 == 0), num_shards=16
     )
 
 
-# The full 6-stage build: the Gopher gate and C4 span dedup (both
-# independently oracle-green) prepended to the 4-stage build above, as
-# ONE CTE chain.  The gate/span CTEs are verbatim the ones from
-# _GOPHER_ORACLE / _SPAN_DEDUP_ORACLE, re-rooted on the previous
-# stage's output; the tail is _CORPUS_BUILD_ORACLE on the span-cleaned
-# text (so dedup digests and decontamination shingles see clean_text).
-_CORPUS_BUILD_FULL_ORACLE = f"""
-WITH tok AS (
-  SELECT doc_id, string_split(text, ' ') AS t, length(text) AS nch FROM documents
-),
-gbase AS (
-  SELECT doc_id,
-    CAST(len(t) AS BIGINT) AS n_tokens,
-    CAST(nch - (len(t) - 1) AS BIGINT) AS n_word_chars,
-    CAST(len(list_distinct(list_filter(t,
-      w -> w IN ('the','a','of','and','to','in','is','on','for','with')
-    ))) AS BIGINT) AS n_distinct_stopwords
-  FROM tok
-),
-gsh AS (
-  SELECT doc_id, array_to_string(t[i : i + 1], ' ') AS shingle
-  FROM tok, LATERAL unnest(generate_series(1, greatest(len(t) - 1, 1))) AS u(i)
-),
-gper AS (
-  SELECT doc_id, shingle, COUNT(*) AS cnt FROM gsh GROUP BY doc_id, shingle
-),
-ggrams AS (
-  SELECT doc_id,
-    CAST(SUM(cnt) AS BIGINT) AS n_bigrams,
-    CAST(MAX(cnt) AS BIGINT) AS top_bigram_cnt,
-    CAST(SUM(CASE WHEN cnt > 1 THEN cnt ELSE 0 END) AS BIGINT) AS dup_bigram_cnt
-  FROM gper GROUP BY doc_id
-),
-passed AS (
-  SELECT b.doc_id FROM gbase b LEFT JOIN ggrams g USING (doc_id)
-  WHERE b.n_tokens >= 30 AND b.n_tokens <= 100000
-    AND b.n_word_chars >= 3 * b.n_tokens AND b.n_word_chars <= 10 * b.n_tokens
-    AND b.n_distinct_stopwords >= 2
-    AND NOT COALESCE(g.top_bigram_cnt * 5 > g.n_bigrams, FALSE)
-    AND NOT COALESCE(g.dup_bigram_cnt * 2 > g.n_bigrams, FALSE)
-),
-gated AS (
-  SELECT d.doc_id, d.text, d.source FROM documents d JOIN passed USING (doc_id)
-),
-seg AS (
-  SELECT doc_id, CAST(i - 1 AS INTEGER) AS ci,
-    array_to_string(toks[(i-1)*10 + 1 : (i-1)*10 + 10], ' ') AS seg
-  FROM (
-    SELECT doc_id, string_split(text, ' ') AS toks,
-      greatest(CAST(ceil(len(string_split(text, ' ')) / 10.0) AS BIGINT), 1) AS nc
-    FROM gated
-  ) d, LATERAL unnest(generate_series(1, nc)) AS t(i)
-),
-dup AS (
-  SELECT seg FROM seg GROUP BY seg HAVING COUNT(DISTINCT doc_id) >= 2
-),
-kept AS (
-  SELECT s.doc_id, s.ci, s.seg
-  FROM seg s LEFT JOIN dup d ON s.seg = d.seg
-  WHERE d.seg IS NULL
-),
-clean_docs AS (
-  SELECT g.doc_id, a.clean_text, g.source
-  FROM gated g JOIN (
-    SELECT doc_id, string_agg(seg, ' ' ORDER BY ci) AS clean_text
-    FROM kept GROUP BY doc_id
-  ) a USING (doc_id)
-  WHERE a.clean_text <> ''
-),
-dedup AS (
-  SELECT MIN(doc_id) AS doc_id FROM clean_docs GROUP BY md5(clean_text)
-),
-base AS (
-  SELECT c.doc_id, c.clean_text, c.source FROM clean_docs c JOIN dedup USING (doc_id)
-),
-{_containment_drop_ctes("base", "clean_text")},
-toks2 AS (SELECT doc_id, string_split(clean_text, ' ') AS t FROM cbase),
-sh AS (
-  SELECT doc_id, array_to_string(t[i : i + 2], ' ') AS shingle
-  FROM toks2, LATERAL unnest(generate_series(1, greatest(len(t) - 2, 1))) AS u(i)
-),
-evtoks AS (
-  SELECT doc_id, string_split(text, ' ') AS t FROM documents WHERE doc_id % 97 = 0
-),
-evsh AS (
-  SELECT DISTINCT array_to_string(t[i : i + 2], ' ') AS shingle
-  FROM evtoks, LATERAL unnest(generate_series(1, greatest(len(t) - 2, 1))) AS u(i)
-),
-contaminated AS (SELECT DISTINCT s.doc_id FROM sh s JOIN evsh USING (shingle)),
-clean AS (
-  SELECT b.doc_id, b.source FROM cbase b
-  WHERE NOT EXISTS (SELECT 1 FROM contaminated c WHERE c.doc_id = b.doc_id)
-),
-counts AS (SELECT source, COUNT(*) AS n_docs FROM clean GROUP BY source),
-tot AS (SELECT SUM(n_docs) AS total, COUNT(*) AS n_groups FROM counts),
-rates AS (
-  SELECT source, LEAST(1.0, CAST(total AS DOUBLE) / n_groups / n_docs) AS rate
-  FROM counts, tot
-),
-sampled AS (
-  SELECT c.doc_id, c.source FROM clean c JOIN rates r USING (source)
-  WHERE CAST('0x' || substr(md5(CAST(c.doc_id AS VARCHAR)), 1, 8) AS BIGINT)
-        % 1000000 < r.rate * 1000000
+@register(
+    "corpus_build_full",
+    _corpus_chain_sql(gopher=True, span=10, containment=True),
 )
-SELECT doc_id, source, shard,
-  CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY h) AS INTEGER) AS shard_pos
-FROM (
-  SELECT doc_id, source,
-    CAST('0x' || substr(md5('|shard' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)
-      % 16 AS shard,
-    md5(CAST(doc_id AS VARCHAR)) AS h
-  FROM sampled
-) s
-"""
-
-
-@register("corpus_build_full", _CORPUS_BUILD_FULL_ORACLE)
 def corpus_build_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full 7-stage corpus build, one lazy plan: Gopher quality
     gate → C4 10-word span dedup (later stages see the cleaned text) →
@@ -5759,9 +5756,8 @@ def corpus_build_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     -id) order — the r06 cover-map primitive composed into the
     product) → 3-gram decontamination against the doc_id%97 holdout →
     uniform source mixture → 16-shard training layout.  Hash-checked
-    against the single-CTE-chain SQL composing the independently-green
-    oracles (_GOPHER_ORACLE, _SPAN_DEDUP_ORACLE, _CONTAINMENT_CTES'
-    drop chain, _CORPUS_BUILD_ORACLE)."""
+    against the ``_corpus_chain_sql`` oracle, whose Gopher, span and
+    containment pieces are the standalone oracles' own CTEs."""
     from .operators.corpus import build_corpus
 
     docs = _t(spark, sf_dir, "documents")
@@ -5769,7 +5765,6 @@ def corpus_build_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs,
         docs.filter(F.col("doc_id") % 97 == 0),
         num_shards=16,
-        decontam_n=3,
         quality_gate=True,
         span_words=10,
         containment_t=0.8,
@@ -7127,29 +7122,8 @@ def lineitem_footer_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SPAN_DEDUP_ORACLE = """
-WITH seg AS (
-  SELECT doc_id, CAST(i - 1 AS INTEGER) AS ci,
-    array_to_string(toks[(i-1)*10 + 1 : (i-1)*10 + 10], ' ') AS seg
-  FROM (
-    SELECT doc_id, string_split(text, ' ') AS toks,
-      greatest(CAST(ceil(len(string_split(text, ' ')) / 10.0) AS BIGINT), 1) AS nc
-    FROM documents
-  ) d, LATERAL unnest(generate_series(1, nc)) AS t(i)
-),
-dup AS (
-  SELECT seg FROM seg GROUP BY seg HAVING COUNT(DISTINCT doc_id) >= 2
-),
-kept AS (
-  SELECT s.doc_id, s.ci, s.seg
-  FROM seg s LEFT JOIN dup d ON s.seg = d.seg
-  WHERE d.seg IS NULL
-),
-agg AS (
-  SELECT doc_id, string_agg(seg, ' ' ORDER BY ci) AS clean_text,
-         CAST(COUNT(*) AS INTEGER) AS n_spans_kept
-  FROM kept GROUP BY doc_id
-),
+_SPAN_DEDUP_ORACLE = f"""
+WITH {_span_dedup_ctes("documents", 10)},
 tot AS (
   SELECT doc_id,
     CAST(greatest(CAST(ceil(len(string_split(text, ' ')) / 10.0) AS BIGINT), 1)
@@ -7240,28 +7214,30 @@ def corpus_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The removal tail shared by the standalone removal query and the
-# substring-gated corpus build — ONE definition of the token-level
-# rewrite (the _mh_side_ctes discipline).
-def _substring_removal_ctes(L: int, src: str = "documents") -> str:
-    """Decision chain + the token-level removal tail (the SQL twin of
-    the shared ``_remove_spans`` rewrite) — same parameterization."""
-    return f"""{_substring_ctes(L, src)},
-sstokpos AS (
+def _span_removal_ctes(p: str) -> str:
+    """Token-level removal (the SQL twin of the shared ``_remove_spans``
+    rewrite): drop every token of ``{p}toks`` inside a ``{p}spans``
+    span and reassemble ``{p}agg(doc_id, clean_text, n_kept)``."""
+    return f"""{p}tokpos AS (
   SELECT doc_id, i AS pos, t[i] AS tok
-  FROM sstoks, LATERAL unnest(generate_series(1, len(t))) AS u(i)
+  FROM {p}toks, LATERAL unnest(generate_series(1, len(t))) AS u(i)
 ),
-sskept AS (
+{p}kept AS (
   SELECT k.doc_id, k.pos, k.tok
-  FROM sstokpos k LEFT JOIN ssspans s
+  FROM {p}tokpos k LEFT JOIN {p}spans s
     ON k.doc_id = s.doc_id AND k.pos BETWEEN s.span_start AND s.span_end
   WHERE s.doc_id IS NULL
 ),
-ssagg AS (
+{p}agg AS (
   SELECT doc_id, string_agg(tok, ' ' ORDER BY pos) AS clean_text,
     CAST(COUNT(*) AS BIGINT) AS n_kept
-  FROM sskept GROUP BY doc_id
+  FROM {p}kept GROUP BY doc_id
 )"""
+
+
+def _substring_removal_ctes(L: int, src: str = "documents") -> str:
+    """ExactSubstr decision chain + the token-level removal tail."""
+    return f"{_substring_ctes(L, src)},\n{_span_removal_ctes('ss')}"
 
 
 _SUBSTRING_REMOVAL_CTES = _substring_removal_ctes(12)
@@ -7363,28 +7339,7 @@ def corpus_substring_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return incremental_substring_spans(stored, batch, min_len=12, min_count=2)
 
 
-# ExactSubstr composed in FRONT of the 4-stage build: the ss-chain
-# rewrites the corpus text (fully-duplicated docs drop, the span-stage
-# rule), and the build tail is sliced VERBATIM from
-# _CORPUS_BUILD_SOURCE_GATED_ORACLE at its ``dedup AS (`` root — the
-# same one-definition slice the DSIR-gated build uses, so the gated
-# build chain has exactly one spelling.  The eval holdout inside that
-# tail stays the FULL corpus's doc_id % 97 slice over RAW text
-# (curation must not change what you decontaminate against).
-_CORPUS_BUILD_SUBSTR_ORACLE = (
-    f"""
-WITH {_SUBSTRING_REMOVAL_CTES},
-gated AS (
-  SELECT d.doc_id, COALESCE(a.clean_text, '') AS text, d.source
-  FROM documents d LEFT JOIN ssagg a ON a.doc_id = d.doc_id
-  WHERE COALESCE(a.clean_text, '') <> ''
-),
-dedup AS ("""
-    + _CORPUS_BUILD_SOURCE_GATED_ORACLE.split("dedup AS (", 1)[1]
-)
-
-
-@register("corpus_build_substring_gated", _CORPUS_BUILD_SUBSTR_ORACLE)
+@register("corpus_build_substring_gated", _corpus_chain_sql(substring=12))
 def corpus_build_substring_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 4-stage corpus build with the ExactSubstr stage composed in
     FRONT (``build_corpus(substring_len=12)``): every duplicated
@@ -7394,9 +7349,8 @@ def corpus_build_substring_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Lee et al. 2022 layer in its production position.  The
     substring-cleaned corpus is staged once (localCheckpoint) so the
     window-hash chain runs once, not per build branch; the eval
-    holdout is pinned to the RAW corpus.  Oracle: the ss removal chain
-    re-rooted as ``gated`` + the gated build tail sliced verbatim from
-    the source-gated oracle."""
+    holdout is pinned to the RAW corpus.  Oracle: ``_corpus_chain_sql``
+    with the ss removal chain as its substring stage."""
     from .operators.corpus import build_corpus
 
     docs = _t(spark, sf_dir, "documents")
@@ -7404,7 +7358,6 @@ def corpus_build_substring_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs,
         docs.filter(F.col("doc_id") % 97 == 0),
         num_shards=16,
-        decontam_n=3,
         substring_len=12,
     )
 
@@ -7422,31 +7375,36 @@ def corpus_build_substring_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
 # holdout (the % 97 slice shares almost no ≥8-token window with the
 # rest of this corpus — measured, not assumed).
 # =========================================================================
-_DECONTAM_SPAN_CTES = """
-dccorp AS (
+_DC_PLANTED = """dccorp AS (
   SELECT doc_id, text FROM documents WHERE doc_id % 11 <> 0
   UNION ALL
   SELECT doc_id + 200000,
     'planted intro context ' || text || ' planted outro context'
   FROM documents WHERE doc_id % 11 = 0 AND doc_id < 50
-),
-dctoks AS (SELECT doc_id, string_split(text, ' ') AS t FROM dccorp),
+)"""
+
+
+def _dc_span_ctes(src: str, eval_where: str = "doc_id % 11 = 0", L: int = 8) -> str:
+    """Maximal spans of ``src(doc_id, text)`` whose every stride-1
+    ``L``-token window occurs in the eval documents (``documents WHERE
+    eval_where``): ``dcspans(doc_id, span_start, span_end)``."""
+    return f"""dctoks AS (SELECT doc_id, string_split(text, ' ') AS t FROM {src}),
 dcwin AS (
-  SELECT doc_id, i AS pos, array_to_string(t[i : i + 7], ' ') AS w
-  FROM dctoks, LATERAL unnest(generate_series(1, len(t) - 8 + 1)) AS u(i)
-  WHERE len(t) >= 8
+  SELECT doc_id, i AS pos, array_to_string(t[i : i + {L - 1}], ' ') AS w
+  FROM dctoks, LATERAL unnest(generate_series(1, len(t) - {L} + 1)) AS u(i)
+  WHERE len(t) >= {L}
 ),
 dcev AS (
-  SELECT DISTINCT array_to_string(t[i : i + 7], ' ') AS w
+  SELECT DISTINCT array_to_string(t[i : i + {L - 1}], ' ') AS w
   FROM (SELECT string_split(text, ' ') AS t FROM documents
-        WHERE doc_id % 11 = 0) e,
-       LATERAL unnest(generate_series(1, len(t) - 8 + 1)) AS u(i)
-  WHERE len(t) >= 8
+        WHERE {eval_where}) e,
+       LATERAL unnest(generate_series(1, len(t) - {L} + 1)) AS u(i)
+  WHERE len(t) >= {L}
 ),
 dchit AS (SELECT c.doc_id, c.pos FROM dcwin c JOIN dcev USING (w)),
 dcisl AS (
   SELECT doc_id, pos,
-    SUM(CASE WHEN prev IS NULL OR pos > prev + 8 THEN 1 ELSE 0 END)
+    SUM(CASE WHEN prev IS NULL OR pos > prev + {L} THEN 1 ELSE 0 END)
       OVER (PARTITION BY doc_id ORDER BY pos) AS isl
   FROM (
     SELECT doc_id, pos,
@@ -7457,12 +7415,20 @@ dcisl AS (
 dcspans AS (
   SELECT doc_id,
     CAST(MIN(pos) AS BIGINT) AS span_start,
-    CAST(MAX(pos) + 7 AS BIGINT) AS span_end
+    CAST(MAX(pos) + {L - 1} AS BIGINT) AS span_end
   FROM dcisl GROUP BY doc_id, isl
 )"""
 
+
+def _dc_scrub_ctes(src: str, eval_where: str = "doc_id % 11 = 0", L: int = 8) -> str:
+    """The eval-overlap spans of ``src`` removed: ``dcagg(doc_id,
+    clean_text, n_kept)``."""
+    return f"{_dc_span_ctes(src, eval_where, L)},\n{_span_removal_ctes('dc')}"
+
+
 _DECONTAM_SPANS_ORACLE = f"""
-WITH {_DECONTAM_SPAN_CTES}
+WITH {_DC_PLANTED},
+{_dc_span_ctes("dccorp")}
 SELECT doc_id, span_start, span_end,
   span_end - span_start + 1 AS n_tokens
 FROM dcspans
@@ -7508,22 +7474,8 @@ def corpus_decontam_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _DECONTAM_SCRUB_ORACLE = f"""
-WITH {_DECONTAM_SPAN_CTES},
-dctokpos AS (
-  SELECT doc_id, i AS pos, t[i] AS tok
-  FROM dctoks, LATERAL unnest(generate_series(1, len(t))) AS u(i)
-),
-dckept AS (
-  SELECT k.doc_id, k.pos, k.tok
-  FROM dctokpos k LEFT JOIN dcspans s
-    ON k.doc_id = s.doc_id AND k.pos BETWEEN s.span_start AND s.span_end
-  WHERE s.doc_id IS NULL
-),
-dcagg AS (
-  SELECT doc_id, string_agg(tok, ' ' ORDER BY pos) AS clean_text,
-    CAST(COUNT(*) AS BIGINT) AS n_kept
-  FROM dckept GROUP BY doc_id
-)
+WITH {_DC_PLANTED},
+{_dc_scrub_ctes("dccorp")}
 SELECT d.doc_id,
   COALESCE(a.clean_text, '') AS clean_text,
   COALESCE(a.n_kept, 0) AS n_tokens_kept,
@@ -7547,72 +7499,7 @@ def corpus_decontam_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decontaminate_scrub(corpus, ev, min_len=8)
 
 
-# Scrub-mode build: _CORPUS_BUILD_ORACLE with the decontamination CTEs
-# swapped from the 3-gram document-drop rule to the dc span-scrub
-# chain re-rooted on the deduped base; survivors = docs with ≥1 kept
-# token (a dcagg row), then the counts/rates/sampled/shard tail sliced
-# VERBATIM from _CORPUS_BUILD_ORACLE — one spelling of the build tail.
-_CORPUS_BUILD_DECONTAM_SCRUB_ORACLE = (
-    """
-WITH dedup AS (
-  SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY md5(text)
-),
-base AS (
-  SELECT d.doc_id, d.text, d.source FROM documents d JOIN dedup USING (doc_id)
-),
-dctoks AS (SELECT doc_id, string_split(text, ' ') AS t FROM base),
-dcwin AS (
-  SELECT doc_id, i AS pos, array_to_string(t[i : i + 7], ' ') AS w
-  FROM dctoks, LATERAL unnest(generate_series(1, len(t) - 8 + 1)) AS u(i)
-  WHERE len(t) >= 8
-),
-dcev AS (
-  SELECT DISTINCT array_to_string(t[i : i + 7], ' ') AS w
-  FROM (SELECT string_split(text, ' ') AS t FROM documents
-        WHERE doc_id % 11 = 0) e,
-       LATERAL unnest(generate_series(1, len(t) - 8 + 1)) AS u(i)
-  WHERE len(t) >= 8
-),
-dchit AS (SELECT c.doc_id, c.pos FROM dcwin c JOIN dcev USING (w)),
-dcisl AS (
-  SELECT doc_id, pos,
-    SUM(CASE WHEN prev IS NULL OR pos > prev + 8 THEN 1 ELSE 0 END)
-      OVER (PARTITION BY doc_id ORDER BY pos) AS isl
-  FROM (
-    SELECT doc_id, pos,
-      LAG(pos) OVER (PARTITION BY doc_id ORDER BY pos) AS prev
-    FROM dchit
-  )
-),
-dcspans AS (
-  SELECT doc_id,
-    CAST(MIN(pos) AS BIGINT) AS span_start,
-    CAST(MAX(pos) + 7 AS BIGINT) AS span_end
-  FROM dcisl GROUP BY doc_id, isl
-),
-dctokpos AS (
-  SELECT doc_id, i AS pos, t[i] AS tok
-  FROM dctoks, LATERAL unnest(generate_series(1, len(t))) AS u(i)
-),
-dckept AS (
-  SELECT k.doc_id, k.pos, k.tok FROM dctokpos k LEFT JOIN dcspans s
-    ON k.doc_id = s.doc_id AND k.pos BETWEEN s.span_start AND s.span_end
-  WHERE s.doc_id IS NULL
-),
-dcagg AS (
-  SELECT doc_id, string_agg(tok, ' ' ORDER BY pos) AS clean_text
-  FROM dckept GROUP BY doc_id
-),
-clean AS (
-  SELECT b.doc_id, b.source FROM base b JOIN dcagg a USING (doc_id)
-  WHERE COALESCE(a.clean_text, '') <> ''
-),
-counts AS ("""
-    + _CORPUS_BUILD_ORACLE.split("counts AS (", 1)[1]
-)
-
-
-@register("corpus_build_decontam_scrub", _CORPUS_BUILD_DECONTAM_SCRUB_ORACLE)
+@register("corpus_build_decontam_scrub", _corpus_chain_sql(scrub=8, eval_mod=11))
 def corpus_build_decontam_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed corpus build with SPAN-SCRUB decontamination
     (``build_corpus(decontam_scrub_len=8)``): after exact dedup, every
@@ -7638,33 +7525,9 @@ def corpus_build_decontam_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The text-carrying scrub manifest: the scrub-build oracle with the
-# final SELECT joined back to dcagg's reassembled clean_text — the
-# hash check covers the DELIVERED text, proving the verbatim eval
-# spans are absent from what a loader would actually train on (the
-# contract the id-only manifest could not verify).
-_CORPUS_BUILD_SCRUB_TEXT_ORACLE = (
-    _CORPUS_BUILD_DECONTAM_SCRUB_ORACLE.rsplit(
-        "\nSELECT doc_id, source, shard", 1
-    )[0]
-    + """
-SELECT s.doc_id, s.source, s.shard,
-  CAST(ROW_NUMBER() OVER (PARTITION BY s.shard ORDER BY s.h) AS INTEGER)
-    AS shard_pos,
-  a.clean_text AS text
-FROM (
-  SELECT doc_id, source,
-    CAST('0x' || substr(md5('|shard' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)
-      % 16 AS shard,
-    md5(CAST(doc_id AS VARCHAR)) AS h
-  FROM sampled
-) s
-JOIN dcagg a USING (doc_id)
-"""
+@register(
+    "corpus_build_scrub_text", _corpus_chain_sql(scrub=8, eval_mod=11, text=True)
 )
-
-
-@register("corpus_build_scrub_text", _CORPUS_BUILD_SCRUB_TEXT_ORACLE)
 def corpus_build_scrub_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The scrub-mode build with ``return_text=True``: the manifest
     carries the post-scrub document text, so the DuckDB hash check
@@ -7688,47 +7551,7 @@ def corpus_build_scrub_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Token-budget mixture composed into the build: the counts/rates CTEs
-# swap doc counts for whitespace-token sums over the clean survivors;
-# the keep predicate and shard tail are verbatim _CORPUS_BUILD_ORACLE.
-# Rates stay pure rationals of integer sums (LEAST(1, (Σw/k)/w_d)) —
-# which is why THIS mixture upgrade composes hash-checkably while
-# float-pow temperature scaling stays a standalone rate table
-# (doc_mixture_temperature, ROUND-guarded).
-_CORPUS_BUILD_TOKMIX_ORACLE = (
-    _CORPUS_BUILD_ORACLE.split("clean AS (", 1)[0]
-    + """clean AS (
-  SELECT b.doc_id, b.source,
-    CAST(len(string_split(b.text, ' ')) AS BIGINT) AS w
-  FROM base b
-  WHERE NOT EXISTS (SELECT 1 FROM contaminated c WHERE c.doc_id = b.doc_id)
-),
-sums AS (SELECT source, SUM(w) AS w_d FROM clean GROUP BY source),
-tot AS (SELECT SUM(w_d) AS total, COUNT(*) AS n_groups FROM sums),
-rates AS (
-  SELECT source,
-    LEAST(1.0, CAST(total AS DOUBLE) / n_groups / CAST(w_d AS DOUBLE)) AS rate
-  FROM sums, tot
-),
-sampled AS (
-  SELECT c.doc_id, c.source FROM clean c JOIN rates r USING (source)
-  WHERE CAST('0x' || substr(md5(CAST(c.doc_id AS VARCHAR)), 1, 8) AS BIGINT)
-        % 1000000 < r.rate * 1000000
-)
-SELECT doc_id, source, shard,
-  CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY h) AS INTEGER) AS shard_pos
-FROM (
-  SELECT doc_id, source,
-    CAST('0x' || substr(md5('|shard' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)
-      % 16 AS shard,
-    md5(CAST(doc_id AS VARCHAR)) AS h
-  FROM sampled
-) s
-"""
-)
-
-
-@register("corpus_build_token_mixture", _CORPUS_BUILD_TOKMIX_ORACLE)
+@register("corpus_build_token_mixture", _corpus_chain_sql(mixture="tokens"))
 def corpus_build_token_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed corpus build with the TOKEN-budget mixture
     (``build_corpus(mixture_unit="tokens")``): after dedup and
@@ -7748,7 +7571,6 @@ def corpus_build_token_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs,
         docs.filter(F.col("doc_id") % 97 == 0),
         num_shards=16,
-        decontam_n=3,
         mixture_unit="tokens",
     )
 
@@ -7977,9 +7799,8 @@ def doc_decontam_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # proves the artifact equals a rebuild (the corpus_substring_incremental
 # discipline).  dcev narrows to the NEW eval slice only.
 _DECONTAM_DELTA_ORACLE = f"""
-WITH {_DECONTAM_SPAN_CTES.replace(
-    "WHERE doc_id % 11 = 0) e", "WHERE doc_id % 11 = 0 AND doc_id < 50) e"
-)}
+WITH {_DC_PLANTED},
+{_dc_span_ctes("dccorp", "doc_id % 11 = 0 AND doc_id < 50")}
 SELECT doc_id, span_start, span_end,
   span_end - span_start + 1 AS n_tokens
 FROM dcspans
@@ -9178,11 +8999,14 @@ def doc_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Shared KN-LM scoring CTE chain (train on 'en', score every doc):
-# ONE definition consumed by both _KN_SCORE_ORACLE and
-# _CORPUS_BUILD_LM_ORACLE so the model/scorer SQL can never drift from
-# itself (the _bpe_chain_sql / _MINHASH_PORTABLE_CTES discipline).
-_KN_CHAIN_CTES = """\
-train AS (SELECT text FROM documents WHERE lang = 'en'),
+# ONE definition consumed by _KN_SCORE_ORACLE, the CCNet strata gate
+# and the corpus-build LM stage, so the model/scorer SQL can never
+# drift from itself (the _bpe_chain_sql / _MINHASH_PORTABLE_CTES
+# discipline).
+def _kn_chain_ctes(src: str = "documents") -> str:
+    """Train the KN bigram LM on the 'en' documents and score every
+    bigram of ``src(doc_id, text)`` (``scn``)."""
+    return f"""train AS (SELECT text FROM documents WHERE lang = 'en'),
 tt AS (SELECT string_split(text, ' ') AS t FROM train),
 tb AS (SELECT t[i] AS w1, t[i + 1] AS w2
        FROM tt, UNNEST(range(1, greatest(len(t), 1))) AS u(i)
@@ -9191,7 +9015,7 @@ pairs AS (SELECT w1, w2, COUNT(*) AS pair_count FROM tb GROUP BY w1, w2),
 ctx AS (SELECT w1, SUM(pair_count) AS c1, COUNT(*) AS n1_fwd FROM pairs GROUP BY w1),
 cont AS (SELECT w2, COUNT(*) AS n1_bwd FROM pairs GROUP BY w2),
 total AS (SELECT COUNT(*) AS n_types FROM pairs),
-dt AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+dt AS (SELECT doc_id, string_split(text, ' ') AS t FROM {src}),
 db AS (SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
        FROM dt, UNNEST(range(1, greatest(len(t), 1))) AS u(i)
        WHERE t[i] <> '' AND t[i + 1] <> ''),
@@ -9204,6 +9028,9 @@ scn AS (
     CASE WHEN c.c1 IS NULL THEN NULL ELSE 4 * n_types * c.c1 END AS den
   FROM db b LEFT JOIN pairs p USING (w1, w2) LEFT JOIN ctx c USING (w1)
   LEFT JOIN cont k USING (w2) CROSS JOIN total)"""
+
+
+_KN_CHAIN_CTES = _kn_chain_ctes()
 
 _KN_SCORE_ORACLE = f"""
 WITH {_KN_CHAIN_CTES}
@@ -9236,71 +9063,7 @@ def doc_kn_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LM_GATE_THRESHOLD = 0.033
 
-# The CCNet gate + 4-stage build CTE chain, shared between the
-# manifest oracle (_CORPUS_BUILD_LM_ORACLE) and the end-to-end JSONL
-# pipeline oracle (_JSONL_PIPELINE_ORACLE) — one definition, no drift.
-_LM_BUILD_CTES = f"""lmpass AS (
-  SELECT doc_id FROM scn GROUP BY doc_id
-  HAVING CAST(CAST(SUM(num) AS BIGINT) AS DOUBLE)
-         / CAST(CAST(SUM(den) AS BIGINT) AS DOUBLE) >= {_LM_GATE_THRESHOLD!r}::DOUBLE
-),
-lmgated AS (SELECT d.doc_id, d.text, d.source FROM documents d JOIN lmpass USING (doc_id)),
-dedup AS (
-  SELECT MIN(doc_id) AS doc_id FROM lmgated GROUP BY md5(text)
-),
-base AS (
-  SELECT d.doc_id, d.text, d.source FROM lmgated d JOIN dedup USING (doc_id)
-),
-{_containment_drop_ctes("base", "text")},
-toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM cbase),
-sh AS (
-  SELECT doc_id, array_to_string(t[i : i + 2], ' ') AS shingle
-  FROM toks, LATERAL unnest(generate_series(1, greatest(len(t) - 2, 1))) AS u(i)
-),
-evtoks AS (
-  SELECT doc_id, string_split(text, ' ') AS t FROM documents WHERE doc_id % 97 = 0
-),
-evsh AS (
-  SELECT DISTINCT array_to_string(t[i : i + 2], ' ') AS shingle
-  FROM evtoks, LATERAL unnest(generate_series(1, greatest(len(t) - 2, 1))) AS u(i)
-),
-contaminated AS (SELECT DISTINCT s.doc_id FROM sh s JOIN evsh USING (shingle)),
-clean AS (
-  SELECT b.doc_id, b.source FROM cbase b
-  WHERE NOT EXISTS (SELECT 1 FROM contaminated c WHERE c.doc_id = b.doc_id)
-),
-counts AS (SELECT source, COUNT(*) AS n_docs FROM clean GROUP BY source),
-tot AS (SELECT SUM(n_docs) AS total, COUNT(*) AS n_groups FROM counts),
-rates AS (
-  SELECT source, LEAST(1.0, CAST(total AS DOUBLE) / n_groups / n_docs) AS rate
-  FROM counts, tot
-),
-sampled AS (
-  SELECT c.doc_id, c.source FROM clean c JOIN rates r USING (source)
-  WHERE CAST('0x' || substr(md5(CAST(c.doc_id AS VARCHAR)), 1, 8) AS BIGINT)
-        % 1000000 < r.rate * 1000000
-)"""
-
-# The CCNet-shaped build: the KN-LM scoring chain from _KN_SCORE_ORACLE
-# (train on 'en', score all) reduced to a pass-list at the fixed
-# threshold, then the 4-stage _CORPUS_BUILD_ORACLE chain re-rooted on
-# the LM-gated documents.
-_CORPUS_BUILD_LM_ORACLE = f"""
-WITH {_KN_CHAIN_CTES},
-{_LM_BUILD_CTES}
-SELECT doc_id, source, shard,
-  CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY h) AS INTEGER) AS shard_pos
-FROM (
-  SELECT doc_id, source,
-    CAST('0x' || substr(md5('|shard' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)
-      % 16 AS shard,
-    md5(CAST(doc_id AS VARCHAR)) AS h
-  FROM sampled
-) s
-"""
-
-
-@register("corpus_build_lm_gated", _CORPUS_BUILD_LM_ORACLE)
+@register("corpus_build_lm_gated", _corpus_chain_sql(lm=True, containment=True))
 def corpus_build_lm_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CCNet-shaped corpus build (Wenzek et al. 2020): train the
     KN bigram LM on the trusted 'en' slice, gate the whole corpus at
@@ -9314,7 +9077,7 @@ def corpus_build_lm_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio-of-integer-sums score and the excerpt stage replays the
     shared _containment_drop_ctes chain, so the composed chain
     inherits portability from its independently-green pieces
-    (_KN_SCORE_ORACLE + containment CTEs + _CORPUS_BUILD_ORACLE)."""
+    (the KN chain, the containment CTEs, ``_corpus_chain_sql``)."""
     from .operators.corpus import build_corpus
 
     docs = _t(spark, sf_dir, "documents")
@@ -9322,7 +9085,6 @@ def corpus_build_lm_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs,
         docs.filter(F.col("doc_id") % 97 == 0),
         num_shards=16,
-        decontam_n=3,
         lm_train=docs.filter(F.col("lang") == "en"),
         lm_threshold=_LM_GATE_THRESHOLD,
         containment_t=0.8,
@@ -9330,7 +9092,7 @@ def corpus_build_lm_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # End-to-end JSONL training-data pipeline (round-5 directive #5): the
-# shared CCNet build chain through `sampled`, then concat-then-chunk
+# CCNet build chain through `shards`, then concat-then-chunk
 # packing (the _PACK_SPANS_ORACLE shape, budget 512) restricted to the
 # sampled survivors, re-joined to their shard assignment.  The JSONL
 # write/read legs are exercised on the Spark side (bootstrap shards in,
@@ -9338,14 +9100,7 @@ def corpus_build_lm_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the LOGIC over the parquet views — interchange losslessness is
 # independently pinned by doc_jsonl_roundtrip's hash oracle.
 _JSONL_PIPELINE_ORACLE = f"""
-WITH {_KN_CHAIN_CTES},
-{_LM_BUILD_CTES},
-shards AS (
-  SELECT doc_id, source,
-    CAST('0x' || substr(md5('|shard' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)
-      % 16 AS shard
-  FROM sampled
-),
+WITH {_corpus_ctes(lm=True, containment=True)},
 ptoks AS (
   SELECT d.doc_id, CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_tokens
   FROM documents d JOIN sampled USING (doc_id)
@@ -9438,7 +9193,6 @@ def _jsonl_pipeline_frame(
         docs,
         docs.filter(F.col("doc_id") % 97 == 0),
         num_shards=16,
-        decontam_n=3,
         lm_train=docs.filter(F.col("lang") == "en"),
         lm_threshold=_LM_GATE_THRESHOLD,
         containment_t=0.8,
@@ -10169,11 +9923,8 @@ def doc_quantile_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # CCNet's keep rule composed into the build: drop each language's tail
 # tercile, then the 4-stage chain over the survivors.  The strata
-# chain reduces to a keep-list; the build tail is the source-gated
-# oracle's, verbatim (rooted on `gated`).
-_CORPUS_BUILD_CCNET_ORACLE = (
-    f"""
-WITH {_KN_CHAIN_CTES},
+# chain reduces to a keep-list.
+_CCNET_GATE_HEAD = f"""{_KN_CHAIN_CTES},
 cbscores AS (
   SELECT doc_id,
     CAST(CAST(SUM(num) AS BIGINT) AS DOUBLE) / CAST(CAST(SUM(den) AS BIGINT) AS DOUBLE)
@@ -10191,13 +9942,10 @@ cbkeep AS (
 ),
 gated AS (
   SELECT d.doc_id, d.text, d.source FROM documents d JOIN cbkeep USING (doc_id)
-),
-dedup AS ("""
-    + _CORPUS_BUILD_SOURCE_GATED_ORACLE.split("dedup AS (", 1)[1]
-)
+)"""
 
 
-@register("corpus_build_ccnet_gated", _CORPUS_BUILD_CCNET_ORACLE)
+@register("corpus_build_ccnet_gated", _corpus_chain_sql(_CCNET_GATE_HEAD))
 def corpus_build_ccnet_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 4-stage build with CCNet's per-language strata rule
     composed in FRONT: each language's TAIL tercile (worst-modeled
@@ -10210,7 +9958,8 @@ def corpus_build_ccnet_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
     a fixed per-language FRACTION, which is what survives language
     mix shift).  The strata chain reduces to a keep-list applied as a
     semi join; eval holdout stays the FULL corpus's doc_id % 97 slice.
-    Hash-checked end to end via the spliced strata + build oracle."""
+    Hash-checked end to end: the strata chain as the head of
+    ``_corpus_chain_sql``."""
     from .operators.corpus import build_corpus
     from .operators.text_analysis import ccnet_perplexity_buckets
 
@@ -10226,7 +9975,6 @@ def corpus_build_ccnet_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.join(keep, "doc_id"),
         docs.filter(F.col("doc_id") % 97 == 0),
         num_shards=16,
-        decontam_n=3,
     )
 
 
@@ -10764,8 +10512,7 @@ def _split_chain_ctes(pfx: str, src: str) -> str:
     converged fixpoint."""
     p = pfx
     return (
-        f""",
-{p}rep_map AS (
+        f"""{p}rep_map AS (
   SELECT doc_id, min(doc_id) OVER (PARTITION BY text) AS rep_id, text FROM {src}
 ),
 {p}reps AS (SELECT doc_id, text FROM {p}rep_map WHERE doc_id = rep_id),
@@ -10796,37 +10543,9 @@ def _split_chain_ctes(pfx: str, src: str) -> str:
     )
 
 
-# The CCNet-shaped build chain (KN gate → dedup → excerpts → decontam →
-# mixture, ending at `sampled`) plus the split chain rooted on the
-# SELECTED docs' text — clustering the final selection, not the raw
-# corpus: a twin that did not survive to the output cannot leak.
-_CORPUS_BUILD_SPLIT_ORACLE = _force_materialized(
-    f"""
-WITH {_KN_CHAIN_CTES},
-{_LM_BUILD_CTES},
-spdocs AS (
-  SELECT d.doc_id, d.text FROM documents d JOIN sampled USING (doc_id)
-)"""
-    + _split_chain_ctes("sp", "spdocs")
-    + """
-SELECT s.doc_id, s.source, s.shard,
-  CAST(ROW_NUMBER() OVER (PARTITION BY s.shard ORDER BY s.h) AS INTEGER)
-    AS shard_pos,
-  sp.split
-FROM (
-  SELECT doc_id, source,
-    CAST('0x' || substr(md5('|shard' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)
-      % 16 AS shard,
-    md5(CAST(doc_id AS VARCHAR)) AS h
-  FROM sampled
-) s
-JOIN spsplit sp USING (doc_id)
-WHERE (SELECT n_moved FROM spfix) = 0
-"""
+@register(
+    "corpus_build_split", _corpus_chain_sql(lm=True, containment=True, split=True)
 )
-
-
-@register("corpus_build_split", _CORPUS_BUILD_SPLIT_ORACLE)
 def corpus_build_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CCNet-shaped build (KN-LM gate → exact dedup → containment
     excerpt removal → decontamination → uniform mixture → 16-shard
@@ -10846,7 +10565,6 @@ def corpus_build_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs,
         docs.filter(F.col("doc_id") % 97 == 0),
         num_shards=16,
-        decontam_n=3,
         lm_train=docs.filter(F.col("lang") == "en"),
         lm_threshold=_LM_GATE_THRESHOLD,
         containment_t=0.8,
@@ -10856,23 +10574,11 @@ def corpus_build_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _JSONL_SPLIT_ORACLE = _force_materialized(
     f"""
-WITH {_KN_CHAIN_CTES},
-{_LM_BUILD_CTES},
-shards AS (
-  SELECT doc_id, source,
-    CAST('0x' || substr(md5('|shard' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)
-      % 16 AS shard
-  FROM sampled
-),
+WITH {_corpus_ctes(lm=True, containment=True, split=True)},
 ptoks AS (
   SELECT d.doc_id, CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_tokens
   FROM documents d JOIN sampled USING (doc_id)
 ),
-spdocs AS (
-  SELECT d.doc_id, d.text FROM documents d JOIN sampled USING (doc_id)
-)"""
-    + _split_chain_ctes("sp", "spdocs")
-    + """,
 cum AS (
   -- per-SPLIT token streams: the exclusive prefix sum partitions on
   -- the split label, so seq numbering restarts per split and a
@@ -11352,13 +11058,12 @@ def embedding_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 # embedding (first coordinate ×1.5, cosine 0.989..0.99999 to its
 # source — a "paraphrase" that shares no text shingles) so the gate
 # has real cross-id work to do, the soft-dedup planting convention.
-_SEMDC_SCORE_CTES = """sdv AS (
+def _semdc_score_ctes(corpus: str) -> str:
+    """Score ``sdall(vec_id, e)`` -- the query ``corpus``, over the
+    embeddings ``sdv`` -- against the eval embeddings: ``sdtop``."""
+    return f"""sdv AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-sdall AS (
-  SELECT vec_id, e FROM sdv
-  UNION ALL
-  SELECT vec_id + 200000, list_concat([e[1] * 1.5], e[2:])
-  FROM sdv WHERE vec_id < 50),
+sdall AS ({corpus}),
 sdev AS (SELECT vec_id AS eid, e FROM sdv WHERE vec_id < 50),
 sdu AS (
   SELECT vec_id,
@@ -11376,8 +11081,15 @@ sdtop AS (
     FROM sdsc) t
   WHERE rk = 1)"""
 
+
+_SEMDC_PLANTED = """
+  SELECT vec_id, e FROM sdv
+  UNION ALL
+  SELECT vec_id + 200000, list_concat([e[1] * 1.5], e[2:])
+  FROM sdv WHERE vec_id < 50"""
+
 _SEMDC_ORACLE = f"""
-WITH {_SEMDC_SCORE_CTES}
+WITH {_semdc_score_ctes(_SEMDC_PLANTED)}
 SELECT vec_id AS doc_id, cos AS max_eval_cosine,
   CAST(eid AS BIGINT) AS matched_eval_id,
   cos >= 0.98 AS drop_doc
@@ -11424,28 +11136,15 @@ def doc_decontam_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 # this data the flags are the eval items themselves sitting in the
 # corpus (self-cosine 1.0) — removing the benchmark from the training
 # set, decontamination's original job.
-_CORPUS_BUILD_SEMDC_ORACLE = (
-    "WITH "
-    + _SEMDC_SCORE_CTES.replace(
-        """sdall AS (
-  SELECT vec_id, e FROM sdv
-  UNION ALL
-  SELECT vec_id + 200000, list_concat([e[1] * 1.5], e[2:])
-  FROM sdv WHERE vec_id < 50),""",
-        "sdall AS (SELECT vec_id, e FROM sdv),",
-    )
-    + """,
+_SEMDC_GATE_HEAD = f"""{_semdc_score_ctes("SELECT vec_id, e FROM sdv")},
 gated AS (
   SELECT d.doc_id, d.text, d.source
   FROM documents d JOIN sdtop s ON s.vec_id = d.doc_id
   WHERE s.cos < 0.98
-),
-dedup AS ("""
-    + _CORPUS_BUILD_SOURCE_GATED_ORACLE.split("dedup AS (", 1)[1]
-)
+)"""
 
 
-@register("corpus_build_semantic_gated", _CORPUS_BUILD_SEMDC_ORACLE)
+@register("corpus_build_semantic_gated", _corpus_chain_sql(_SEMDC_GATE_HEAD))
 def corpus_build_semantic_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 4-stage corpus build with embedding-level decontamination
     composed in FRONT: every document whose embedding's max 4-dp
@@ -11456,9 +11155,9 @@ def corpus_build_semantic_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
     would ALSO catch for verbatim text but not for a paraphrase.  The
     flag set is corpus-sized, so it applies as an id join (the
     per-doc-gate composition shape); the eval holdout inside the
-    build tail stays the raw corpus's ``doc_id % 97`` slice.  Oracle:
-    the scoring chain without planting → the source-gated build tail
-    sliced verbatim."""
+    build stays the raw corpus's ``doc_id % 97`` slice.  Oracle: the
+    scoring chain without planting as the head of
+    ``_corpus_chain_sql``."""
     from .operators.corpus import build_corpus
     from .operators.similarity import semantic_decontaminate
 
@@ -11475,7 +11174,6 @@ def corpus_build_semantic_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.join(keep, "doc_id"),
         docs.filter(F.col("doc_id") % 97 == 0),
         num_shards=16,
-        decontam_n=3,
     )
 
 
@@ -12051,30 +11749,17 @@ def doc_dsir_score_frozen(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The DSIR-gated build: the importance-resampling selection
 # (_dsir_ctes, ds-prefixed) feeds a top-256 budget keep-set that
-# pre-filters the corpus BEFORE the 4-stage build.  The build tail is
-# sliced VERBATIM from _CORPUS_BUILD_SOURCE_GATED_ORACLE from its
-# ``dedup AS (`` root — that oracle already expresses the 4-stage
-# chain rooted on a ``gated`` corpus with the eval holdout pinned to
-# the FULL corpus, so there is exactly ONE definition of the gated
-# build chain (the _mh_side_ctes discipline): a portability fix there
-# cannot leave this composition checking stale semantics.
-_CORPUS_BUILD_DSIR_GATED_ORACLE = (
-    "\nWITH "
-    + _dsir_ctes()
-    + """,
+# pre-filters the corpus BEFORE the 4-stage build.
+_DSIR_GATE_HEAD = f"""{_dsir_ctes()},
 dssel AS (
   SELECT doc_id FROM dsscored ORDER BY score_q20 DESC, doc_id LIMIT 256
 ),
 gated AS (
   SELECT d.doc_id, d.text, d.source FROM documents d JOIN dssel USING (doc_id)
-),
-"""
-    + "dedup AS ("
-    + _CORPUS_BUILD_SOURCE_GATED_ORACLE.split("dedup AS (", 1)[1]
-)
+)"""
 
 
-@register("corpus_build_dsir_gated", _CORPUS_BUILD_DSIR_GATED_ORACLE)
+@register("corpus_build_dsir_gated", _corpus_chain_sql(_DSIR_GATE_HEAD))
 def corpus_build_dsir_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 4-stage corpus build with DSIR selection composed in FRONT:
     score every document against the English target distribution
@@ -12113,7 +11798,7 @@ def corpus_build_dsir_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").isin(keep) if keep else F.lit(False)
     )
     return build_corpus(
-        gated, docs.filter(F.col("doc_id") % 97 == 0), num_shards=16, decontam_n=3
+        gated, docs.filter(F.col("doc_id") % 97 == 0), num_shards=16
     )
 
 
@@ -12203,13 +11888,16 @@ _PARA_W = 12
 
 # p-prefixed CTEs, one definition for both the standalone keep-first
 # query and the paragraph-gated corpus build (the ss-chain precedent).
-_PARA_KEEPFIRST_CTES = f"""pseg AS (
+def _para_keepfirst_ctes(src: str = "documents", w: int = _PARA_W) -> str:
+    """Keep-first ``w``-word paragraph dedup over ``src(doc_id, text)``:
+    ``pagg(doc_id, clean_text, n_kept)``."""
+    return f"""pseg AS (
   SELECT doc_id, CAST(i - 1 AS INTEGER) AS ci,
-    array_to_string(toks[(i-1)*{_PARA_W} + 1 : (i-1)*{_PARA_W} + {_PARA_W}], ' ') AS seg
+    array_to_string(toks[(i-1)*{w} + 1 : (i-1)*{w} + {w}], ' ') AS seg
   FROM (
     SELECT doc_id, string_split(text, ' ') AS toks,
-      greatest(CAST(ceil(len(string_split(text, ' ')) / {_PARA_W}.0) AS BIGINT), 1) AS nc
-    FROM documents
+      greatest(CAST(ceil(len(string_split(text, ' ')) / {w}.0) AS BIGINT), 1) AS nc
+    FROM {src}
   ) d, LATERAL unnest(generate_series(1, nc)) AS t(i)
 ),
 pkept AS (
@@ -12224,6 +11912,9 @@ pagg AS (
          CAST(COUNT(*) AS INTEGER) AS n_kept
   FROM pkept GROUP BY doc_id
 )"""
+
+
+_PARA_KEEPFIRST_CTES = _para_keepfirst_ctes()
 
 _PARA_KEEPFIRST_ORACLE = f"""
 WITH {_PARA_KEEPFIRST_CTES},
@@ -12446,29 +12137,7 @@ def doc_bloom_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Keep-first paragraph dedup composed in FRONT of the 4-stage build:
-# the p-chain rewrites the corpus text (docs whose every paragraph was
-# a later copy drop — the span-stage rule), and the build tail is
-# sliced VERBATIM from _CORPUS_BUILD_SOURCE_GATED_ORACLE at its
-# ``dedup AS (`` root — the one-definition slice the substring- and
-# DSIR-gated builds use, so the gated build chain has exactly one
-# spelling.  The eval holdout inside that tail stays the FULL corpus's
-# doc_id % 97 slice over RAW text (curation must not change what you
-# decontaminate against).
-_CORPUS_BUILD_PARA_ORACLE = (
-    f"""
-WITH {_PARA_KEEPFIRST_CTES},
-gated AS (
-  SELECT d.doc_id, COALESCE(a.clean_text, '') AS text, d.source
-  FROM documents d LEFT JOIN pagg a USING (doc_id)
-  WHERE COALESCE(a.clean_text, '') <> ''
-),
-dedup AS ("""
-    + _CORPUS_BUILD_SOURCE_GATED_ORACLE.split("dedup AS (", 1)[1]
-)
-
-
-@register("corpus_build_paragraph_gated", _CORPUS_BUILD_PARA_ORACLE)
+@register("corpus_build_paragraph_gated", _corpus_chain_sql(paragraph=_PARA_W))
 def corpus_build_paragraph_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 4-stage corpus build with CCNet keep-first paragraph dedup
     composed in FRONT (``build_corpus(paragraph_words=12)``): every
@@ -12480,8 +12149,8 @@ def corpus_build_paragraph_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup, exactly where CCNet runs it).  The paragraph-cleaned corpus
     is staged once (localCheckpoint) so the min-struct hash chain runs
     once, not per build branch; the eval holdout is pinned to the RAW
-    corpus.  Oracle: the p-chain re-rooted as ``gated`` + the gated
-    build tail sliced verbatim from the source-gated oracle."""
+    corpus.  Oracle: ``_corpus_chain_sql`` with the p-chain as its
+    paragraph stage."""
     from .operators.corpus import build_corpus
 
     docs = _t(spark, sf_dir, "documents")
@@ -12489,7 +12158,6 @@ def corpus_build_paragraph_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs,
         docs.filter(F.col("doc_id") % 97 == 0),
         num_shards=16,
-        decontam_n=3,
         paragraph_words=_PARA_W,
     )
 
@@ -12541,8 +12209,7 @@ def doc_softdedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 # :443 default port, trailing slash, query order, #fragment — that
 # canonicalization must collapse; the canonical chain is the
 # engine-portable twin of operators.dedup.canonical_url step by step.
-_URL_DEDUP_ORACLE = """
-WITH uurl AS (
+_URL_CANON_CTES = """uurl AS (
   SELECT doc_id,
     CASE CAST(doc_id % 3 AS INT)
       WHEN 0 THEN 'https://Example.com/' || source || '/item/'
@@ -12584,7 +12251,10 @@ ucan AS (
             ELSE '?' || array_to_string(list_sort(string_split(q, '&')), '&')
        END END AS canonical_url
   FROM unorm
-)
+)"""
+
+_URL_DEDUP_ORACLE = f"""
+WITH {_URL_CANON_CTES}
 SELECT doc_id, canonical_url,
   CAST(COUNT(*) OVER (PARTITION BY canonical_url) AS BIGINT) AS n_copies,
   doc_id = MIN(doc_id) OVER (PARTITION BY canonical_url) AS keep
@@ -12643,14 +12313,8 @@ def doc_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # URL gate composed in FRONT of the 4-stage build: the ucan chain →
-# keep-first ids → the source-gated oracle's build tail verbatim
-# (already rooted on `gated`).
-_CORPUS_BUILD_URL_GATED_ORACLE = (
-    "WITH "
-    + _URL_DEDUP_ORACLE.split("WITH ", 1)[1].rsplit(
-        "\nSELECT doc_id, canonical_url", 1
-    )[0]
-    + """,
+# keep-first ids.
+_URL_GATE_HEAD = f"""{_URL_CANON_CTES},
 ukeep AS (
   SELECT doc_id FROM (
     SELECT doc_id,
@@ -12660,13 +12324,10 @@ ukeep AS (
 ),
 gated AS (
   SELECT d.doc_id, d.text, d.source FROM documents d JOIN ukeep USING (doc_id)
-),
-dedup AS ("""
-    + _CORPUS_BUILD_SOURCE_GATED_ORACLE.split("dedup AS (", 1)[1]
-)
+)"""
 
 
-@register("corpus_build_url_gated", _CORPUS_BUILD_URL_GATED_ORACLE)
+@register("corpus_build_url_gated", _corpus_chain_sql(_URL_GATE_HEAD))
 def corpus_build_url_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 4-stage corpus build with URL-canonicalization dedup
     composed in FRONT (CCNet's stage order: recrawls of the same page
@@ -12678,8 +12339,8 @@ def corpus_build_url_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
     it applies as a semi JOIN on the id — the per-doc-gate composition
     shape.  The eval holdout stays the FULL corpus's doc_id % 97 slice
     (curation must not change what you decontaminate against).  Oracle:
-    the ucan chain → keep-first ids → the source-gated build tail
-    sliced verbatim (one spelling of the gated build)."""
+    the ucan chain → keep-first ids as the head of
+    ``_corpus_chain_sql``."""
     from .operators.corpus import build_corpus
     from .operators.dedup import url_dedup
 
@@ -12691,25 +12352,19 @@ def corpus_build_url_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.join(keep, "doc_id"),
         docs.filter(F.col("doc_id") % 97 == 0),
         num_shards=16,
-        decontam_n=3,
     )
 
 
 # Streaming URL dedup replay: keep-first ACROSS batches == keep-first
 # by (batch_idx, doc_id) per canonical URL — the ucan chain + one
 # window, so the streaming path gets the full hash gate.
-_URL_STREAM_ORACLE = (
-    "WITH "
-    + _URL_DEDUP_ORACLE.split("WITH ", 1)[1].rsplit(
-        "\nSELECT doc_id, canonical_url", 1
-    )[0]
-    + """
+_URL_STREAM_ORACLE = f"""
+WITH {_URL_CANON_CTES}
 SELECT doc_id, canonical_url,
   ROW_NUMBER() OVER (PARTITION BY canonical_url
     ORDER BY doc_id % 4, doc_id) = 1 AS admitted
 FROM ucan
 """
-)
 
 
 @register("doc_url_stream_replay", _URL_STREAM_ORACLE)
@@ -12773,86 +12428,21 @@ def corpus_source_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # =========================================================================
 # r10 flagship: the fully-curated build — every text-cleaning layer in
-# its production position, ONE lazy plan, ONE spliced oracle.  Gopher
-# gate -> ExactSubstr removal -> CCNet paragraph keep-first -> exact
-# dedup -> SPAN-SCRUB decontamination -> uniform mixture -> 16-shard
-# layout -> cluster-atomic leakage-safe split.  Every segment below is
-# sliced VERBATIM from its independently hash-green oracle (the
-# one-definition discipline): the Gopher head from the full build, the
-# ss/p chains re-rooted onto the previous stage's output, the dc scrub
-# chain from the scrub-mode build, the mixture tail from the base
-# build, the split chain from the shared helper.
+# its production position, ONE lazy plan.  ExactSubstr runs at L=20,
+# LONGER than the paragraph window (12) on purpose, so each stage does
+# distinct work: ExactSubstr takes the long verbatim runs, paragraph
+# keep-first the 12-word boilerplate it leaves alone, exact dedup
+# whatever byte twins remain.  At equal thresholds the substring stage
+# (which removes ALL occurrences of any >=L-token duplicate) subsumes
+# both later layers — measured: a first draft at L=12 emptied the
+# paragraph and exact-dedup stages entirely.
 # =========================================================================
-_CORPUS_BUILD_CURATED_ORACLE = _force_materialized(
-    # Gopher gate head (tok..gated), verbatim from the full build
-    _CORPUS_BUILD_FULL_ORACLE.split("seg AS (", 1)[0]
-    # ExactSubstr removal chain at L=20 re-rooted on the gated corpus:
-    # LONGER than the paragraph window (12) on purpose, so each stage
-    # does distinct work — ExactSubstr takes the long verbatim runs,
-    # paragraph keep-first takes the 12-word boilerplate ExactSubstr
-    # leaves alone, exact dedup takes whatever byte twins remain.  At
-    # equal thresholds the substring stage (which removes ALL
-    # occurrences of any >=L-token duplicate) subsumes both later
-    # layers — measured, not hypothetical: the first draft at L=12
-    # emptied the paragraph and exact-dedup stages entirely.
-    + _substring_removal_ctes(20, "gated")
-    + """,
-ssgated AS (
-  SELECT g.doc_id, COALESCE(a.clean_text, '') AS text, g.source
-  FROM gated g LEFT JOIN ssagg a USING (doc_id)
-  WHERE COALESCE(a.clean_text, '') <> ''
-),
-"""
-    # CCNet keep-first paragraph chain re-rooted on the substring-clean text
-    + _PARA_KEEPFIRST_CTES.replace("FROM documents", "FROM ssgated")
-    + """,
-pgated AS (
-  SELECT s.doc_id, COALESCE(a.clean_text, '') AS text, s.source
-  FROM ssgated s LEFT JOIN pagg a USING (doc_id)
-  WHERE COALESCE(a.clean_text, '') <> ''
-),
-dedup AS (
-  SELECT MIN(doc_id) AS doc_id FROM pgated GROUP BY md5(text)
-),
-base AS (
-  SELECT p.doc_id, p.text, p.source FROM pgated p JOIN dedup USING (doc_id)
-),
-dctoks AS ("""
-    # span-scrub decontamination chain (dcwin..clean), verbatim from the
-    # scrub-mode build — roots on `base`, eval pinned to RAW documents
-    + _CORPUS_BUILD_DECONTAM_SCRUB_ORACLE.split("dctoks AS (", 1)[1].split(
-        "counts AS (", 1
-    )[0]
-    # uniform mixture tail (counts..sampled), verbatim from the base build
-    + "counts AS ("
-    + _CORPUS_BUILD_ORACLE.split("counts AS (", 1)[1].split(
-        "\nSELECT doc_id, source, shard", 1
-    )[0]
-    + """,
-spdocs AS (
-  SELECT a.doc_id, a.clean_text AS text FROM dcagg a JOIN sampled USING (doc_id)
-)"""
-    # leakage-safe split chain over the CLEANED text of the final selection
-    + _split_chain_ctes("sp", "spdocs")
-    + """
-SELECT s.doc_id, s.source, s.shard,
-  CAST(ROW_NUMBER() OVER (PARTITION BY s.shard ORDER BY s.h) AS INTEGER)
-    AS shard_pos,
-  sp.split
-FROM (
-  SELECT doc_id, source,
-    CAST('0x' || substr(md5('|shard' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)
-      % 16 AS shard,
-    md5(CAST(doc_id AS VARCHAR)) AS h
-  FROM sampled
-) s
-JOIN spsplit sp USING (doc_id)
-WHERE (SELECT n_moved FROM spfix) = 0
-"""
+@register(
+    "corpus_build_curated",
+    _corpus_chain_sql(
+        gopher=True, substring=20, paragraph=_PARA_W, scrub=8, eval_mod=11, split=True
+    ),
 )
-
-
-@register("corpus_build_curated", _CORPUS_BUILD_CURATED_ORACLE)
 def corpus_build_curated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fully-curated 8-stage corpus build, one lazy plan: Gopher
     quality gate → ExactSubstr duplicated-span removal at L=20 (Lee
@@ -12865,12 +12455,12 @@ def corpus_build_curated(spark: SparkSession, sf_dir: str) -> DataFrame:
     selection's CLEANED text.
     Every stage is independently hash-green; this registration checks
     the COMPOSITION — which text each stage sees, which docs survive
-    each gate, and the manifest's shard/split assignment — against one
-    spliced end-to-end oracle.  The plan stages each text-rewriting
-    layer once (the build_corpus checkpoint boundaries), so composing
-    eight stages adds no re-scan: the scale shape is the SUM of the
-    stage shapes, which is the entire point of declaring curation as
-    one plan."""
+    each gate, and the manifest's shard/split assignment — against the
+    ``_corpus_chain_sql`` oracle with the same stages.  The plan stages
+    each text-rewriting layer once (the build_corpus checkpoint
+    boundaries), so composing eight stages adds no re-scan: the scale
+    shape is the SUM of the stage shapes, which is the entire point of
+    declaring curation as one plan."""
     from .operators.corpus import build_corpus
 
     docs = _t(spark, sf_dir, "documents")
@@ -13276,22 +12866,18 @@ def doc_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Boilerplate strip composed in FRONT of the 4-stage build (the
 # RefinedWeb stage order: line-wise filtering before any document-level
 # dedup, so content hashes never see site furniture): bl chain →
-# rewritten corpus → the source-gated oracle's build tail verbatim
-# (rooted on `gated`; eval holdout stays the RAW corpus's doc_id % 97
-# slice — eval text is external content, never planted).
-_CORPUS_BUILD_BOILER_GATED_ORACLE = (
-    f"WITH {_BOILER_CTES},\n{_BOILER_STRIP_TAIL},\n"
-    + """gated AS (
+# rewritten corpus; the eval holdout stays the RAW corpus's doc_id % 97
+# slice (eval text is external content, never planted).
+_BOILER_GATE_HEAD = f"""{_BOILER_CTES},
+{_BOILER_STRIP_TAIL},
+gated AS (
   SELECT t.doc_id, a.clean_text AS text, t.source
   FROM bltotd t JOIN blagg a USING (doc_id)
   WHERE a.clean_text <> ''
-),
-dedup AS ("""
-    + _CORPUS_BUILD_SOURCE_GATED_ORACLE.split("dedup AS (", 1)[1]
-)
+)"""
 
 
-@register("corpus_build_boilerplate_gated", _CORPUS_BUILD_BOILER_GATED_ORACLE)
+@register("corpus_build_boilerplate_gated", _corpus_chain_sql(_BOILER_GATE_HEAD))
 def corpus_build_boilerplate_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 4-stage corpus build with line-wise boilerplate removal
     composed in FRONT — the RefinedWeb order (Penedo et al. 2023: line
@@ -13303,8 +12889,8 @@ def corpus_build_boilerplate_gated(spark: SparkSession, sf_dir: str) -> DataFram
     reduced to nothing exit (clean-text ``''`` rule).  The eval
     holdout stays the RAW corpus's ``doc_id % 97`` slice (eval text is
     external content — never carries the planted furniture).  Oracle:
-    bl chain → rewritten corpus → the source-gated build tail spliced
-    verbatim (one spelling of the gated build)."""
+    the bl chain's rewritten corpus as the head of
+    ``_corpus_chain_sql``."""
     from .operators.corpus import build_corpus
     from .operators.paragraphs import boilerplate_strip
 
@@ -13327,7 +12913,6 @@ def corpus_build_boilerplate_gated(spark: SparkSession, sf_dir: str) -> DataFram
         cleaned,
         docs.filter(F.col("doc_id") % 97 == 0),
         num_shards=16,
-        decontam_n=3,
     )
 
 
@@ -13586,8 +13171,7 @@ def doc_boilerplate_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-_QUALITY_GATE_REFINED_ORACLE = """
-WITH rgl AS (
+_ROCCHIO_CTES = """rgl AS (
   SELECT doc_id, text,
     CASE WHEN list_contains(string_split(text, ' '), 'spark')
          THEN 1 ELSE 0 END AS label
@@ -13614,7 +13198,10 @@ rgs AS (
   SELECT t.doc_id, CAST(SUM(w.w) AS BIGINT) AS logit,
          CAST(COUNT(*) AS BIGINT) AS n_tokens
   FROM rgt t JOIN rgw w USING (b) GROUP BY t.doc_id
-)
+)"""
+
+_QUALITY_GATE_REFINED_ORACLE = f"""
+WITH {_ROCCHIO_CTES}
 SELECT s.doc_id, CAST(l.label AS BIGINT) AS label, s.n_tokens, s.logit,
   s.logit > 0 AS passes
 FROM rgs s JOIN rgl l USING (doc_id)
@@ -13650,23 +13237,15 @@ def doc_quality_gate_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a classifier trained in the same engine run), and the first gated
 # BUILD whose gate is itself a TRAINED model under the hash (lm_gated
 # thresholds a count-ratio score; this thresholds a trained
-# discriminant).  The build tail is the source-gated oracle verbatim.
-_CORPUS_BUILD_ROCCHIO_GATED_ORACLE = (
-    "WITH "
-    + _QUALITY_GATE_REFINED_ORACLE.split("WITH ", 1)[1].rsplit(
-        "\nSELECT s.doc_id", 1
-    )[0]
-    + """,
+# discriminant).
+_ROCCHIO_GATE_HEAD = f"""{_ROCCHIO_CTES},
 rgkeep AS (SELECT doc_id FROM rgs WHERE logit > 0),
 gated AS (
   SELECT d.doc_id, d.text, d.source FROM documents d JOIN rgkeep USING (doc_id)
-),
-dedup AS ("""
-    + _CORPUS_BUILD_SOURCE_GATED_ORACLE.split("dedup AS (", 1)[1]
-)
+)"""
 
 
-@register("corpus_build_rocchio_gated", _CORPUS_BUILD_ROCCHIO_GATED_ORACLE)
+@register("corpus_build_rocchio_gated", _corpus_chain_sql(_ROCCHIO_GATE_HEAD))
 def corpus_build_rocchio_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 4-stage corpus build gated by a classifier TRAINED IN THE
     SAME PLAN — the CCNet / fineweb-edu deployment shape end-to-end
@@ -13697,7 +13276,6 @@ def corpus_build_rocchio_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.join(keep, "doc_id"),
         docs.filter(F.col("doc_id") % 97 == 0),
         num_shards=16,
-        decontam_n=3,
     )
 
 
@@ -13741,21 +13319,17 @@ def multimodal_audio_stream_replay(spark: SparkSession, sf_dir: str) -> DataFram
 # and the builds' keep-first dedup.
 # =========================================================================
 
-_CORPUS_BUILD_KEEPBEST_GATED_ORACLE = (
-    f"""WITH kb AS MATERIALIZED (
+_KEEPBEST_GATE_HEAD = f"""kb AS MATERIALIZED (
   SELECT doc_id, kept FROM ({_KEEP_BEST_ORACLE}) k
 ),
 gated AS (
   SELECT d.doc_id, d.text, d.source
   FROM documents d JOIN kb USING (doc_id)
   WHERE kb.kept
-),
-dedup AS ("""
-    + _CORPUS_BUILD_SOURCE_GATED_ORACLE.split("dedup AS (", 1)[1]
-)
+)"""
 
 
-@register("corpus_build_keepbest_gated", _CORPUS_BUILD_KEEPBEST_GATED_ORACLE)
+@register("corpus_build_keepbest_gated", _corpus_chain_sql(_KEEPBEST_GATE_HEAD))
 def corpus_build_keepbest_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 4-stage corpus build with quality-aware canonical selection
     composed in FRONT — the FineWeb deployment shape: near-dup
@@ -13769,7 +13343,7 @@ def corpus_build_keepbest_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
     crawled first; keep-best retains the cleanest copy).  The build
     tail's exact md5 dedup stays in the chain and is a no-op on the
     survivors (exact copies share a cluster, so only one survives the
-    gate) — kept so the source-gated oracle tail splices verbatim.
+    gate) — kept so this build runs the same stages as the others.
     Eval holdout stays the RAW corpus's ``doc_id % 97`` slice
     (curation never changes what you decontaminate against).
 
@@ -13803,7 +13377,6 @@ def corpus_build_keepbest_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
         gated,
         docs.filter(F.col("doc_id") % 97 == 0),
         num_shards=16,
-        decontam_n=3,
     )
 
 
